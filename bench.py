@@ -69,6 +69,49 @@ def materialize(df) -> None:
 WARMUP_LANES = ("scan_parquet", "join_inner", "agg_group")
 
 
+# Heavy-lane corridor (VERDICT r13 #2): the expensive iterative
+# lanes oscillated 3.2->4.4 s across r12/r13 on unchanged code
+# while the trivial corridor read clean — their wall time is
+# dominated by per-round fixed costs (checkpoint/scheduling jobs
+# on small frames), which track JVM/JIT warmth, not CPU load, so
+# the trivial-lane index cannot vouch for them. Their inflation is
+# reported against clean-host floors SEPARATELY in main() (kept out of
+# the ambient median on purpose: folding multi-second iterative
+# lanes into the trivial-lane index would let heavy-lane JVM noise
+# masquerade as host load and mask real regressions). Floors are
+# clean-host 32-core mins of the CURRENT code; each re-floor is
+# recorded here and the values are published in the sidecar
+# (heavy_corridor_floors) so the inflation series stays readable
+# across rounds (ADVICE r14). Corridor lanes also get the 5-run
+# protocol. Every key must name a ``bench=True`` lane (pinned by
+# tests/test_operators.py).
+HEAVY_CORRIDORS = {
+    # re-floored r15: the fused hash-min round (1 join/round) +
+    # the bounded driver solve of collapsed residuals took the
+    # clean min from ~3.2 to 1.59 (interleaved A/B) / 1.79
+    # (full-suite run); floor sits under both
+    "dedup_components": 1.55,
+    # re-floored r15: building the two independent method branches
+    # concurrently from driver threads overlaps their jobs and took
+    # the clean min from ~2.9 to 2.07 (A/B) / 2.23 (full-suite)
+    "dedup_fuzzy": 2.0,
+    # re-floored r15: closing runs read 0.94-1.0 after the r14
+    # loop-frame sizing settled; the r14 floor (1.05) sat above
+    # the clean min
+    "graph_sssp": 0.9,
+    # added r15 (VERDICT r14 #2): the lanes whose r14 driver
+    # readings diverged most between windows on unchanged code.
+    # dedup_ngram_jaccard's same-code window spread is 2.2-3.5 s
+    # (measured this round, plan identical); its floor is the
+    # interleaved-A/B clean min
+    # dedup_semantic re-floored after the r15 branch-overlap
+    # change (clean bench read 1.50)
+    "dedup_semantic": 1.45,
+    "dedup_passages": 1.4,
+    "dedup_ngram_jaccard": 2.1,
+}
+
+
 def canonical_order(names) -> list:
     """The pinned timing order: lexicographic by lane name,
     INDEPENDENT of registry (grading) order — rotations move lanes
@@ -153,46 +196,6 @@ def main() -> None:
     # honest — no run is ever faster than the real plan, see module
     # docstring on clearCache); the median rides along in ``spread``
     # so a wide min-med gap flags ambient noise (VERDICT r6 #3).
-    # Heavy-lane corridor (VERDICT r13 #2): the expensive iterative
-    # lanes oscillated 3.2->4.4 s across r12/r13 on unchanged code
-    # while the trivial corridor read clean — their wall time is
-    # dominated by per-round fixed costs (checkpoint/scheduling jobs
-    # on small frames), which track JVM/JIT warmth, not CPU load, so
-    # the trivial-lane index cannot vouch for them. Their inflation is
-    # reported against clean-host floors SEPARATELY below (kept out of
-    # the ambient median on purpose: folding multi-second iterative
-    # lanes into the trivial-lane index would let heavy-lane JVM noise
-    # masquerade as host load and mask real regressions). Floors are
-    # clean-host 32-core mins of the CURRENT code; each re-floor is
-    # recorded here and the values are published in the sidecar
-    # (heavy_corridor_floors) so the inflation series stays readable
-    # across rounds (ADVICE r14). Defined before the timing loop
-    # because corridor lanes also get the 5-run protocol.
-    heavy_corridors = {
-        # re-floored r15: the fused hash-min round (1 join/round) +
-        # the bounded driver solve of collapsed residuals took the
-        # clean min from ~3.2 to 1.59 (interleaved A/B) / 1.79
-        # (full-suite run); floor sits under both
-        "dedup_components": 1.55,
-        # re-floored r15: concurrent method-branch builds (guide
-        # §2.6) took the clean min from ~2.9 to 2.07 (A/B) / 2.23
-        # (full-suite)
-        "dedup_fuzzy": 2.0,
-        # re-floored r15: closing runs read 0.94-1.0 after the r14
-        # loop-frame sizing settled; the r14 floor (1.05) sat above
-        # the clean min
-        "graph_sssp": 0.9,
-        # added r15 (VERDICT r14 #2): the lanes whose r14 driver
-        # readings diverged most between windows on unchanged code.
-        # dedup_ngram_jaccard's same-code window spread is 2.2-3.5 s
-        # (measured this round, plan identical); its floor is the
-        # interleaved-A/B clean min
-        # dedup_semantic re-floored after the r15 branch-overlap
-        # change (clean bench read 1.50)
-        "dedup_semantic": 1.45,
-        "dedup_passages": 1.4,
-        "dedup_ngram_jaccard": 2.1,
-    }
 
     # Sub-second lanes AND the heavy-corridor lanes get FIVE timed
     # runs instead of three (VERDICT r14 #2): on this host min-of-3
@@ -210,7 +213,7 @@ def main() -> None:
         t0 = time.perf_counter()
         materialize(q.fn(spark, sf_dir))
         warm_sec = time.perf_counter() - t0
-        n_timed = 5 if (warm_sec < 1.0 or name in heavy_corridors) else 3
+        n_timed = 5 if (warm_sec < 1.0 or name in HEAVY_CORRIDORS) else 3
         runs: list[float] = []
         for _ in range(n_timed):
             spark.catalog.clearCache()
@@ -307,7 +310,7 @@ def main() -> None:
     )
     heavy_inflation = {
         n: round(timings[n] / floor_s, 2)
-        for n, floor_s in heavy_corridors.items()
+        for n, floor_s in HEAVY_CORRIDORS.items()
         if n in timings
     }
     # The spread dict goes to a sidecar file, NOT the stdout JSON line:
@@ -332,7 +335,7 @@ def main() -> None:
                 # re-floor redefines the inflation series; publishing
                 # the per-round floor values keeps BENCH_*.json
                 # comparable across rounds without archaeology)
-                "heavy_corridor_floors": heavy_corridors,
+                "heavy_corridor_floors": HEAVY_CORRIDORS,
                 # end-to-end build cost of each persisted derived-table
                 # artifact, rebuilt fresh at suite start (VERDICT r14
                 # #2/#5) — lane times are query-only by construction

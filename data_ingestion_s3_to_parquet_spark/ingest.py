@@ -38,7 +38,7 @@ from pyspark.sql.types import DoubleType, LongType, StringType, StructField, Str
 from .session import tune
 from .sources.s3 import fetch_s3
 from .sources.sinks import write_parquet
-from .sources.zipsource import extract_zip
+from .sources.zipsource import extract_zip, is_csv_entry, parse_csv_header
 
 logger = logging.getLogger(__name__)
 
@@ -176,7 +176,7 @@ def csv_header_columns(spark: SparkSession, csv_path: str) -> list[str]:
     first = spark.read.text(csv_path).first()
     if first is None:
         return []
-    return [c.strip().strip('"') for c in first.value.split(",")]
+    return parse_csv_header(first.value)
 
 
 def project_selected(df: DataFrame) -> DataFrame:
@@ -238,7 +238,7 @@ def run_pipeline(
         object_key = object_key or os.environ["OBJECT"]
         fetch_s3(bucket, object_key, destination)
     extracted = extract_zip(destination, unzip_dir)
-    csvs = [p for p in extracted if p.lower().endswith(".csv")]
+    csvs = [p for p in extracted if is_csv_entry(os.path.relpath(p, unzip_dir))]
     if not csvs:
         raise FileNotFoundError(f"no CSV entries found in {destination}")
     return ingest_csv(spark, csvs[0], out_path)

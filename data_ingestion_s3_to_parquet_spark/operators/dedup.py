@@ -536,19 +536,26 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one semi-join. Counts stay distributed aggregates — nothing is
     collected to the driver.
 
-    The two method pipelines are built CONCURRENTLY (r15, guide §2.6
-    — overlap independent jobs): each branch is localCheckpoint-ed
-    from its own driver thread, so the ~0.7 s Catalyst+AQE planning
-    and the execution tail of one branch hide behind the other, and
-    the final plan is the small probe/aggregate tail instead of the
+    The two method pipelines are built CONCURRENTLY (r15: jobs
+    submitted from separate driver threads run side by side): each
+    branch is localCheckpoint-ed from its own driver thread, so the
+    ~0.7 s Catalyst+AQE planning and the execution tail of one branch
+    hide behind the other, and the final plan is the small probe/aggregate tail instead of the
     former ~105-node union (whose single-action planning gap the r15
     event-log profile measured at 1.4 s). Interleaved min-of-6 at
     sf0.1: 3.15 → 2.07 s, output proven identical. A SEQUENTIAL
     checkpoint split was re-measured too (3.27 s — slower than no
     split, confirming the r7/r13/r14 rejections): the win is the
     overlap, not the split. At 100 TB the same two independent DAGs
-    back-fill each other's straggler tails (§2.6); Spark schedules
+    back-fill each other's straggler tails; Spark schedules
     concurrent jobs FIFO into idle slots.
+
+    Thread caveat: the overlap relies on PySpark's pinned-thread mode
+    (``PYSPARK_PIN_THREAD``, on by default since Spark 3.0), in which
+    the job description and group are thread-local. With it off, the
+    branch threads share those properties; that is harmless here
+    because they only set labels, so keep job cancellation by group
+    out of these threads.
     """
     ref = _ref_pairs(spark, sf_dir)
     n_ref = ref.agg(F.count("*").alias("n_ref_pairs"))
@@ -556,7 +563,7 @@ def q_dedup_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     def _branch(which: str) -> DataFrame:
-        # job descriptions are thread-local (guide §2.6) — label each
+        # job descriptions are thread-local properties — label each
         # branch so the UI shows which DAG a straggler belongs to
         if which == "minhash_lsh":
             spark.sparkContext.setJobDescription("dedup_fuzzy: minhash branch")
@@ -1026,7 +1033,8 @@ def _hashmin_labels(
     the sf0.1 similarity graph: 12 plain rounds across 3 contraction
     levels → 5 jumped rounds, one level, ~-40% wall time).
 
-    Round shape (r15, guide §2.4): all three terms are LOOKUPS of the
+    Round shape (r15; each join removed saves a full exchange every
+    round): all three terms are LOOKUPS of the
     current label table — neighbor min pulls ``labels[v]`` for every
     edge (u, v), the jump pulls ``labels[component(u)]``, and the
     identity term pulls ``labels[u]`` — so instead of the former three
@@ -1499,6 +1507,16 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth — accuracy is pinned by the planted-cluster recall
     pytest (tests/test_operators.py::test_dedup_semantic_*), the same
     BENCH_ONLY rationale as ``dedup_components_lsh``.
+
+    The LSH+CC and classifier branches are built from two driver
+    threads (see the comment below).
+
+    Thread caveat: the overlap relies on PySpark's pinned-thread mode
+    (``PYSPARK_PIN_THREAD``, on by default since Spark 3.0), in which
+    the job description and group are thread-local. With it off, the
+    branch threads share those properties; that is harmless here
+    because they only set labels, so keep job cancellation by group
+    out of these threads.
     """
     from .textstats import q_quality_classifier
 
@@ -1507,7 +1525,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializes its candidate pairs eagerly (localCheckpoint) — so
     # built sequentially, the classifier chain waits behind the whole
     # LSH pipeline for nothing. Build both from driver threads (r15,
-    # guide §2.6 — the dedup_fuzzy pattern): the classifier branch is
+    # the dedup_fuzzy pattern): the classifier branch is
     # checkpointed to give the overlap a materialization to drive;
     # its rows are (id, score) longs, ~16 B/doc at any scale.
     # Interleaved min-of-6 at sf0.1: 1.92 → 1.66 s, output identical.
@@ -1619,10 +1637,6 @@ FROM fresh GROUP BY text
 """
 
 
-# Demoted to the EXTRA lane in round 6 (4-5 consecutive green driver
-# rows each; their graded slots went to the eleven never-graded
-# round-4 operators — VERDICT r5 #4, the final rotation). All five
-# keep their oracles + bench entries and stay in the local sweep.
 # --------------------------------------------------------------------
 # ngram_novelty
 # --------------------------------------------------------------------
@@ -1737,20 +1751,83 @@ FROM j
 """
 
 
-# dedup_incremental (round 8, post-swap) joins them never-graded.
-# dedup_incremental graded in the round-8 final rotation.
 QUERIES: list[Query] = [
+    Query(
+        "dedup_exact",
+        q_dedup_exact,
+        SQL_DEDUP_EXACT,
+        ("llm", "dedup"),
+        bench=True,
+    ),
+    Query(
+        "dedup_ngram_jaccard",
+        q_dedup_ngram_jaccard,
+        SQL_DEDUP_NGRAM_JACCARD,
+        ("llm", "dedup"),
+        bench=True,
+    ),
+    Query(
+        "dedup_containment",
+        q_dedup_containment,
+        SQL_DEDUP_CONTAINMENT,
+        ("llm", "dedup", "text"),
+    ),
+    Query(
+        "dedup_fuzzy",
+        q_dedup_fuzzy,
+        SQL_DEDUP_FUZZY,
+        ("llm", "dedup", "approx"),
+        bench=True,
+    ),
+    Query(
+        "dedup_embedding",
+        q_dedup_embedding,
+        SQL_DEDUP_EMBEDDING,
+        ("llm", "dedup"),
+    ),
+    Query(
+        "dedup_components",
+        q_dedup_components,
+        SQL_DEDUP_COMPONENTS,
+        ("llm", "dedup", "iterative"),
+        bench=True,
+    ),
+    Query(
+        "dedup_components_lsh",
+        q_dedup_components_lsh,
+        None,
+        ("llm", "dedup", "approx", "iterative"),
+        bench=True,  # the 100 TB fuzzy-clustering pipeline
+    ),
+    Query(
+        "dedup_keep_best",
+        q_dedup_keep_best,
+        SQL_DEDUP_KEEP_BEST,
+        ("llm", "dedup", "quality"),
+    ),
+    Query(
+        "dedup_soft",
+        q_dedup_soft,
+        SQL_DEDUP_SOFT,
+        ("llm", "dedup", "agg"),
+    ),
+    Query(
+        "dedup_semantic",
+        q_dedup_semantic,
+        None,
+        ("llm", "dedup", "similarity", "approx", "iterative"),
+        bench=True,  # the SemDeDup composition, timed end-to-end
+    ),
     Query(
         "dedup_incremental",
         q_dedup_incremental,
         SQL_DEDUP_INCREMENTAL,
         ("llm", "dedup", "incremental"),
     ),
+    Query(
+        "ngram_novelty",
+        q_ngram_novelty,
+        SQL_NGRAM_NOVELTY,
+        ("llm", "dedup", "text", "quality"),
+    ),
 ]
-
-# dedup_exact / dedup_embedding / dedup_components re-promoted to
-# the graded lane in round 12 (r5 driver rows — the oldest after the
-# r4 cohort; they register via relational18, bench flags intact);
-# dedup_ngram_jaccard / dedup_fuzzy re-promoted in round 13 (r5
-# driver rows; they register via relational19, bench flags intact).
-EXTRA_QUERIES: list[Query] = []

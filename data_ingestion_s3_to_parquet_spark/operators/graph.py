@@ -124,9 +124,10 @@ def pagerank_edges(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     teleport = _r((100 - PAGERANK_DAMPING_NUM) * PAGERANK_SCALE, 100 * n)
 
     # out-degree attached to the edge table ONCE, outside the loop
-    # (r14, guide §2.4): outdeg is a pure function of the edges, so the
-    # former per-iteration ranks⋈deg lookup was one data-sized join and
-    # one deg recomputation per round, every round. A source with no
+    # (r14, one join per run instead of one per round): outdeg is a
+    # pure function of the edges, so the former per-iteration
+    # ranks⋈deg lookup was one data-sized join and one deg
+    # recomputation per round, every round. A source with no
     # out-edges never matches the contribution join in either form, so
     # the inner attach is exactly equivalent (output proven identical;
     # measured 2.08 s → 1.68 s min-of-5 at sf0.1). The checkpoint
@@ -143,9 +144,9 @@ def pagerank_edges(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     )
 
     # The per-iteration "nodes ⟕ contrib" lookup is folded into the
-    # mass aggregate (r15, guide §2.4): a zero-contribution row per
-    # node rides the contribution union, so SUM over the group equals
-    # coalesce(mass, 0) exactly (integer sum, bit-exact — output
+    # mass aggregate (r15, one exchange fewer per iteration): a
+    # zero-contribution row per node rides the contribution union, so
+    # SUM over the group equals coalesce(mass, 0) exactly (integer sum, bit-exact — output
     # proven identical at sf0.1) and every node appears exactly once —
     # which deletes one node-table-sized join (and its exchange) from
     # EVERY iteration: 5 fewer rank-sized joins per run at scale.
@@ -1240,9 +1241,6 @@ FROM g, m, lg
 """
 
 
-# The whole graph family is multi-green: link_predict /
-# kcore_decompose (graded r7–r9) and graph_sssp (graded r8–r9)
-# demoted in the round-10 sixth-wave rotation for dedup_cluster_stats
 # --------------------------------------------------------------------
 # graph_community_profile
 # --------------------------------------------------------------------
@@ -1466,13 +1464,26 @@ def _sql_graph_community_profile() -> str:
 SQL_GRAPH_COMMUNITY_PROFILE = _sql_graph_community_profile()
 
 
-# / corr_spearman / trend_linfit (relational15); pagerank (green
-# r5+r6) and label_propagation (green r5+r6) were demoted in earlier
-# rounds. All five keep their oracles (full sweep coverage) and
-# kcore / sssp / pagerank keep their bench flags.
-QUERIES: list[Query] = []
-
-EXTRA_QUERIES: list[Query] = [
+QUERIES: list[Query] = [
+    Query(
+        "pagerank",
+        q_pagerank,
+        SQL_PAGERANK,
+        ("llm", "graph", "iterative"),
+        bench=True,  # the iterative int64 kernel, timed end-to-end
+    ),
+    Query(
+        "label_propagation",
+        q_label_propagation,
+        SQL_LABEL_PROPAGATION,
+        ("llm", "graph", "iterative"),
+    ),
+    Query(
+        "graph_triangles",
+        q_graph_triangles,
+        SQL_GRAPH_TRIANGLES,
+        ("llm", "graph", "join"),
+    ),
     Query(
         "link_predict",
         q_link_predict,
@@ -1484,7 +1495,7 @@ EXTRA_QUERIES: list[Query] = [
         q_kcore_decompose,
         SQL_KCORE_DECOMPOSE,
         ("llm", "graph", "iterative"),
-        bench=True,  # the new peel loop, timed end-to-end
+        bench=True,  # the peel loop, timed end-to-end
     ),
     Query(
         "graph_sssp",
@@ -1494,12 +1505,27 @@ EXTRA_QUERIES: list[Query] = [
         bench=True,  # the frontier BFS loop, timed end-to-end
     ),
     Query(
-        "pagerank",
-        q_pagerank,
-        SQL_PAGERANK,
-        ("llm", "graph", "iterative"),
-        bench=True,  # the iterative int64 kernel, timed end-to-end
+        "graph_assortativity",
+        q_graph_assortativity,
+        SQL_GRAPH_ASSORTATIVITY,
+        ("llm", "graph", "statistics", "quality"),
     ),
-    # label_propagation re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
+    Query(
+        "graph_modularity",
+        q_graph_modularity,
+        SQL_GRAPH_MODULARITY,
+        ("llm", "graph", "dedup", "evaluation"),
+    ),
+    Query(
+        "graph_clustering_coeff",
+        q_graph_clustering_coeff,
+        SQL_GRAPH_CLUSTERING_COEFF,
+        ("llm", "graph", "evaluation"),
+    ),
+    Query(
+        "graph_community_profile",
+        q_graph_community_profile,
+        SQL_GRAPH_COMMUNITY_PROFILE,
+        ("llm", "graph", "dedup", "evaluation"),
+    ),
 ]

@@ -781,24 +781,6 @@ FROM f
 """
 
 
-QUERIES: list[Query] = []
-
-# Rotated to the EXTRA lane: media_frame_sample in round 4 (green
-# driver row in r3 — VERDICT r3 #1); udf_scalar in round 7 after five
-# consecutive green driver rows (VERDICT r6 #1: its graded slot went
-# to a never-graded round-6 operator); multimodal_cols /
-# array_map_json in the round-7 wave-2 rotation (green rows incl.
-# r6). All keep oracles + bench entries.
-EXTRA_QUERIES = [
-    Query("multimodal_cols", q_multimodal_cols, SQL_MULTIMODAL_COLS, ("llm", "multimodal")),
-    Query("udf_scalar", q_udf_scalar, SQL_UDF_SCALAR, ("relational", "udf"), bench=True),
-    # media_frame_sample re-promoted to the graded lane in round 11
-    # (r3 driver row — the registry's oldest; registers via
-    # relational17); array_map_json re-promoted in round 13 (r6
-    # driver row; registers via relational19)
-]
-
-
 FRAME_SAMPLE_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -1446,8 +1428,8 @@ def q_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.1 s of a 1.6 s lane wall at sf0.1, r14 stage profile). The
     # round-robin shuffle of bare doc_ids is noise next to 32× decode
     # parallelism; at real scale the media table has many splits and
-    # spread() is a no-op (guide §4: distribution is Spark's job, the
-    # batch work is the UDF's).
+    # spread() is a no-op (distribution is Spark's job, the per-batch
+    # work is the UDF's).
     d = spread(load_table(spark, sf_dir, "documents").select("doc_id"))
 
     def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1505,6 +1487,26 @@ def q_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("hamming") <= PHASH_HAMMING_T)
         .select("canon_a", "canon_b", "hamming", "n_a", "n_b")
     )
+
+
+QUERIES: list[Query] = [
+    Query("multimodal_cols", q_multimodal_cols, SQL_MULTIMODAL_COLS, ("llm", "multimodal")),
+    Query("array_map_json", q_array_map_json, SQL_ARRAY_MAP_JSON, ("relational", "json")),
+    Query("udf_scalar", q_udf_scalar, SQL_UDF_SCALAR, ("relational", "udf"), bench=True),
+    Query(
+        "media_frame_sample",
+        q_media_frame_sample,
+        SQL_MEDIA_FRAME_SAMPLE,
+        ("llm", "multimodal"),
+    ),
+    Query(
+        "media_phash",
+        q_media_phash,
+        None,
+        ("llm", "multimodal", "dedup", "approx"),
+        bench=True,  # image perceptual-hash dedup
+    ),
+]
 
 
 EXIF_SCHEMA = StructType(

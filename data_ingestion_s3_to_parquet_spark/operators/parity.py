@@ -125,7 +125,7 @@ WHERE l_orderkey % {_ROW_FILTER_MOD} = 0
 """
 
 
-QUERIES = [
+QUERIES: list[Query] = [
     Query(
         "ingest_parity",
         q_ingest_parity,

@@ -127,7 +127,8 @@ def q_orc_interop(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition pass + exchange of every projected row costs more
     # than the extra encode parallelism returns. At real scale the scan
     # has many splits and per-task output files land in the 128 MB–1 GB
-    # band via the input split size (guide §6).
+    # band via the input split size, so no write-side repartition is
+    # needed to size them.
     li = load_table(spark, sf_dir, "lineitem").select(*ORC_COLS)
     out = _orc_path(sf_dir)
     li.write.mode("overwrite").orc(out)
@@ -479,7 +480,7 @@ GROUP BY 1
 
 
 # --------------------------------------------------------------------
-# jsonl_interop (EXTRA lane)
+# jsonl_interop
 # --------------------------------------------------------------------
 
 # Plain exchange types only: ints and a short string. Monetary values
@@ -555,7 +556,7 @@ GROUP BY o_orderstatus
 
 
 # --------------------------------------------------------------------
-# lm_bigram_score (EXTRA lane)
+# lm_bigram_score
 # --------------------------------------------------------------------
 
 LM_BIGRAM_VOCAB = 1024
@@ -668,7 +669,7 @@ FROM agg
 
 
 # --------------------------------------------------------------------
-# eval_auc (EXTRA lane)
+# eval_auc
 # --------------------------------------------------------------------
 
 AUC_POS_LANG = "en"
@@ -776,43 +777,19 @@ SELECT n_pos, n_neg, u2, {_AUC_MICRO_EXPR} AS auc_micro FROM agg
 """
 
 
-# --------------------------------------------------------------------
-# Registration: round-8 second wave, never-graded-first (this module
-# sits ahead of relational10 in the registry order). chunk_text /
-# basket_pairs / period_growth / ab_test_metrics (all green r6+r7)
-# demoted to relational9's EXTRA lane one-for-one. jsonl_interop
-# arrived after the wave's swap with no multi-green veteran left to
-# demote, so it LEADS the EXTRA lane per the documented convention
-# (new entries grade first under a larger budget or the next swap).
-# --------------------------------------------------------------------
-
-# eval_auc (multi-green r8-r11) demoted in the round-12 SEVENTH wave
-# for the new bootstrap_ci_mean (relational18); it leads this
-# module's EXTRA lane.
-QUERIES = []
-
-# Round-10 third wave demoted the double-green r8+r9 orc_interop /
-# acf_lags / ccnet_buckets here, trading their graded slots for the
-# new bpe_fertility / compaction_plan / privacy_ldiv (relational14);
-# all keep their oracles, bench flags, and local-sweep coverage.
-EXTRA_QUERIES: list[Query] = [
+QUERIES: list[Query] = [
     Query(
-        "eval_auc",
-        q_eval_auc,
-        _sql_eval_auc(),
-        ("llm", "evaluation", "statistics"),
-    ),
-    Query(
-        "lm_bigram_score",
-        q_lm_bigram_score,
-        SQL_LM_BIGRAM_SCORE,
-        ("llm", "text", "quality"),
-    ),
-    Query(
-        "jsonl_interop",
-        q_jsonl_interop,
-        SQL_JSONL_INTEROP,
+        "orc_interop",
+        q_orc_interop,
+        SQL_ORC_INTEROP,
         ("relational", "etl", "format", "sink"),
+        bench=True,  # the second real-sink I/O lane next to parquet ETL
+    ),
+    Query(
+        "acf_lags",
+        q_acf_lags,
+        SQL_ACF_LAGS,
+        ("relational", "timeseries", "statistics"),
     ),
     Query(
         "ccnet_buckets",
@@ -827,16 +804,21 @@ EXTRA_QUERIES: list[Query] = [
         ("relational", "layout", "data-skipping"),
     ),
     Query(
-        "orc_interop",
-        q_orc_interop,
-        SQL_ORC_INTEROP,
+        "jsonl_interop",
+        q_jsonl_interop,
+        SQL_JSONL_INTEROP,
         ("relational", "etl", "format", "sink"),
-        bench=True,  # the second real-sink I/O lane next to parquet ETL
     ),
     Query(
-        "acf_lags",
-        q_acf_lags,
-        SQL_ACF_LAGS,
-        ("relational", "timeseries", "statistics"),
+        "lm_bigram_score",
+        q_lm_bigram_score,
+        SQL_LM_BIGRAM_SCORE,
+        ("llm", "text", "quality"),
+    ),
+    Query(
+        "eval_auc",
+        q_eval_auc,
+        _sql_eval_auc(),
+        ("llm", "evaluation", "statistics"),
     ),
 ]

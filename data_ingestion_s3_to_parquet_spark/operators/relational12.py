@@ -834,8 +834,9 @@ def _mmr_pairs(
     keeps the whole BM25 scoring subtree out of this plan: before r14
     the pairs branch re-derived the pool from ``_bm25_scored``, so one
     ``mmr_rerank`` run executed the corpus-wide scoring chain twice and
-    re-planned its ~40-node subtree per collect (guide §2.4 / §5 —
-    measured min-of-5 at sf0.1: 2.41 s → 2.00 s, output identical)."""
+    re-planned its ~40-node subtree per collect (a scoring chain run
+    once and a plan analysed once — measured min-of-5 at sf0.1:
+    2.41 s → 2.00 s, output identical)."""
     ids_df = spark.createDataFrame(
         [(int(d),) for d in sorted(pool_ids)], "doc_id long"
     )
@@ -1535,47 +1536,43 @@ FROM (
     return " UNION ALL ".join(blocks)
 
 
-# --------------------------------------------------------------------
-# Registration: EXTRA lane, never-graded-first (this module precedes
-# relational11 in the registry order, so these lead the EXTRA lane
-# ahead of jsonl_interop / lm_bigram_score / eval_auc — a larger
-# grading budget or the round-9 swap grades them first).
-# --------------------------------------------------------------------
-
-# Round-8 final rotation: the whole third wave moved into the graded
-# lane (never-graded-first) — twelve single-green round-7 veterans
-# demoted one-for-one (see relational7). Round 9 completes the
-# invariant: the four post-rotation lanes (ts_interpolate /
-# privacy_erase / feature_vector / skew_report — local-oracle-only
-# until now) lead the graded lane, and the double-green r7+r8 quartet
-# doc_winnow / inverted_index / changepoint_cusum / winnow_overlap
-# demotes one-for-one (see relational10). Every oracle-gated operator
-# either has a prior green driver row or is graded now.
-# mmr_rerank (multi-green r8-r11) demoted in the round-12 SIXTH wave
-# for the new text_mattr (relational18); it leads this module's
-# EXTRA lane, bench flag intact.
-QUERIES: list[Query] = []
-
-# Round 9 promoted the post-rotation quartet (ts_interpolate /
-# privacy_erase / feature_vector / skew_report) and graded it green;
-# the round-10 grade-freshness rotation (VERDICT r9 #1) demoted that
-# quartet plus the double-green r8+r9 evaluation trio (eval_ndcg /
-# eval_calibration / eval_pr_curve) here — seven slots traded for the
-# round-3 relational-core veterans and the three new round-10
-# operators (relational14).
-EXTRA_QUERIES: list[Query] = [
+QUERIES: list[Query] = [
     Query(
-        "mmr_rerank",
-        q_mmr_rerank,
-        _sql_mmr_rerank(),
-        ("llm", "retrieval", "similarity", "iterative"),
-        bench=True,  # scoring + pairwise-overlap build + bounded greedy
+        "eval_ndcg",
+        q_eval_ndcg,
+        _sql_eval_ndcg(),
+        ("llm", "evaluation", "retrieval", "statistics"),
+    ),
+    Query(
+        "eval_calibration",
+        q_eval_calibration,
+        _sql_eval_calibration(),
+        ("llm", "evaluation", "statistics"),
+    ),
+    Query(
+        "eval_brier",
+        q_eval_brier,
+        SQL_EVAL_BRIER,
+        ("llm", "evaluation", "statistics", "quality"),
+    ),
+    Query(
+        "eval_pr_curve",
+        q_eval_pr_curve,
+        _sql_eval_pr_curve(),
+        ("llm", "evaluation", "statistics"),
     ),
     Query(
         "drift_psi",
         q_drift_psi,
         SQL_DRIFT_PSI,
         ("relational", "quality", "monitoring", "statistics"),
+    ),
+    Query(
+        "mmr_rerank",
+        q_mmr_rerank,
+        _sql_mmr_rerank(),
+        ("llm", "retrieval", "similarity", "iterative"),
+        bench=True,  # scoring + pairwise-overlap build + bounded greedy
     ),
     Query(
         "join_asof_nearest",
@@ -1606,23 +1603,5 @@ EXTRA_QUERIES: list[Query] = [
         q_skew_report,
         _sql_skew_report(),
         ("relational", "profiling", "skew", "monitoring"),
-    ),
-    Query(
-        "eval_ndcg",
-        q_eval_ndcg,
-        _sql_eval_ndcg(),
-        ("llm", "evaluation", "retrieval", "statistics"),
-    ),
-    Query(
-        "eval_calibration",
-        q_eval_calibration,
-        _sql_eval_calibration(),
-        ("llm", "evaluation", "statistics"),
-    ),
-    Query(
-        "eval_pr_curve",
-        q_eval_pr_curve,
-        _sql_eval_pr_curve(),
-        ("llm", "evaluation", "statistics"),
     ),
 ]

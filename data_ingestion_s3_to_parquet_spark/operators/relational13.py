@@ -1016,20 +1016,7 @@ FROM (
     return " UNION ALL ".join(blocks)
 
 
-# --------------------------------------------------------------------
-# Registration. Round 9 graded all eight operators green (driver rows
-# in CORRECTNESS_r09); the round-10 grade-freshness rotation (VERDICT
-# r9 #1) moved them to the EXTRA lane one-for-one for the round-3
-# relational-core veterans (scan_parquet, project_filter,
-# filter_compound, agg_rollup_cube, join_outer, join_semi_anti,
-# sort_limit_topk, set_ops, scalar_funcs, window_rank, agg_distinct,
-# regexp_funcs) whose driver rows were the registry's oldest — the
-# §2B backbone re-verified against current Spark/DuckDB.
-# --------------------------------------------------------------------
-
-QUERIES: list[Query] = []
-
-EXTRA_QUERIES: list[Query] = [
+QUERIES: list[Query] = [
     Query(
         "drift_ks",
         q_drift_ks,
@@ -1057,6 +1044,12 @@ EXTRA_QUERIES: list[Query] = [
         bench=True,  # distributed selection + sketch lane, timed
     ),
     Query(
+        "reconcile_sources",
+        q_reconcile_sources,
+        SQL_RECONCILE_SOURCES,
+        ("relational", "quality", "join", "monitoring"),
+    ),
+    Query(
         "rolling_median",
         q_rolling_median,
         SQL_ROLLING_MEDIAN,
@@ -1072,12 +1065,6 @@ EXTRA_QUERIES: list[Query] = [
         "ref_integrity_audit",
         q_ref_integrity_audit,
         _sql_ref_integrity_audit(),
-        ("relational", "quality", "join", "monitoring"),
-    ),
-    Query(
-        "reconcile_sources",
-        q_reconcile_sources,
-        SQL_RECONCILE_SOURCES,
         ("relational", "quality", "join", "monitoring"),
     ),
 ]

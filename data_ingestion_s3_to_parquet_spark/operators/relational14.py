@@ -1772,19 +1772,6 @@ FROM agg
 """
 
 
-# --------------------------------------------------------------------
-# Registration: graded lane, never-graded-first (this module precedes
-# relational13 in the registry order, so the round-10 operators grade
-# immediately at the head). Demotions for the round-10 rotation are
-# recorded at the demoting modules (relational11/12/13).
-# --------------------------------------------------------------------
-
-# eval_mrr STAYS graded through the round-11 rotation: round 11
-# extends its output contract with the recall@{1,5,20} ladder
-# (VERDICT r10 #4), so its r10 row no longer describes the shipped
-# schema and a fresh row is required. The other nine round-10
-# first-timers below demote to the EXTRA lane one-for-one for the
-# relational17 promotions.
 QUERIES: list[Query] = [
     Query(
         "eval_mrr",
@@ -1792,9 +1779,15 @@ QUERIES: list[Query] = [
         _sql_eval_mrr(),
         ("llm", "text", "evaluation", "ranking"),
     ),
-]
-
-EXTRA_QUERIES: list[Query] = [
+    # eval_mrr_scale shares eval_mrr's oracle: the pinned
+    # test_eval_mrr_scale_matches_window_formulation holds the two
+    # formulations row-identical.
+    Query(
+        "eval_mrr_scale",
+        q_eval_mrr_scale,
+        _sql_eval_mrr(),
+        ("llm", "text", "evaluation", "ranking", "approx-free"),
+    ),
     Query(
         "rolling_quantile",
         q_rolling_quantile,
@@ -1818,6 +1811,24 @@ EXTRA_QUERIES: list[Query] = [
         q_alert_rate_spike,
         SQL_ALERT_RATE_SPIKE,
         ("relational", "timeseries", "monitoring", "window"),
+    ),
+    Query(
+        "event_burstiness",
+        q_event_burstiness,
+        SQL_EVENT_BURSTINESS,
+        ("relational", "timeseries", "monitoring", "statistics"),
+    ),
+    Query(
+        "event_interarrival",
+        q_event_interarrival,
+        SQL_EVENT_INTERARRIVAL,
+        ("relational", "timeseries", "monitoring", "statistics"),
+    ),
+    Query(
+        "event_interarrival_scale",
+        q_event_interarrival_scale,
+        SQL_EVENT_INTERARRIVAL,
+        ("relational", "timeseries", "monitoring", "statistics"),
     ),
     Query(
         "bpe_fertility",
@@ -1844,17 +1855,3 @@ EXTRA_QUERIES: list[Query] = [
         ("llm", "evaluation", "statistics", "timeseries"),
     ),
 ]
-
-EXTRA_QUERIES.append(
-    # eval_mrr_scale shares eval_mrr's oracle (identical output
-    # contract — including the round-11 recall ladder; the pinned
-    # pytest test_eval_mrr_scale_matches_window_formulation holds the
-    # two formulations row-identical). Graded green in r10; demoted
-    # with the other round-10 first-timers.
-    Query(
-        "eval_mrr_scale",
-        q_eval_mrr_scale,
-        _sql_eval_mrr(),
-        ("llm", "text", "evaluation", "ranking", "approx-free"),
-    )
-)

@@ -1445,9 +1445,6 @@ FROM {prev}
 SQL_SURVIVAL_LOGRANK = _sql_survival_logrank()
 
 
-# All five graded green in round 10 (single-green first-timers);
-# demoted one-for-one in the round-11 grade-freshness rotation for
-# the r3/r4-cohort promotions registered in relational17.
 # --------------------------------------------------------------------
 # metric_winsorized
 # --------------------------------------------------------------------
@@ -1849,9 +1846,7 @@ FROM ci JOIN p2 ON ci.status = p2.status
 SQL_BOOTSTRAP_CI_WINSORIZED = _sql_bootstrap_ci_winsorized()
 
 
-QUERIES: list[Query] = []
-
-EXTRA_QUERIES: list[Query] = [
+QUERIES: list[Query] = [
     Query(
         "dedup_cluster_stats",
         q_dedup_cluster_stats,
@@ -1881,5 +1876,35 @@ EXTRA_QUERIES: list[Query] = [
         q_rank_mannwhitney,
         SQL_RANK_MANNWHITNEY,
         ("relational", "statistics", "evaluation"),
+    ),
+    Query(
+        "rank_test_u",
+        q_rank_test_u,
+        SQL_RANK_TEST_U,
+        ("relational", "statistics", "evaluation", "sampling"),
+    ),
+    Query(
+        "survival_km",
+        q_survival_km,
+        SQL_SURVIVAL_KM,
+        ("relational", "statistics", "timeseries", "evaluation"),
+    ),
+    Query(
+        "survival_logrank",
+        q_survival_logrank,
+        SQL_SURVIVAL_LOGRANK,
+        ("relational", "statistics", "timeseries", "evaluation"),
+    ),
+    Query(
+        "metric_winsorized",
+        q_metric_winsorized,
+        SQL_METRIC_WINSORIZED,
+        ("relational", "statistics", "agg", "quality"),
+    ),
+    Query(
+        "bootstrap_ci_winsorized",
+        q_bootstrap_ci_winsorized,
+        SQL_BOOTSTRAP_CI_WINSORIZED,
+        ("relational", "statistics", "sampling", "quality"),
     ),
 ]

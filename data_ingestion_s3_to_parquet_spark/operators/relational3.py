@@ -151,17 +151,29 @@ FROM events
 """
 
 
-QUERIES: list[Query] = []
-
-# Rotation history: datetime_funcs moved to the EXTRA lane in round 4
-# (green driver row in r3); agg_argminmax + udaf_grouped in round 5
-# after four consecutive green driver rows each (VERDICT r4 #1);
-# map_in_pandas_tokens in round 6 after five straight green rows
-# (VERDICT r5 #4 — the final rotation). datetime_funcs re-promoted to
-# the graded lane in round 11 (oldest driver row in the registry, r3
-# — it registers via relational17).
-# agg_argminmax / udaf_grouped re-promoted to the graded lane in
-# round 12 (r4 driver rows; they register via relational18);
-# map_in_pandas_tokens re-promoted in round 13 (r5 driver row; it
-# registers via relational19).
-EXTRA_QUERIES: list[Query] = []
+QUERIES: list[Query] = [
+    Query(
+        "agg_argminmax",
+        q_agg_argminmax,
+        SQL_AGG_ARGMINMAX,
+        ("relational", "agg"),
+    ),
+    Query(
+        "udaf_grouped",
+        q_udaf_grouped,
+        SQL_UDAF_GROUPED,
+        ("relational", "udf"),
+    ),
+    Query(
+        "map_in_pandas_tokens",
+        q_map_in_pandas_tokens,
+        SQL_MAP_IN_PANDAS_TOKENS,
+        ("llm", "udf"),
+    ),
+    Query(
+        "datetime_funcs",
+        q_datetime_funcs,
+        SQL_DATETIME_FUNCS,
+        ("relational",),
+    ),
+]

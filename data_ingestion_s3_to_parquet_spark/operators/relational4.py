@@ -66,11 +66,11 @@ FROM embeddings
 """
 
 
-# Demoted to the EXTRA lane in the round-7 wave-2 rotation (green
-# rows incl. r6) in exchange for a never-graded round-7 promotee.
-QUERIES: list[Query] = []
-
-EXTRA_QUERIES = [
-    # higher_order_funcs re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
+QUERIES: list[Query] = [
+    Query(
+        "higher_order_funcs",
+        q_higher_order_funcs,
+        SQL_HIGHER_ORDER_FUNCS,
+        ("relational", "array"),
+    ),
 ]

@@ -85,18 +85,6 @@ FROM typed t JOIN counts c ON t.et IS NOT DISTINCT FROM c.et
 """
 
 
-# regexp_funcs re-promoted in the round-10 grade-freshness rotation
-# (VERDICT r9 #1): its last driver row was round 3's.
-QUERIES: list[Query] = [
-    Query(
-        "regexp_funcs",
-        q_regexp_funcs,
-        SQL_REGEXP_FUNCS,
-        ("relational", "text"),
-    ),
-]
-
-
 def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension (type 2) history build from an event
     log: per user, order value observations by event time, collapse
@@ -154,12 +142,18 @@ WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
 
 
-# Rotation history: regexp_funcs moved out in round 3 (two green
-# driver rows — VERDICT r2 #1); join_null_safe in round 5 after four
-# consecutive green driver rows (VERDICT r4 #1); scd2_history in the
-# round-7 wave-2 rotation (green rows incl. r6).
-# join_null_safe re-promoted to the graded lane in round 12 (r4
-# driver row; registers via relational18).
-EXTRA_QUERIES = [
+QUERIES: list[Query] = [
+    Query(
+        "regexp_funcs",
+        q_regexp_funcs,
+        SQL_REGEXP_FUNCS,
+        ("relational", "text"),
+    ),
+    Query(
+        "join_null_safe",
+        q_join_null_safe,
+        SQL_JOIN_NULL_SAFE,
+        ("relational", "join"),
+    ),
     Query("scd2_history", q_scd2_history, SQL_SCD2_HISTORY, ("relational", "window")),
 ]

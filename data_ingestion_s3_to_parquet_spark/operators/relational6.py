@@ -477,16 +477,19 @@ GROUP BY event_type
 """
 
 
-# Promoted into the graded 50 in round 4 (VERDICT r3 #1), green in
-# rounds 4-6; demoted to the EXTRA lane in the round-7 wave-2
-# rotation in exchange for never-graded round-7 promotees.
-QUERIES: list[Query] = []
-
-EXTRA_QUERIES = [
-    # join_bloom_prefilter re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
-    # cdc_apply re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
+QUERIES: list[Query] = [
+    Query(
+        "join_bloom_prefilter",
+        q_join_bloom_prefilter,
+        SQL_JOIN_BLOOM_PREFILTER,
+        ("relational", "join", "approx"),
+    ),
+    Query(
+        "cdc_apply",
+        q_cdc_apply,
+        SQL_CDC_APPLY,
+        ("relational", "window", "pipeline"),
+    ),
     Query(
         "sample_weighted",
         q_sample_weighted,
@@ -494,14 +497,17 @@ EXTRA_QUERIES = [
         ("llm", "sampling"),
     ),
     Query("udtf_lateral", q_udtf_lateral, SQL_UDTF_LATERAL, ("relational", "udf")),
-    # agg_hll_sketch re-promoted to the graded lane in round 13 (r6
-    # driver row; it registers via relational19)
+    Query(
+        "agg_hll_sketch",
+        q_agg_hll_sketch,
+        SQL_AGG_HLL_SKETCH,
+        ("relational", "agg", "approx"),
+    ),
     Query(
         "resample_ffill",
         q_resample_ffill,
         SQL_RESAMPLE_FFILL,
         ("relational", "window", "streaming"),
     ),
-    # json_variant re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
+    Query("json_variant", q_json_variant, SQL_JSON_VARIANT, ("relational", "json")),
 ]

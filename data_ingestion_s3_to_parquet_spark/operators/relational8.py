@@ -670,36 +670,13 @@ GROUP BY event_type
 """
 
 
-QUERIES: list[Query] = []
-
-# Graded lane contribution: none since round 8 — anomaly_zscore
-# (green r6+r7) demoted below in exchange for the never-graded
-# rank_bm25 (relational10), per the one-for-one rotation rule.
-QUERIES = []
-
-# Demoted to the EXTRA lane: sample_span_mask / lm_unigram_score in
-# round 7 after re-earning green rows in round 6 on the CAST-fixed
-# oracles (VERDICT r6 #1); window_range_interval / profile_table /
-# agg_skew_salted in the round-7 wave-2 rotation (green r5+r6);
-# anomaly_zscore in round 8 (green r6+r7) for rank_bm25. All keep
-# their oracles + bench entries and stay in the local sweep.
-EXTRA_QUERIES: list[Query] = [
-    Query(
-        "anomaly_zscore",
-        q_anomaly_zscore,
-        SQL_ANOMALY_ZSCORE,
-        ("relational", "quality", "timeseries"),
-    ),
-    # demoted in the round-7 THIRD-wave rotation (green r6) in
-    # exchange for the never-graded winnow_overlap
+QUERIES: list[Query] = [
     Query(
         "unpivot_stack",
         q_unpivot_stack,
         SQL_UNPIVOT_STACK,
         ("relational", "reshape"),
     ),
-    # knn_graph re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
     Query(
         "window_range_interval",
         q_window_range_interval,
@@ -707,20 +684,41 @@ EXTRA_QUERIES: list[Query] = [
         ("relational", "window", "timeseries"),
     ),
     Query(
-        "profile_table",
-        q_profile_table,
-        SQL_PROFILE_TABLE,
-        ("relational", "quality", "profiling"),
-    ),
-    # agg_skew_salted re-promoted to the graded lane in round 13 (r6
-    # driver row; it registers via relational19)
-    Query(
         "sample_span_mask",
         q_sample_span_mask,
         SQL_SAMPLE_SPAN_MASK,
         ("llm", "sampling", "text"),
         bench=True,  # the token-stream-shuffle representative
     ),
-    # lm_unigram_score re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
+    Query(
+        "anomaly_zscore",
+        q_anomaly_zscore,
+        SQL_ANOMALY_ZSCORE,
+        ("relational", "quality", "timeseries"),
+    ),
+    Query(
+        "knn_graph",
+        q_knn_graph,
+        SQL_KNN_GRAPH,
+        ("llm", "similarity", "window"),
+    ),
+    Query(
+        "lm_unigram_score",
+        q_lm_unigram_score,
+        SQL_LM_UNIGRAM_SCORE,
+        ("llm", "text", "quality"),
+        bench=True,  # broadcast-vocab scoring over the token stream
+    ),
+    Query(
+        "profile_table",
+        q_profile_table,
+        SQL_PROFILE_TABLE,
+        ("relational", "quality", "profiling"),
+    ),
+    Query(
+        "agg_skew_salted",
+        q_agg_skew_salted,
+        SQL_AGG_SKEW_SALTED,
+        ("relational", "agg", "skew"),
+    ),
 ]

@@ -425,7 +425,6 @@ UNION ALL SELECT 'user_id_references_customer', n, CAST(v_ri AS BIGINT), v_ri = 
 """
 
 
-
 # ---------------------------------------------------------------------------
 # fuzzy_match_strings
 
@@ -483,7 +482,6 @@ SELECT a.lang, a.doc_id AS doc_a, b.doc_id AS doc_b,
 FROM p a JOIN p b ON a.lang = b.lang AND a.doc_id < b.doc_id
 WHERE levenshtein(a.pre, b.pre) <= {FUZZY_MAX_EDITS}
 """
-
 
 
 # ---------------------------------------------------------------------------
@@ -555,7 +553,6 @@ FROM st
 """
 
 
-
 # ---------------------------------------------------------------------------
 # corpus_report
 
@@ -602,7 +599,6 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 # oracle: the volume aggregates inline; the keep count reuses the
 # quality_gopher oracle verbatim as a subquery (one source of truth
 # for the gate's SQL semantics)
@@ -633,7 +629,6 @@ FROM vol CROSS JOIN keep
 
 
 SQL_CORPUS_REPORT = _sql_corpus_report()
-
 
 
 # ---------------------------------------------------------------------------
@@ -712,7 +707,6 @@ SELECT d.bin,
        COALESCE(b.n, 0) AS n
 FROM dense d LEFT JOIN binned b ON d.bin = b.bin
 """
-
 
 
 # ---------------------------------------------------------------------------
@@ -803,7 +797,6 @@ WHERE o_totalprice > greatest(COALESCE(prev_in, -1), COALESCE(carry_max, -1))
 """
 
 
-
 # ---------------------------------------------------------------------------
 # basket_pairs
 
@@ -891,7 +884,6 @@ JOIN pn na ON pa = na.l_partkey
 JOIN pn nb ON pb = nb.l_partkey
 CROSS JOIN tot
 """
-
 
 
 # ---------------------------------------------------------------------------
@@ -1027,7 +1019,6 @@ SELECT CAST(month AS TIMESTAMP) AS month,
        END AS mom_growth
 FROM l
 """
-
 
 
 # ---------------------------------------------------------------------------
@@ -1757,7 +1748,6 @@ SELECT nationkey, n_units, n_a, n_b,
        {_SRM_ALERT_EXPR.format(big="HUGEINT")} AS srm_alert
 FROM g
 """
-
 
 
 def q_merge_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3329,65 +3319,7 @@ FROM base
 SQL_SAMPLE_SIZE_CALC = _sql_sample_size_calc()
 
 
-
-
-QUERIES: list[Query] = []
-
-# Graded lane contribution after the round-7 wave-2 rotation: two
-# round-5 promotees kept graded (recursive_cte, data_expectations —
-# green r5+r6) and the nine round-6 promotees (green r6), earning
-# further rows. time_weighted_avg and ab_test_metrics carried the
-# same latent HUGEINT oracle defect as sample_span_mask and now CAST
-# their integer SUM output columns (span_sec, n_a, n_b) to BIGINT.
-QUERIES = [
-    # NEW in round 7 (post-wave-2): graded immediately so it earns a
-    # driver row this round; knn_graph (green r5+r6, LSH twin benched)
-    # demoted from relational8 in exchange.
-    Query(
-        "corr_pearson",
-        q_corr_pearson,
-        SQL_CORR_PEARSON,
-        ("relational", "analytics", "statistics"),
-    ),
-]
-
-# Demoted in the round-7 wave-2 rotation (green r5+r6) in exchange
-# for never-graded round-7 promotees; all stay in the local sweep.
-# recursive_cte / data_expectations (green r5+r6) and value_histogram
-# (green r6) demoted in the round-7 THIRD-wave rotation for the new
-# doc_winnow / inverted_index / changepoint_cusum (relational10.py).
-EXTRA_QUERIES: list[Query] = [
-    # demoted in the round-8 SECOND-wave rotation (green r6+r7) in
-    # exchange for the never-graded orc_interop / acf_lags /
-    # ccnet_buckets / zorder_layout (relational11); chunk_text keeps
-    # its bench flag — the bench suite merges all lanes
-    Query(
-        "chunk_text",
-        q_chunk_text,
-        SQL_CHUNK_TEXT,
-        ("llm", "text", "rag"),
-        bench=True,  # the explode-heavy map-only representative
-    ),
-    Query(
-        "basket_pairs",
-        q_basket_pairs,
-        SQL_BASKET_PAIRS,
-        ("relational", "analytics", "association"),
-    ),
-    Query(
-        "period_growth",
-        q_period_growth,
-        SQL_PERIOD_GROWTH,
-        ("relational", "analytics", "timeseries"),
-    ),
-    Query(
-        "ab_test_metrics",
-        q_ab_test_metrics,
-        SQL_AB_TEST_METRICS,
-        ("relational", "analytics", "experimentation"),
-    ),
-    # demoted in round 8 (green r6+r7) in exchange for the
-    # never-graded ewma_smooth and rank_fusion_rrf (relational10)
+QUERIES: list[Query] = [
     Query(
         "time_weighted_avg",
         q_time_weighted_avg,
@@ -3407,31 +3339,167 @@ EXTRA_QUERIES: list[Query] = [
         ("relational", "analytics"),
     ),
     Query(
+        "recursive_cte",
+        q_recursive_hierarchy,
+        SQL_RECURSIVE_HIERARCHY,
+        ("relational", "sql", "iterative"),
+    ),
+    Query(
+        "data_expectations",
+        q_data_expectations,
+        SQL_DATA_EXPECTATIONS,
+        ("relational", "quality", "validation"),
+    ),
+    Query(
+        "fuzzy_match_strings",
+        q_fuzzy_match_strings,
+        SQL_FUZZY_MATCH_STRINGS,
+        ("llm", "text", "linkage"),
+    ),
+    Query(
+        "chunk_text",
+        q_chunk_text,
+        SQL_CHUNK_TEXT,
+        ("llm", "text", "rag"),
+        bench=True,  # the explode-heavy map-only representative
+    ),
+    Query(
         "corpus_report",
         q_corpus_report,
         SQL_CORPUS_REPORT,
         ("llm", "text", "report"),
     ),
     Query(
-        "recursive_cte",
-        q_recursive_hierarchy,
-        SQL_RECURSIVE_HIERARCHY,
-        ("relational", "sql", "iterative"),
-    ),
-    # data_expectations re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
-    Query(
         "value_histogram",
         q_value_histogram,
         SQL_VALUE_HISTOGRAM,
         ("relational", "profiling"),
     ),
-    # fuzzy_match_strings re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
     Query(
         "skyline_frontier",
         q_skyline_frontier,
         SQL_SKYLINE_FRONTIER,
         ("relational", "analytics", "window"),
+    ),
+    Query(
+        "basket_pairs",
+        q_basket_pairs,
+        SQL_BASKET_PAIRS,
+        ("relational", "analytics", "association"),
+    ),
+    Query(
+        "corr_pearson",
+        q_corr_pearson,
+        SQL_CORR_PEARSON,
+        ("relational", "analytics", "statistics"),
+    ),
+    Query(
+        "period_growth",
+        q_period_growth,
+        SQL_PERIOD_GROWTH,
+        ("relational", "analytics", "timeseries"),
+    ),
+    Query(
+        "ab_test_metrics",
+        q_ab_test_metrics,
+        SQL_AB_TEST_METRICS,
+        ("relational", "analytics", "experimentation"),
+    ),
+    Query(
+        "perm_test_diff",
+        q_perm_test_diff,
+        SQL_PERM_TEST_DIFF,
+        ("relational", "statistics", "evaluation", "sampling"),
+    ),
+    Query(
+        "bootstrap_ci_diff",
+        q_bootstrap_ci_diff,
+        SQL_BOOTSTRAP_CI_DIFF,
+        ("relational", "statistics", "sampling", "evaluation"),
+    ),
+    Query(
+        "perm_test_ratio",
+        q_perm_test_ratio,
+        SQL_PERM_TEST_RATIO,
+        ("relational", "statistics", "evaluation", "sampling"),
+    ),
+    Query(
+        "srm_check",
+        q_srm_check,
+        SQL_SRM_CHECK,
+        ("relational", "statistics", "quality", "monitoring"),
+    ),
+    Query(
+        "merge_intervals",
+        q_merge_intervals,
+        SQL_MERGE_INTERVALS,
+        ("relational", "window", "timeseries"),
+    ),
+    Query(
+        "markov_transitions",
+        q_markov_transitions,
+        SQL_MARKOV_TRANSITIONS,
+        ("relational", "analytics", "window"),
+        bench=True,  # the bounded-key sequence-statistic representative
+    ),
+    Query(
+        "robust_stats",
+        q_robust_stats,
+        SQL_ROBUST_STATS,
+        ("relational", "profiling", "window"),
+    ),
+    Query(
+        "session_paths",
+        q_session_paths,
+        SQL_SESSION_PATHS,
+        ("relational", "analytics", "window"),
+    ),
+    Query(
+        "chi2_contingency",
+        q_chi2_contingency,
+        SQL_CHI2_CONTINGENCY,
+        ("relational", "analytics", "statistics"),
+    ),
+    Query(
+        "metric_cuped",
+        q_metric_cuped,
+        SQL_METRIC_CUPED,
+        ("relational", "statistics", "evaluation", "pipeline"),
+    ),
+    Query(
+        "metric_did",
+        q_metric_did,
+        SQL_METRIC_DID,
+        ("relational", "statistics", "evaluation", "pipeline"),
+    ),
+    Query(
+        "fdr_bh",
+        q_fdr_bh,
+        SQL_FDR_BH,
+        ("relational", "statistics", "evaluation", "quality"),
+    ),
+    Query(
+        "fdr_holm",
+        q_fdr_holm,
+        SQL_FDR_HOLM,
+        ("relational", "statistics", "evaluation", "quality"),
+    ),
+    Query(
+        "chisq_independence",
+        q_chisq_independence,
+        SQL_CHISQ_INDEPENDENCE,
+        ("relational", "statistics", "quality", "evaluation"),
+    ),
+    Query(
+        "power_mde",
+        q_power_mde,
+        SQL_POWER_MDE,
+        ("relational", "statistics", "evaluation", "pipeline"),
+    ),
+    Query(
+        "sample_size_calc",
+        q_sample_size_calc,
+        SQL_SAMPLE_SIZE_CALC,
+        ("relational", "statistics", "evaluation", "pipeline"),
     ),
 ]

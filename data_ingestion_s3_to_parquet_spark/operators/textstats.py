@@ -2387,11 +2387,6 @@ FROM g
 SQL_TEXT_MATTR = _sql_text_mattr()
 
 
-# All graded contributions from this module now register via
-# relational7 (the round-7 wave-2 promotion: vocab_coverage,
-# freq_items_topk, strip_markup, ngram_counts, url_canonicalize,
-# cms_counts, pmi_cooccur, entropy_score, content_chunks,
-# word_filter).
 # --------------------------------------------------------------------
 # tokenizer_vocab_overlap
 # --------------------------------------------------------------------
@@ -2723,17 +2718,18 @@ FROM scored
 SQL_EVAL_LANG_CONFUSION = _sql_eval_lang_confusion()
 
 
-QUERIES: list[Query] = []
-
-# Rotated to the EXTRA lane: quality_gopher / pii_redact in round 4
-# (green driver rows in r3 — VERDICT r3 #1); the five below in the
-# round-7 wave-2 rotation (multiple green rows each, latest r6).
-EXTRA_QUERIES = [
+QUERIES: list[Query] = [
     Query("text_stats", q_text_stats, SQL_TEXT_STATS, ("llm", "text"), bench=True),
-    # doc_fingerprint re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
-    # lang_id re-promoted to the graded lane in round 14 (r6
-    # driver row; it registers via relational20)
+    Query(
+        "doc_fingerprint",
+        q_doc_fingerprint,
+        SQL_DOC_FINGERPRINT,
+        ("llm", "text"),
+    ),
+    Query("lang_id", q_lang_id, SQL_LANG_ID, ("llm", "text")),
+    Query("lang_id_ngram", q_lang_id_ngram, None, ("llm", "text", "udf")),
+    Query("quality_gopher", q_quality_gopher, SQL_QUALITY_GOPHER, ("llm", "text")),
+    Query("pii_redact", q_pii_redact, SQL_PII_REDACT, ("llm", "text")),
     Query(
         "tfidf_top_terms",
         q_tfidf_top_terms,
@@ -2748,7 +2744,120 @@ EXTRA_QUERIES = [
         ("llm", "text", "quality", "pipeline"),
         bench=True,  # the composed three-signal gate, timed end-to-end
     ),
-    # quality_gopher / pii_redact re-promoted to the graded lane in
-    # round 11 (r3 driver rows — the registry's oldest; they register
-    # via relational17, which also registers the new text_readability)
+    Query(
+        "strip_markup",
+        q_strip_markup,
+        SQL_STRIP_MARKUP,
+        ("llm", "text"),
+    ),
+    Query(
+        "ngram_counts",
+        q_ngram_counts,
+        SQL_NGRAM_COUNTS,
+        ("llm", "text", "agg"),
+        bench=True,  # corpus-frequency representative (scan + one shuffle + top-k)
+    ),
+    Query(
+        "entropy_score",
+        q_entropy_score,
+        SQL_ENTROPY_SCORE,
+        ("llm", "text", "quality"),
+    ),
+    Query(
+        "content_chunks",
+        q_content_chunks,
+        SQL_CONTENT_CHUNKS,
+        ("llm", "text", "dedup", "rag"),
+        bench=True,  # the token-window + fingerprint-window representative
+    ),
+    Query(
+        "word_filter",
+        q_word_filter,
+        SQL_WORD_FILTER,
+        ("llm", "text", "quality"),
+    ),
+    Query(
+        "pmi_cooccur",
+        q_pmi_cooccur,
+        SQL_PMI_COOCCUR,
+        ("llm", "text", "agg"),
+    ),
+    Query(
+        "freq_items_topk",
+        q_freq_items_topk,
+        SQL_FREQ_ITEMS_TOPK,
+        ("llm", "text", "agg", "approx"),
+    ),
+    Query(
+        "vocab_coverage",
+        q_vocab_coverage,
+        SQL_VOCAB_COVERAGE,
+        ("llm", "text", "agg"),
+    ),
+    Query(
+        "url_canonicalize",
+        q_url_canonicalize,
+        SQL_URL_CANONICALIZE,
+        ("llm", "text", "dedup"),
+    ),
+    Query(
+        "cms_counts",
+        q_cms_counts,
+        SQL_CMS_COUNTS,
+        ("llm", "text", "agg", "approx"),
+    ),
+    Query(
+        "text_readability",
+        q_text_readability,
+        SQL_TEXT_READABILITY,
+        ("llm", "text", "quality"),
+    ),
+    Query(
+        "zipf_fit",
+        q_zipf_fit,
+        SQL_ZIPF_FIT,
+        ("llm", "text", "statistics", "quality"),
+    ),
+    Query(
+        "heaps_fit",
+        q_heaps_fit,
+        SQL_HEAPS_FIT,
+        ("llm", "text", "statistics", "quality"),
+    ),
+    Query(
+        "text_yule_k",
+        q_text_yule_k,
+        SQL_TEXT_YULE_K,
+        ("llm", "text", "statistics", "quality"),
+    ),
+    Query(
+        "len_lognormal_fit",
+        q_len_lognormal_fit,
+        SQL_LEN_LOGNORMAL_FIT,
+        ("llm", "text", "statistics", "quality", "monitoring"),
+    ),
+    Query(
+        "word_adaptation",
+        q_word_adaptation,
+        SQL_WORD_ADAPTATION,
+        ("llm", "text", "statistics", "quality"),
+    ),
+    Query(
+        "text_mattr",
+        q_text_mattr,
+        SQL_TEXT_MATTR,
+        ("llm", "text", "statistics", "quality", "window"),
+    ),
+    Query(
+        "tokenizer_vocab_overlap",
+        q_tokenizer_vocab_overlap,
+        SQL_TOKENIZER_VOCAB_OVERLAP,
+        ("llm", "text", "evaluation", "pipeline"),
+    ),
+    Query(
+        "eval_lang_confusion",
+        q_eval_lang_confusion,
+        SQL_EVAL_LANG_CONFUSION,
+        ("llm", "evaluation", "text", "quality"),
+    ),
 ]

@@ -522,8 +522,8 @@ def _hot_covered_base(docs: DataFrame):
     # slice(transform(...)) guard yields an EMPTY list for docs
     # shorter than n (Spark's sequence(1, 0) would count DOWN).
     # Grams are 64-bit xxhash64 of the n tokens (implicit seed 42), NOT
-    # n-gram strings (r14, guide §2.3 — narrower shuffle keys): downstream is
-    # equality-only (df count + hot semi-join), so the ~25-byte gram
+    # n-gram strings (r14; an 8-byte key shuffles less than the
+    # text): downstream is equality-only (df count + hot semi-join), so the ~25-byte gram
     # text only ever inflated the two gram-keyed exchanges ~3×. Same
     # trade, convention, and collision arithmetic as
     # dedup_ngram_jaccard's hashed shingles (the oracle keeps string
@@ -2465,15 +2465,57 @@ JOIN pop p ON a.status = p.status
 SQL_SAMPLE_ALLOC_EXECUTED = _sql_sample_alloc_executed()
 
 
-QUERIES = [
-    # NEW in round 8: graded immediately (retention_cohort and
-    # corpus_report, green r6+r7, demoted from relational9 in
-    # exchange)
+QUERIES: list[Query] = [
+    Query("sample_split", q_sample_split, SQL_SAMPLE_SPLIT, ("llm", "sampling")),
     Query(
-        "pipeline_fineweb",
-        q_pipeline_fineweb,
-        _sql_pipeline_fineweb(),
-        ("llm", "pipeline", "dedup", "quality", "text"),
+        "emb_centroids",
+        q_emb_centroids,
+        SQL_EMB_CENTROIDS,
+        ("llm", "similarity", "agg"),
+        bench=True,
+    ),
+    Query(
+        "corpus_prep",
+        q_corpus_prep,
+        SQL_CORPUS_PREP,
+        ("llm", "pipeline"),
+        bench=True,
+    ),
+    Query(
+        "decontaminate",
+        q_decontaminate,
+        SQL_DECONTAMINATE,
+        ("llm", "dedup", "pipeline"),
+        bench=True,
+    ),
+    Query("seq_pack", q_seq_pack, SQL_SEQ_PACK, ("llm", "pipeline", "window")),
+    Query(
+        "embedding_quantize",
+        q_embedding_quantize,
+        SQL_EMBEDDING_QUANTIZE,
+        ("llm", "similarity", "multimodal"),
+    ),
+    Query(
+        "sample_stratified",
+        q_sample_stratified,
+        SQL_SAMPLE_STRATIFIED,
+        ("llm", "sampling", "window"),
+    ),
+    Query(
+        "dedup_passages",
+        q_dedup_passages,
+        SQL_DEDUP_PASSAGES,
+        ("llm", "dedup", "text"),
+        bench=True,  # the substring-dedup representative
+    ),
+    Query(
+        "dedup_passages_scale",
+        q_dedup_passages_scale,
+        None,
+        ("llm", "dedup", "text"),
+        bench=True,  # substring dedup over a 4x-inflated corpus:
+        # coverage-saturation stress; the base operator's full oracle
+        # grades correctness
     ),
     Query(
         "dup_span_max",
@@ -2481,9 +2523,18 @@ QUERIES = [
         SQL_DUP_SPAN_MAX,
         ("llm", "dedup", "text", "quality"),
     ),
-    # NEW in round 7 (post-wave-2): graded immediately so they earn
-    # driver rows this round; window_distribution and text_normalize
-    # (green r5+r6) demoted from relational7 in exchange.
+    Query(
+        "pipeline_fineweb",
+        q_pipeline_fineweb,
+        _sql_pipeline_fineweb(),
+        ("llm", "pipeline", "dedup", "quality", "text"),
+    ),
+    Query(
+        "mix_weights",
+        q_mix_weights,
+        SQL_MIX_WEIGHTS,
+        ("llm", "sampling", "agg"),
+    ),
     Query(
         "dsir_weights",
         q_dsir_weights,
@@ -2496,30 +2547,58 @@ QUERIES = [
         SQL_TOKEN_BUDGET_SELECT,
         ("llm", "sampling", "quality", "window"),
     ),
-]
-
-# Rotated to the EXTRA lane: seq_pack + embedding_quantize in round 4
-# (green driver rows in r3 — VERDICT r3 #1); sample_split,
-# decontaminate, corpus_prep, emb_centroids in round 6 after four
-# consecutive green driver rows each (VERDICT r5 #4 — their graded
-# slots went to the eleven never-graded round-4 operators).
-# NOTE: the NEW q_dedup_passages registers through relational7's
-# EXTRA_QUERIES (the first EXTRA-contributing module) so the one
-# never-graded entry LEADS the lane and a larger harness budget — or
-# the next rotation — grades it first.
-EXTRA_QUERIES = [
-    # demoted in the round-7 THIRD-wave rotation (green rows through
-    # r6) in exchange for the never-graded graph promotees
     Query(
-        "sample_stratified",
-        q_sample_stratified,
-        SQL_SAMPLE_STRATIFIED,
-        ("llm", "sampling", "window"),
+        "bpe_merges",
+        q_bpe_merges,
+        SQL_BPE_MERGES,
+        ("llm", "text", "iterative"),
     ),
-    # seq_pack / embedding_quantize re-promoted to the graded lane in
-    # round 11 (r3 driver rows — the registry's oldest; they register
-    # via relational17); sample_split / decontaminate / corpus_prep /
-    # emb_centroids re-promoted in round 13 (r5 driver rows — the
-    # oldest after the r12 rotation; they register via relational19,
-    # bench flags intact)
+    Query(
+        "bpe_apply",
+        q_bpe_apply,
+        SQL_BPE_APPLY,
+        ("llm", "text", "iterative", "pipeline"),
+    ),
+    Query(
+        "shard_manifest",
+        q_shard_manifest,
+        SQL_SHARD_MANIFEST,
+        ("llm", "pipeline", "agg"),
+    ),
+    Query(
+        "batch_by_length",
+        q_batch_by_length,
+        SQL_BATCH_BY_LENGTH,
+        ("llm", "pipeline", "window"),
+    ),
+    Query(
+        "bootstrap_ci_mean",
+        q_bootstrap_ci_mean,
+        SQL_BOOTSTRAP_CI_MEAN,
+        ("relational", "statistics", "sampling", "evaluation"),
+    ),
+    Query(
+        "bootstrap_ci_ratio",
+        q_bootstrap_ci_ratio,
+        SQL_BOOTSTRAP_CI_RATIO,
+        ("relational", "statistics", "sampling", "evaluation"),
+    ),
+    Query(
+        "bootstrap_ci_quantile",
+        q_bootstrap_ci_quantile,
+        SQL_BOOTSTRAP_CI_QUANTILE,
+        ("relational", "statistics", "sampling", "evaluation"),
+    ),
+    Query(
+        "sample_alloc_neyman",
+        q_sample_alloc_neyman,
+        SQL_SAMPLE_ALLOC_NEYMAN,
+        ("relational", "statistics", "sampling", "pipeline"),
+    ),
+    Query(
+        "sample_alloc_executed",
+        q_sample_alloc_executed,
+        SQL_SAMPLE_ALLOC_EXECUTED,
+        ("relational", "statistics", "sampling", "pipeline"),
+    ),
 ]

@@ -42,7 +42,7 @@ from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-from .zipsource import _is_safe_name
+from .zipsource import is_csv_entry, parse_csv_header
 
 
 def _list_archives(path: str) -> list[str]:
@@ -58,13 +58,7 @@ def _list_archives(path: str) -> list[str]:
 
 def _csv_entries(archive: str) -> list[str]:
     with zipfile.ZipFile(archive) as zf:  # central directory only
-        return sorted(
-            info.filename
-            for info in zf.infolist()
-            if not info.is_dir()
-            and info.filename.endswith(".csv")
-            and _is_safe_name(info.filename)
-        )
+        return sorted(n for n in zf.namelist() if is_csv_entry(n))
 
 
 class ZipEntryPartition(InputPartition):
@@ -88,8 +82,8 @@ class ZipCsvDataSource(DataSource):
         for archive in _list_archives(path):
             for entry in _csv_entries(archive):
                 with zipfile.ZipFile(archive) as zf, zf.open(entry) as fh:
-                    header = io.TextIOWrapper(fh, "utf-8").readline().rstrip("\r\n")
-                cols = [c.strip() or f"_c{i}" for i, c in enumerate(header.split(","))]
+                    header = io.TextIOWrapper(fh, "utf-8").readline()
+                cols = [c or f"_c{i}" for i, c in enumerate(parse_csv_header(header))]
                 return ", ".join(f"`{c}` string" for c in cols)
         raise ValueError(f"zipcsv: no CSV entries found under {path!r}")
 

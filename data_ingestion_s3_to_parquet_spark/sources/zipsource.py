@@ -18,6 +18,7 @@ Two implementations behind one interface:
 
 from __future__ import annotations
 
+import csv
 import io
 import logging
 import os
@@ -39,6 +40,19 @@ def _is_safe_name(name: str) -> bool:
         return False
     parts = name.replace("\\", "/").split("/")
     return ".." not in parts
+
+
+def is_csv_entry(name: str) -> bool:
+    """The one rule for "this zip entry is a CSV": a safe name with a
+    ``.csv`` suffix in any case. A directory entry's name ends in ``/``,
+    so the suffix test also rules directories out."""
+    return _is_safe_name(name) and name.lower().endswith(".csv")
+
+
+def parse_csv_header(line: str) -> list[str]:
+    """Column names of one CSV header line, unquoted the way pandas and
+    Spark read them (``"Date","NO2"`` gives ``Date``, ``NO2``)."""
+    return [c.strip() for c in next(csv.reader([line], skipinitialspace=True), [])]
 
 
 def extract_zip(zip_path: str, output_dir: str) -> list[str]:
@@ -113,9 +127,7 @@ def read_zipped_csvs(
             for _, row in pdf.iterrows():
                 with zipfile.ZipFile(io.BytesIO(row["content"])) as zf:
                     for info in zf.infolist():
-                        if info.is_dir() or not _is_safe_name(info.filename):
-                            continue
-                        if not info.filename.lower().endswith(".csv"):
+                        if not is_csv_entry(info.filename):
                             continue
                         with zf.open(info) as fh:
                             out = pd.read_csv(

@@ -211,6 +211,21 @@ def test_zipcsv_python_datasource_partitions_per_entry(spark, tmp_path):
     with _pytest.raises(Exception, match="does not match planned schema"):
         spark.read.format("zipcsv").load(zpath2).collect()
 
+    # a quoted header plans unquoted column names, as pandas reads them
+    zpath3 = str(tmp_path / "quoted.zip")
+    with zipfile.ZipFile(zpath3, "w") as zf:
+        zf.writestr("q.csv", '"Date","NO2"\n2023-04-01,1.5\n')
+    df3 = spark.read.format("zipcsv").load(zpath3)
+    assert df3.columns == ["Date", "NO2"]
+    assert [tuple(r) for r in df3.collect()] == [("2023-04-01", "1.5")]
+
+    # the .csv suffix matches in any case, as in the other zip lanes
+    zpath4 = str(tmp_path / "upper.zip")
+    with zipfile.ZipFile(zpath4, "w") as zf:
+        zf.writestr("A.CSV", "id,name\n4,delta\n")
+    df4 = spark.read.format("zipcsv").load(zpath4)
+    assert [tuple(r) for r in df4.collect()] == [("4", "delta")]
+
 
 def test_fetch_s3_commits_atomically_and_retries_stream_errors(tmp_path, monkeypatch):
     # ADVICE-class hardening: a crash mid-download must never leave a

@@ -1067,10 +1067,10 @@ def test_lane_counts_match_docs():
     # rows in the registry at the start of round 14 (the first
     # twelve alphabetical of the 36-lane r6-row cohort) — followed
     # by the thirteen round-13 first-timers that keep their graded
-    # slots (relational19), and eval_mrr. NEW round-14 operators
+    # slots, and eval_mrr. NEW round-14 operators
     # prepend at position 1 as their waves land
     # (never-graded-first), each demoting one r13-refreshed veteran
-    # one-for-one (see the relational20 wave comments).
+    # one-for-one (positions come from plans.registry.LANES).
     assert list(REGISTRY)[1:27] == [
         "metric_cuped", "rank_test_u", "fdr_bh",
         "chisq_independence", "power_mde", "stream_srm",
@@ -1093,16 +1093,13 @@ def test_lane_counts_match_docs():
         "join_outer", "join_semi_anti",
         "sort_limit_topk", "set_ops", "regexp_funcs",
     ]
-    # the twelve round-14 demotees (the full r13 promotion cohort,
-    # via relational19.EXTRA_QUERIES) LEAD the EXTRA lane, ahead of
-    # the round-13 demotees (the eleven r12 single-green
-    # first-timers plus window_analytic, via
-    # relational18.EXTRA_QUERIES), ahead of the r12 demotee cohort
-    # (the seven r11 single-green first-timers first, then the eight
-    # r11-refreshed veterans, the r12 wave-2/3 join_broadcast /
-    # join_asof — relational17.EXTRA_QUERIES — and the wave-4/5
-    # dedup_containment / gini_concentration leading
-    # relational16's), ahead of the r10/r9 demotee cohorts
+    # the twelve round-14 demotees (the full r13 promotion cohort)
+    # LEAD the EXTRA lane, ahead of the round-13 demotees (the eleven
+    # r12 single-green first-timers plus window_analytic), ahead of
+    # the r12 demotee cohort (the seven r11 single-green first-timers
+    # first, then the eight r11-refreshed veterans, the r12 wave-2/3
+    # join_broadcast / join_asof, and the wave-4/5 dedup_containment
+    # / gini_concentration), ahead of the r10/r9 demotee cohorts
     assert list(EXTRA)[:90] == [
         "sample_size_calc", "survival_logrank",
         "bootstrap_ci_quantile", "perm_test_diff", "stream_bootstrap",
@@ -1301,6 +1298,56 @@ def test_bench_timing_order_is_canonical_and_warmup_pinned():
     src = inspect.getsource(bench.main)
     assert "canonical_order(bench_queries)" in src
     assert "WARMUP_LANES" in src
+
+
+def test_bench_heavy_corridors_name_bench_lanes():
+    # every corridor floor must belong to a lane the suite times; a
+    # lane that lost its bench flag would silently drop out of
+    # heavy_lane_inflation in the sidecar
+    import bench
+    from data_ingestion_s3_to_parquet_spark.plans.registry import (
+        BENCH_ONLY,
+        EXTRA,
+        REGISTRY,
+    )
+
+    lanes = {**REGISTRY, **EXTRA, **BENCH_ONLY}
+    for name in bench.HEAVY_CORRIDORS:
+        assert name in lanes and lanes[name].bench, name
+
+
+def test_queries_register_in_their_defining_module():
+    # each operator module lists exactly the operators it defines;
+    # lane order lives only in plans.registry.LANES
+    from importlib import import_module
+
+    from data_ingestion_s3_to_parquet_spark.plans import registry
+
+    misplaced = []
+    for mod_name in registry._MODULES:
+        for q in import_module(mod_name).QUERIES:
+            if q.fn.__module__ != mod_name:
+                misplaced.append((q.name, mod_name, q.fn.__module__))
+    assert not misplaced
+
+
+def test_lanes_checks_reject_bad_lists(monkeypatch):
+    import pytest as _pytest
+
+    from data_ingestion_s3_to_parquet_spark.plans import registry
+
+    lanes = registry.LANES
+    n = registry.MAX_GRADED_QUERIES
+    bad = {
+        "twice": lanes + (lanes[0],),
+        "unknown": lanes + ("no_such_lane",),
+        "missing": lanes[:-1],
+        "oracle": (lanes[-1],) + lanes[: n - 1] + lanes[n - 1 : -1],
+    }
+    for match, value in bad.items():
+        monkeypatch.setattr(registry, "LANES", value)
+        with _pytest.raises(ValueError, match=match):
+            registry._collect()
 
 
 def test_quality_classifier_buckets_split_and_agree_with_signals(spark, sf_dir):
@@ -2770,7 +2817,7 @@ def test_passage_scrub_planted_boilerplate_recall(spark):
 def test_passage_scrub_hashed_grams_match_string_grams(spark, sf_dir):
     # r14 optimization: _hot_covered_base keys the hot-gram aggregation
     # and semi-join on xxhash64(token n-gram) instead of the gram STRING
-    # (narrower shuffle keys — guide §2.3). Pin that the scrub output is
+    # (an 8-byte shuffle key instead of the text). Pin that the scrub output is
     # bitwise what the string-gram formulation produces on the real
     # fixture (the documented hashed-shingle trade: collisions are
     # ~N²/2⁶⁵; the DuckDB oracle independently keeps string grams).
