@@ -116,6 +116,17 @@ def davg_sql(col: str, alias: str, scale: int = 6) -> str:
 
 _DEC38 = "CAST({} AS DECIMAL(38,0))"
 
+# Mean in micro-units of an exact cents sum ``s`` over a count ``n``:
+# the midpoint-free half-up integer division (2·10⁴·s + n) div (2·n)
+# on decimal(38,0) (Spark, ``div``) or HUGEINT (DuckDB, ``//``)
+# operands, so it never leaves exact integer arithmetic; NULL when
+# n = 0.
+MICRO_MEAN_EXPR = (
+    "CASE WHEN {n} = 0 THEN CAST(NULL AS BIGINT)"
+    " ELSE CAST((2 * CAST(10000 AS {big}) * CAST({s} AS {big}) + {n})"
+    " {div} (2 * CAST({n} AS {big})) AS BIGINT) END"
+)
+
 
 def exact_product_sum(a: Column, b: Column) -> Column:
     """SUM(a·b) with the FIRST operand promoted to DECIMAL(38,0)
@@ -141,6 +152,26 @@ def suffstat_agg(x: Column, y: Column) -> list[Column]:
     ]
 
 
+def suffstat_terms() -> tuple[Column, Column, Column, Column]:
+    """The :func:`suffstat_agg` combination terms as doubles, each exact
+    integer term (decimal-first) cast to double ONCE: (nΣxy − ΣxΣy,
+    nΣx² − (Σx)², nΣy² − (Σy)², ΣyΣx² − ΣxΣxy)."""
+    d = _DEC38.format
+    return (
+        F.expr(f"CAST({d('n')} * sxy - {d('sx')} * {d('sy')} AS DOUBLE)"),
+        F.expr(f"CAST({d('n')} * sxx - {d('sx')} * {d('sx')} AS DOUBLE)"),
+        F.expr(f"CAST({d('n')} * syy - {d('sy')} * {d('sy')} AS DOUBLE)"),
+        F.expr(f"CAST({d('sy')} * sxx - {d('sx')} * sxy AS DOUBLE)"),
+    )
+
+
+# The DuckDB forms of the same integer terms (HUGEINT-first).
+SXY_SQL = "n * sxy - CAST(sx AS HUGEINT) * sy"
+SXX_SQL = "n * sxx - CAST(sx AS HUGEINT) * sx"
+SYY_SQL = "n * syy - CAST(sy AS HUGEINT) * sy"
+ICEPT_SQL = "CAST(sy AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sxy"
+
+
 def corr_micro_from_stats() -> Column:
     """Pearson correlation in micros from the :func:`suffstat_agg`
     frame: the three integer combination terms are each cast to
@@ -148,22 +179,22 @@ def corr_micro_from_stats() -> Column:
     — identical bits on both engines. Zero variance on either side →
     NULL (the ADVICE r7 standard). Shared by ``corr_pearson`` (raw
     values) and ``corr_spearman`` (double-ranks)."""
-    num = F.expr(
-        f"CAST({_DEC38.format('n')} * sxy - {_DEC38.format('sx')} *"
-        f" {_DEC38.format('sy')} AS DOUBLE)"
-    )
-    var_x = F.expr(
-        f"CAST({_DEC38.format('n')} * sxx - {_DEC38.format('sx')} *"
-        f" {_DEC38.format('sx')} AS DOUBLE)"
-    )
-    var_y = F.expr(
-        f"CAST({_DEC38.format('n')} * syy - {_DEC38.format('sy')} *"
-        f" {_DEC38.format('sy')} AS DOUBLE)"
-    )
+    num, var_x, var_y, _ = suffstat_terms()
     return F.when(
         (var_x == 0) | (var_y == 0), F.lit(None).cast("long")
     ).otherwise(
         F.round(num / F.sqrt(var_x * var_y) * 1_000_000, 0).cast("long")
+    )
+
+
+def corr_micro_sql() -> str:
+    """The DuckDB rendering of :func:`corr_micro_from_stats` over a
+    frame with the :func:`suffstat_agg` aliases."""
+    return (
+        f"CASE WHEN {SXX_SQL} = 0 OR {SYY_SQL} = 0 THEN NULL"
+        f" ELSE CAST(ROUND(CAST({SXY_SQL} AS DOUBLE)"
+        f" / sqrt(CAST({SXX_SQL} AS DOUBLE) * CAST({SYY_SQL} AS DOUBLE))"
+        " * 1000000, 0) AS BIGINT) END"
     )
 
 
@@ -179,22 +210,7 @@ def ols_log_micro_cols(negate_slope: bool = False) -> tuple[Column, Column, Colu
     both lanes — the round-11 review flagged the copies as a drift
     surface (the same finding class as graph.py's ``_und_edges``).
     """
-    num_s = F.expr(
-        f"CAST({_DEC38.format('n')} * sxy - {_DEC38.format('sx')} *"
-        f" {_DEC38.format('sy')} AS DOUBLE)"
-    )
-    den = F.expr(
-        f"CAST({_DEC38.format('n')} * sxx - {_DEC38.format('sx')} *"
-        f" {_DEC38.format('sx')} AS DOUBLE)"
-    )
-    num_i = F.expr(
-        f"CAST({_DEC38.format('sy')} * sxx - {_DEC38.format('sx')} *"
-        f" sxy AS DOUBLE)"
-    )
-    var_y = F.expr(
-        f"CAST({_DEC38.format('n')} * syy - {_DEC38.format('sy')} *"
-        f" {_DEC38.format('sy')} AS DOUBLE)"
-    )
+    num_s, den, var_y, num_i = suffstat_terms()
     null_l = F.lit(None).cast("long")
     sign = -1 if negate_slope else 1
     slope = F.when(den == 0, null_l).otherwise(
@@ -218,10 +234,10 @@ def ols_log_micro_sql(
     """The DuckDB rendering of :func:`ols_log_micro_cols` over a
     ``stats`` CTE with the :func:`suffstat_agg` aliases — three CASE
     expressions, comma-joined for a SELECT list."""
-    num_s = "CAST(n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)"
-    den = "CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE)"
-    den0 = "n * sxx - CAST(sx AS HUGEINT) * sx = 0"
-    vy0 = "n * syy - CAST(sy AS HUGEINT) * sy = 0"
+    num_s = f"CAST({SXY_SQL} AS DOUBLE)"
+    den = f"CAST({SXX_SQL} AS DOUBLE)"
+    den0 = f"{SXX_SQL} = 0"
+    vy0 = f"{SYY_SQL} = 0"
     sign = "-" if negate_slope else ""
     return f"""
        CASE WHEN {den0} THEN NULL
@@ -230,12 +246,10 @@ def ols_log_micro_sql(
        END AS {slope_alias},
        CASE WHEN {den0} THEN NULL
             ELSE CAST(ROUND(
-              CAST(CAST(sy AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sxy
-                   AS DOUBLE) / {den}, 0) AS BIGINT)
+              CAST({ICEPT_SQL} AS DOUBLE) / {den}, 0) AS BIGINT)
        END AS {icept_alias},
        CASE WHEN {den0} OR {vy0} THEN NULL
             ELSE CAST(ROUND({num_s} * {num_s}
-              / ({den} * CAST(n * syy - CAST(sy AS HUGEINT) * sy
-                              AS DOUBLE))
+              / ({den} * CAST({SYY_SQL} AS DOUBLE))
               * 1000000, 0) AS BIGINT)
        END AS {r2_alias}"""

@@ -241,4 +241,7 @@ def run_pipeline(
     csvs = [p for p in extracted if is_csv_entry(os.path.relpath(p, unzip_dir))]
     if not csvs:
         raise FileNotFoundError(f"no CSV entries found in {destination}")
+    logger.info("%d CSV entries in %s; ingesting %s", len(csvs), destination, csvs[0])
+    if len(csvs) > 1:
+        logger.warning("ignoring %d other CSV entries: %s", len(csvs) - 1, csvs[1:])
     return ingest_csv(spark, csvs[0], out_path)

@@ -9,7 +9,7 @@ on irregular grids).
 
 Here it implements the as-of join as a TWIN of the graded
 ``join_asof`` (equi-join + inequality + rank-1 window,
-operators/relational.py:402) — same contract, different engine path —
+``relational.q_join_asof``) — same contract, different engine path —
 and a parity test (tests/test_operators.py) diffs the two outputs
 row-for-row, tie-breaks included. That is the repo's standard pattern
 for every double-implemented operator (see SCALE.md §31): docstring

@@ -1750,6 +1750,459 @@ SELECT doc_id, lang, n_grams, n_novel,
 FROM j
 """
 
+# --------------------------------------------------------------------
+# doc_winnow
+# --------------------------------------------------------------------
+
+WINNOW_GRAM_N = 3  # words per gram (matches the repo shingle convention)
+WINNOW_W = 4  # winnowing window: one fingerprint per W consecutive grams
+# 40-bit gram hashes and 20-bit positions pack into one int64 key:
+# key = h * 2^20 + (2^20 - 1 - pos). MIN(key) over a window is then
+# "smallest hash, rightmost position on ties" — exactly the winnowing
+# tie rule — decoded back by div/mod. 40 + 20 = 60 bits < 63, no
+# overflow; docs are capped far below 2^20 grams at this layer (longer
+# inputs go through chunk_text first).
+_POS_BITS = 20
+_POS_MOD = 1 << _POS_BITS  # 1048576
+_FP_HEX = 10  # 40-bit gram fingerprint (exact in a double: < 2^53)
+
+
+def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Winnowing fingerprint selection: from each document's rolling
+    3-word-gram hashes, keep the minimum of every ``WINNOW_W``-gram
+    window (rightmost on ties) and emit the distinct selected
+    (position, fingerprint) pairs.
+
+    Winnowing's guarantee (the reason MOSS uses it over "every k-th
+    hash" sampling): any shared substring of at least
+    ``WINNOW_W + WINNOW_GRAM_N - 1`` words produces at least one
+    IDENTICAL selected fingerprint in both documents, so
+    fingerprint-equality joins find all sufficiently long overlaps —
+    position-aware plagiarism/quotation detection, where the whole-doc
+    sketches (``dedup_fuzzy``) only score global similarity and
+    ``dedup_passages`` needs a corpus-wide hot-gram table.
+
+    Engine shape: the argmin-with-tie-break per sliding window — a
+    scan-resistant imperative loop in most engines — collapses into
+    ONE window-function pass by packing (hash, position) into a single
+    int64 ordered so MIN() implements the tie rule (header comment).
+    One gram explode, one per-doc window shuffle, a distinct; no join,
+    no UDF. At 100 TB the shuffle key is doc_id (never the gram text)
+    and output is ~|grams| / ((WINNOW_W + 1) / 2) rows by the
+    winnowing density bound (2/(w+1)).
+
+    Docs shorter than ``WINNOW_GRAM_N`` words have no grams and emit
+    nothing; docs with fewer than ``WINNOW_W`` grams emit their single
+    global minimum (the standard short-document degeneration).
+    """
+    return winnow_fingerprints(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    )
+
+
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
+    """The input-pluggable winnowing core: (doc_id, text) in,
+    distinct selected (doc_id, fp_pos, fp) out (docstring above)."""
+    d = docs.select("doc_id", F.split("text", " ").alias("t"))
+    m = F.greatest(F.size("t") - (WINNOW_GRAM_N - 1), F.lit(0))
+    # guard: Spark's sequence(1, 0) counts DOWN ([1, 0]); empty-gram
+    # docs need an explicit empty array (the ngram_counts rule)
+    idx = F.when(m >= 1, F.sequence(F.lit(1), m)).otherwise(
+        F.array().cast("array<int>")
+    )
+    grams = F.transform(
+        idx,
+        lambda i: F.concat_ws(
+            " ",
+            *[
+                F.element_at(F.col("t"), (i + k).cast("int"))
+                for k in range(WINNOW_GRAM_N)
+            ],
+        ),
+    )
+    g = (
+        d.select("doc_id", m.alias("m"), F.posexplode(grams).alias("p0", "gram"))
+        .select(
+            "doc_id",
+            "m",
+            (F.col("p0") + 1).alias("pos"),
+            F.conv(F.substring(F.md5("gram"), 1, _FP_HEX), 16, 10)
+            .cast("long")
+            .alias("h"),
+        )
+    )
+    key = F.col("h") * _POS_MOD + (F.lit(_POS_MOD - 1) - F.col("pos"))
+    w = (
+        Window.partitionBy("doc_id")
+        .orderBy("pos")
+        .rowsBetween(-(WINNOW_W - 1), 0)
+    )
+    sel = (
+        g.select(
+            "doc_id",
+            "pos",
+            "m",
+            F.min(key.alias("k")).over(w).alias("mk"),
+        )
+        .where(F.col("pos") >= F.least(F.lit(WINNOW_W), F.col("m")))
+        .select(
+            "doc_id",
+            (F.lit(_POS_MOD - 1) - F.col("mk") % _POS_MOD).alias("fp_pos"),
+            # integer div, NOT `/`: float division of a 60-bit packed
+            # key would round above 2^53
+            F.expr(f"mk div {_POS_MOD}").alias("fp"),
+        )
+        .distinct()
+    )
+    return sel
+
+
+def _sql_fp40(expr: str) -> str:
+    """DuckDB mirror of the 40-bit md5-prefix fingerprint — digit-wise
+    hex decode with double powers (exact below 2^53), one BIGINT cast
+    (same scheme as trainprep._sql_fp48, narrowed to 10 digits)."""
+    return (
+        f"CAST(list_sum(list_transform(range(1, {_FP_HEX + 1}), j -> "
+        f"(strpos('0123456789abcdef', substr(md5({expr}), j, 1)) - 1) "
+        f"* 16 ^ ({_FP_HEX} - j))) AS BIGINT)"
+    )
+
+
+SQL_DOC_WINNOW = f"""
+WITH t AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+g AS (
+  SELECT doc_id,
+         greatest(len(t) - {WINNOW_GRAM_N - 1}, 0) AS m,
+         unnest(generate_series(1, greatest(len(t) - {WINNOW_GRAM_N - 1}, 0))) AS pos,
+         unnest([{_sql_fp40(f"array_to_string(t[i:i+{WINNOW_GRAM_N - 1}], ' ')")}
+                 for i in generate_series(1, greatest(len(t) - {WINNOW_GRAM_N - 1}, 0))]) AS h
+  FROM t
+),
+k AS (
+  SELECT doc_id, pos, m,
+         MIN(h * {_POS_MOD} + ({_POS_MOD - 1} - pos)) OVER (
+           PARTITION BY doc_id ORDER BY pos
+           ROWS BETWEEN {WINNOW_W - 1} PRECEDING AND CURRENT ROW) AS mk
+  FROM g
+)
+SELECT DISTINCT doc_id,
+       {_POS_MOD - 1} - (mk % {_POS_MOD}) AS fp_pos,
+       mk // {_POS_MOD} AS fp
+FROM k WHERE pos >= least({WINNOW_W}, m)
+"""
+
+
+# --------------------------------------------------------------------
+# winnow_overlap
+# --------------------------------------------------------------------
+
+OVERLAP_MIN_SHARED = 2  # fingerprints two docs must share to pair
+OVERLAP_FP_MAX_DF = 16  # fingerprints in more docs than this are boilerplate
+
+
+def q_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The application of ``doc_winnow``: document pairs sharing at
+    least ``OVERLAP_MIN_SHARED`` selected fingerprints — the
+    MOSS-style plagiarism/quotation detector. By the winnowing
+    guarantee every shared span of ≥ WINNOW_W + WINNOW_GRAM_N − 1
+    words contributes an identical selected fingerprint to both
+    documents, so overlap detection is an EQUALITY join on
+    fingerprints, never an all-pairs comparison. Returns
+    (doc_a, doc_b, n_shared, n_a, n_b) — the shared count plus each
+    side's total distinct fingerprints, the exact integer parts of
+    the containment ratios (num/den rule; no float ratio column).
+
+    Skew control, the standard two-sided split: fingerprints present
+    in more than ``OVERLAP_FP_MAX_DF`` documents are BOILERPLATE
+    (templates, licence headers) — they would pair everything with
+    everything (df² growth) while carrying no pairwise signal, and
+    corpus-wide repetition is ``dedup_passages``'s job. The df cap
+    bounds the pair fan-out per fingerprint at df² ≤ 256; every join
+    side is corpus-proportional and shuffle_hash-pinned (§45).
+    """
+
+    # localCheckpoint: four consumers (df table, both join sides,
+    # totals) would otherwise each recompute the whole winnowing
+    # window pass — the loop-frame rule, not a cache
+    sel = (
+        winnow_fingerprints(
+            load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        )
+        .select("doc_id", "fp")
+        .distinct()
+        .localCheckpoint()
+    )
+    df_ok = (
+        sel.groupBy("fp")
+        .agg(F.count("*").alias("df"))
+        .where(F.col("df") <= OVERLAP_FP_MAX_DF)
+        .select("fp")
+    )
+    live = sel.join(df_ok.hint("shuffle_hash"), "fp", "left_semi")
+    totals = sel.groupBy("doc_id").agg(F.count("*").alias("n_fp"))
+    a = live.select(F.col("doc_id").alias("doc_a"), "fp")
+    b = live.select(F.col("doc_id").alias("doc_b"), "fp")
+    pairs = (
+        a.join(b.hint("shuffle_hash"), "fp")
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("n_shared"))
+        .where(F.col("n_shared") >= OVERLAP_MIN_SHARED)
+    )
+    ta = totals.select(F.col("doc_id").alias("doc_a"), F.col("n_fp").alias("n_a"))
+    tb = totals.select(F.col("doc_id").alias("doc_b"), F.col("n_fp").alias("n_b"))
+    return (
+        pairs.join(ta.hint("shuffle_hash"), "doc_a")
+        .join(tb.hint("shuffle_hash"), "doc_b")
+        .select("doc_a", "doc_b", "n_shared", "n_a", "n_b")
+    )
+
+
+SQL_WINNOW_OVERLAP = f"""
+WITH w AS MATERIALIZED ({SQL_DOC_WINNOW}),
+sel AS (SELECT DISTINCT doc_id, fp FROM w),
+ok AS (SELECT fp FROM sel GROUP BY fp HAVING COUNT(*) <= {OVERLAP_FP_MAX_DF}),
+live AS (SELECT sel.doc_id, sel.fp FROM sel SEMI JOIN ok USING (fp)),
+totals AS (SELECT doc_id, COUNT(*) AS n_fp FROM sel GROUP BY doc_id),
+pairs AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
+  FROM live a JOIN live b ON a.fp = b.fp AND a.doc_id < b.doc_id
+  GROUP BY a.doc_id, b.doc_id
+  HAVING COUNT(*) >= {OVERLAP_MIN_SHARED}
+)
+SELECT doc_a, doc_b, n_shared, ta.n_fp AS n_a, tb.n_fp AS n_b
+FROM pairs
+JOIN totals ta ON ta.doc_id = doc_a
+JOIN totals tb ON tb.doc_id = doc_b
+"""
+
+
+# --------------------------------------------------------------------
+# dedup_threshold_sweep
+# --------------------------------------------------------------------
+
+# Thresholds ≥ the pair table's own base threshold (JACCARD_T = 0.5):
+# the sweep REUSES the PPJoin prefix-filtered exact pair table, so
+# every swept cutoff must be at least as strict as the filter's.
+SWEEP_THRESHOLDS = (50, 60, 70, 80, 90)  # percent
+
+
+def _sweep_hit_expr(jac: str) -> str:
+    """Threshold test as ONE shared expression: the rounded Jaccard is
+    micro-quantized (same double in both engines → same integer) and
+    compared against exact integer cutoffs — no double-vs-decimal
+    literal comparison anywhere."""
+    return (
+        f"CAST(ROUND({jac} * 1000000, 0) AS BIGINT)"
+        " >= threshold_pct * CAST(10000 AS BIGINT)"
+    )
+
+
+_SWEEP_SHARE_EXPR = (
+    "CASE WHEN n_docs = 0 THEN CAST(0 AS BIGINT)"
+    " ELSE CAST(ROUND((CAST(1000000 AS DOUBLE) * n_docs_dropped) / n_docs,"
+    " 0) AS BIGINT) END"
+)
+
+
+def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duplication-rate-vs-threshold curve — the tuning table every
+    dedup deployment reads before PICKING its cutoff (too low deletes
+    paraphrases, too high ships near-dups into training): for each
+    candidate threshold over the exact n-gram-Jaccard pair table
+    (``dedup_ngram_jaccard``'s PPJoin core, reused verbatim), the
+    surviving pair count, the PAIRWISE drop estimate (documents with
+    at least one ≥-threshold partner of smaller doc_id — the standard
+    quick estimate; exact transitive-closure drops are
+    ``dedup_components``' job and differ on star-shaped clusters),
+    and the drop share of the corpus in micros.
+
+    Scale shape: the expensive part is the pair table, whose
+    output-sensitive PPJoin shape (map-side prefix filter,
+    shuffle_hash-pinned explode sides) is documented and probed at
+    its own lane; the sweep adds one explode-by-|thresholds| over the
+    (similar-pairs-only) table, a |thresholds|-group combinable
+    aggregate, and a bounded 5×5 fill join against the literal
+    threshold frame (broadcast by construction) — thresholds with
+    zero surviving pairs still report, as zeros.
+
+    Exactness: the threshold test micro-quantizes the ROUND(…, 6)
+    Jaccard both engines already agree on bitwise (the graded
+    ``dedup_ngram_jaccard`` hash) and compares integers; counts are
+    int64; the one division is the pinned share expression.
+    """
+
+    pairs = q_dedup_ngram_jaccard(spark, sf_dir)
+    thr_arr = F.array(*[F.lit(t) for t in SWEEP_THRESHOLDS])
+    agg = (
+        pairs.withColumn("threshold_pct", F.explode(thr_arr))
+        .where(F.expr(_sweep_hit_expr("jaccard")))
+        .groupBy("threshold_pct")
+        .agg(
+            F.count("*").alias("n_pairs"),
+            F.countDistinct("doc_b").alias("n_docs_dropped"),
+        )
+    )
+    thr = spark.sql(
+        "SELECT * FROM VALUES "
+        + ", ".join(f"({t})" for t in SWEEP_THRESHOLDS)
+        + " AS t(threshold_pct)"
+    )
+    nd = load_table(spark, sf_dir, "documents").agg(
+        F.count("*").alias("n_docs")
+    )
+    filled = (
+        thr.join(F.broadcast(agg), "threshold_pct", "left")
+        .crossJoin(F.broadcast(nd))
+        .select(
+            "threshold_pct",
+            F.coalesce(F.col("n_pairs"), F.lit(0).cast("long")).alias(
+                "n_pairs"
+            ),
+            F.coalesce(
+                F.col("n_docs_dropped"), F.lit(0).cast("long")
+            ).alias("n_docs_dropped"),
+            "n_docs",
+        )
+    )
+    return filled.select(
+        "threshold_pct",
+        "n_pairs",
+        "n_docs_dropped",
+        "n_docs",
+        F.expr(_SWEEP_SHARE_EXPR).alias("drop_share_micro"),
+    )
+
+
+def _sql_dedup_threshold_sweep() -> str:
+    thr_rows = ", ".join(f"({t})" for t in SWEEP_THRESHOLDS)
+    return f"""
+WITH pairs AS ({SQL_DEDUP_NGRAM_JACCARD}),
+thr(threshold_pct) AS (VALUES {thr_rows}),
+agg AS (
+  SELECT t.threshold_pct,
+         CAST(COUNT(*) AS BIGINT) AS n_pairs,
+         CAST(COUNT(DISTINCT p.doc_b) AS BIGINT) AS n_docs_dropped
+  FROM pairs p JOIN thr t ON {_sweep_hit_expr("p.jaccard")}
+  GROUP BY t.threshold_pct
+),
+nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
+filled AS (
+  SELECT thr.threshold_pct,
+         CAST(COALESCE(agg.n_pairs, 0) AS BIGINT) AS n_pairs,
+         CAST(COALESCE(agg.n_docs_dropped, 0) AS BIGINT)
+           AS n_docs_dropped,
+         nd.n_docs
+  FROM thr LEFT JOIN agg USING (threshold_pct) CROSS JOIN nd
+)
+SELECT threshold_pct, n_pairs, n_docs_dropped, n_docs,
+       {_SWEEP_SHARE_EXPR} AS drop_share_micro
+FROM filled
+"""
+
+# --------------------------------------------------------------------
+# dedup_cluster_stats
+# --------------------------------------------------------------------
+
+# Corpus share of a size class in micros. The 0-guard follows the
+# repo's 0/0 standard (_KS_MICRO_EXPR / _RI_SHARE_EXPR): an empty
+# corpus reports 0, not NaN (Spark would cast NaN to 0 silently,
+# DuckDB would raise).
+_CL_SHARE_EXPR = (
+    "CASE WHEN total_rows = 0 THEN CAST(0 AS BIGINT)"
+    " ELSE CAST(ROUND((CAST(1000000 AS DOUBLE) * n_rows) / total_rows,"
+    " 0) AS BIGINT) END"
+)
+
+
+def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cluster-size histogram over ``dedup_components``' output: for
+    each duplicate-cluster size, how many clusters exist, how many
+    corpus rows they hold, how many of those rows a keep-one-per-
+    cluster policy would drop (``n_redundant`` = (size-1)·clusters),
+    and the size class's corpus share in micros.
+
+    This is the tuning dashboard for a dedup rollout: a fat tail of
+    large clusters means the threshold is too loose (unrelated docs
+    chained together); a histogram that is all singletons means the
+    threshold is too tight to matter. Singleton clusters are REAL
+    rows of this report (every vector reaches the component table —
+    ``connected_components_auto`` labels all vertices, isolated ones
+    with their own id), so the shares sum to ~1e6 by construction.
+
+    Scale shape: the component table comes from the checkpointed CC
+    dispatcher (hash-min with star escalation — dedup.py:498); the
+    histogram is two map-side-combinable aggregates on top (component
+    → size, size → count), and the corpus total rides an
+    unpartitioned window over the HISTOGRAM frame — bounded by the
+    number of distinct cluster sizes (≤ largest cluster, in practice
+    tens), the same bounded-carry exception ``eval_mrr`` documents.
+    At 100 TB the edge list feeds from LSH candidates
+    (``dedup_components_lsh``) and this report runs unchanged on its
+    output.
+    """
+
+    comp = q_dedup_components(spark, sf_dir)
+    sizes = comp.groupBy("component").agg(
+        F.count("*").alias("cluster_size")
+    )
+    hist = sizes.groupBy("cluster_size").agg(
+        F.count("*").alias("n_clusters")
+    )
+    hist = hist.select(
+        "cluster_size",
+        "n_clusters",
+        (F.col("cluster_size") * F.col("n_clusters")).alias("n_rows"),
+        ((F.col("cluster_size") - F.lit(1)) * F.col("n_clusters")).alias(
+            "n_redundant"
+        ),
+    ).withColumn(
+        "total_rows",
+        F.sum("n_rows").over(
+            Window.partitionBy().rowsBetween(
+                Window.unboundedPreceding, Window.unboundedFollowing
+            )
+        ),
+    )
+    return hist.select(
+        "cluster_size",
+        "n_clusters",
+        "n_rows",
+        "n_redundant",
+        F.expr(_CL_SHARE_EXPR).alias("row_share_micro"),
+    )
+
+
+def _sql_dedup_cluster_stats() -> str:
+    # the component table is the EXACT oracle of dedup_components
+    # (recursive transitive closure), nested as a CTE so the two lanes
+    # can never disagree about what a component is
+
+    return f"""
+WITH comp AS ({SQL_DEDUP_COMPONENTS}),
+sizes AS (
+  SELECT component, COUNT(*) AS cluster_size FROM comp GROUP BY component
+),
+hist AS (
+  SELECT cluster_size, COUNT(*) AS n_clusters
+  FROM sizes GROUP BY cluster_size
+),
+h2 AS (
+  SELECT cluster_size,
+         n_clusters,
+         cluster_size * n_clusters AS n_rows,
+         (cluster_size - 1) * n_clusters AS n_redundant,
+         SUM(cluster_size * n_clusters) OVER () AS total_rows
+  FROM hist
+)
+SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
+       CAST(n_clusters AS BIGINT) AS n_clusters,
+       CAST(n_rows AS BIGINT) AS n_rows,
+       CAST(n_redundant AS BIGINT) AS n_redundant,
+       {_CL_SHARE_EXPR} AS row_share_micro
+FROM h2
+"""
+
 
 QUERIES: list[Query] = [
     Query(
@@ -1829,5 +2282,30 @@ QUERIES: list[Query] = [
         q_ngram_novelty,
         SQL_NGRAM_NOVELTY,
         ("llm", "dedup", "text", "quality"),
+    ),
+    Query(
+        "doc_winnow",
+        q_doc_winnow,
+        SQL_DOC_WINNOW,
+        ("llm", "text", "window", "fingerprint"),
+        bench=True,  # the explode+window fingerprint lane, timed
+    ),
+    Query(
+        "winnow_overlap",
+        q_winnow_overlap,
+        SQL_WINNOW_OVERLAP,
+        ("llm", "text", "fingerprint", "dedup"),
+    ),
+    Query(
+        "dedup_threshold_sweep",
+        q_dedup_threshold_sweep,
+        _sql_dedup_threshold_sweep(),
+        ("llm", "dedup", "text", "monitoring"),
+    ),
+    Query(
+        "dedup_cluster_stats",
+        q_dedup_cluster_stats,
+        _sql_dedup_cluster_stats(),
+        ("llm", "dedup", "monitoring", "iterative"),
     ),
 ]

@@ -3,7 +3,7 @@ propagation, triangle counting.
 
 ``dedup_components`` covers undirected reachability; this module adds
 the other canonical graph kernels over the k-NN graph ``knn_graph``
-builds from the embedding table (operators/relational8.py):
+builds from the embedding table (operators/similarity.py):
 power-iteration PageRank (centrality), label propagation
 (communities), and per-vertex triangle counts (local clustering).
 Each is a real training-data signal: high-rank documents are
@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.spec import Query
-from .relational8 import SQL_KNN_GRAPH, q_knn_graph
+from .similarity import SQL_KNN_GRAPH, q_knn_graph
 
 PAGERANK_ITERS = 5
 PAGERANK_DAMPING_NUM = 85  # d = 85/100; kept as integers for the loop
@@ -79,7 +79,7 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics are unchanged.
     """
     from ..artifacts import fixture_fingerprint, persisted_frame
-    from .relational8 import KNN_K
+    from .similarity import KNN_K
 
     fp = fixture_fingerprint(sf_dir, "embeddings")
     return persisted_frame(

@@ -12,11 +12,6 @@ scale-safe LSH twin — failing loudly at plan time beats an executor
 OOM three shuffles later. The bound is generous for every fixture SF
 (2 000 embedding rows at sf0.1) and two orders of magnitude below
 where the pair join would become a cluster-wide incident.
-
-Override: callers that have ALREADY bounded block sizes upstream (for
-example, feeding pre-bucketed candidates) can raise the bound via the
-``SPARK_GRAFT_QUADRATIC_BOUND`` environment variable — an explicit,
-greppable opt-in rather than a silent default.
 """
 
 from __future__ import annotations
@@ -24,12 +19,6 @@ from __future__ import annotations
 import os
 
 QUADRATIC_BLOCK_BOUND = 250_000
-
-
-def _bound() -> int:
-    return int(
-        os.environ.get("SPARK_GRAFT_QUADRATIC_BOUND", QUADRATIC_BLOCK_BOUND)
-    )
 
 
 # (sf_dir, table) → exact row count from parquet footers. The fixture
@@ -80,16 +69,13 @@ def guard_fixture_quadratic(
 def check_quadratic_rows(n_rows: int, op_name: str, twin: str) -> None:
     """Raise if ``n_rows`` is past the quadratic-lane bound, naming the
     scale-safe twin the caller should use instead."""
-    bound = _bound()
-    if n_rows > bound:
+    if n_rows > QUADRATIC_BLOCK_BOUND:
         raise ValueError(
             f"{op_name}: input has {n_rows} rows, above the "
-            f"{bound}-row bound for label-block-quadratic exact pair "
-            f"generation (O(n²/blocks) candidates). This lane exists as "
-            f"the bitwise oracle twin at fixture scale — at this size, "
-            f"use the scale-safe LSH lane `{twin}` instead, or raise "
-            f"SPARK_GRAFT_QUADRATIC_BOUND if block sizes are already "
-            f"bounded upstream."
+            f"{QUADRATIC_BLOCK_BOUND}-row bound for label-block-quadratic "
+            f"exact pair generation (O(n²/blocks) candidates). This lane "
+            f"exists as the bitwise oracle twin at fixture scale — at this "
+            f"size, use the scale-safe LSH lane `{twin}` instead."
         )
 
 

@@ -23,6 +23,9 @@ scorer, which is Arrow-batched.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -35,7 +38,110 @@ from ..functions.text import (
     tokens,
 )
 from ..plans.spec import Query
-from ..sources.catalog import load_table
+from ..session import tune
+from ..sources.catalog import load_table, spread
+from .guards import guard_fixture_quadratic
+from .trainprep import BPE_ROUNDS, SQL_BPE_MERGES, _bpe_learn
+
+
+# ---------------------------------------------------------------------------
+# lm_unigram_score
+
+LM_VOCAB_SIZE = 1024
+
+
+def q_lm_unigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Unigram language-model fluency scoring, trained on the corpus
+    itself: per document, the mean negative log2 likelihood of its
+    tokens under the corpus's top-V unigram distribution (V = 1024 by
+    count, ties broken by word; out-of-vocabulary tokens get an
+    add-half pseudo-count). Low avg_nll ⇒ stereotypical text, high ⇒
+    rare/garbled — the cheap middle ground between heuristic quality
+    stats and a real LM pass.
+
+    Scale shape: token counts are one map-side-combinable groupBy; the
+    top-V cut is a count-ordered limit over the (already tiny)
+    distinct-word frame; scoring is a broadcast join of the fixed-size
+    vocab onto the token stream (the token shuffle by doc_id for the
+    final aggregation is the floor for any per-doc score). Per-token
+    nll is quantized to integer MICRO-nll (round(nll·1e6), where only
+    a ~1e-9-per-word ulp coincidence could round apart), summed
+    exactly in int64, and the per-doc mean divides half-up in integer
+    arithmetic — the fixed-point rule (SCALE.md §34): a double mean of
+    a quantized sum lands exactly on rounding midpoints whenever
+    n_words divides the sum suitably, and the sf0.1 sweep caught
+    precisely that (one doc flipping 4.910475/4.910476 across
+    engines).
+    """
+    d = load_table(spark, sf_dir, "documents")
+    words = d.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
+    cnt = words.groupBy("w").agg(F.count("*").alias("c"))
+    total = cnt.agg(F.sum("c").alias("n_total"))
+    vocab = cnt.orderBy(F.desc("c"), "w").limit(LM_VOCAB_SIZE)
+    scored = (
+        words.join(F.broadcast(vocab), "w", "left")
+        .crossJoin(F.broadcast(total))
+        .select(
+            "doc_id",
+            F.col("c").isNull().alias("oov"),
+            F.round(
+                -F.log2(
+                    F.coalesce(F.col("c").cast("double"), F.lit(0.5))
+                    / F.col("n_total")
+                )
+                * 1_000_000,
+                0,
+            )
+            .cast("long")
+            .alias("micro_nll"),
+        )
+    )
+    return (
+        scored.groupBy("doc_id")
+        .agg(
+            F.count("*").alias("n_words"),
+            F.sum(F.col("oov").cast("int")).alias("n_oov"),
+            F.sum("micro_nll").alias("s"),
+        )
+        .select(
+            "doc_id",
+            "n_words",
+            "n_oov",
+            # half-up integer mean, then one exact int->double projection
+            (
+                F.expr("(2 * s + n_words) div (2 * n_words)").cast("double")
+                / F.lit(1_000_000.0)
+            ).alias("avg_nll"),
+        )
+    )
+
+
+SQL_LM_UNIGRAM_SCORE = f"""
+WITH w AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
+),
+cnt AS (SELECT w, COUNT(*) AS c FROM w GROUP BY w),
+tot AS (SELECT SUM(c) AS n_total FROM cnt),
+vocab AS (SELECT w, c FROM cnt ORDER BY c DESC, w LIMIT {LM_VOCAB_SIZE}),
+scored AS (
+  SELECT w.doc_id,
+         v.c IS NULL AS oov,
+         CAST(ROUND(-log2(COALESCE(CAST(v.c AS DOUBLE), 0.5) / t.n_total)
+                    * 1000000, 0) AS BIGINT) AS micro_nll
+  FROM w LEFT JOIN vocab v USING (w) CROSS JOIN tot t
+),
+agg AS (
+  SELECT doc_id, COUNT(*) AS n_words,
+         CAST(SUM(CASE WHEN oov THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
+         SUM(micro_nll) AS s
+  FROM scored GROUP BY doc_id
+)
+SELECT doc_id, n_words, n_oov,
+       CAST((2 * s + n_words) // (2 * n_words) AS DOUBLE) / 1000000.0
+         AS avg_nll
+FROM agg
+"""
+
 
 _STOPLIST_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
@@ -455,8 +561,6 @@ def _quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..artifacts import fixture_fingerprint, persisted_frame
 
     def build() -> DataFrame:
-        from .relational8 import q_lm_unigram_score
-
         ts = q_text_stats(spark, sf_dir).select("doc_id", "quality_score")
         qg = q_quality_gopher(spark, sf_dir).select(
             "doc_id",
@@ -485,8 +589,6 @@ def _quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_quality_classifier() -> str:
-    from .relational8 import SQL_LM_UNIGRAM_SCORE
-
     return f"""
 WITH ts AS (SELECT * FROM ({SQL_TEXT_STATS}) t),
 qg AS (SELECT * FROM ({SQL_QUALITY_GOPHER}) g),
@@ -2718,6 +2820,910 @@ FROM scored
 SQL_EVAL_LANG_CONFUSION = _sql_eval_lang_confusion()
 
 
+def q_map_in_pandas_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """UDTF-shaped mapInPandas: per-document word frequencies (one input
+    row → many output rows), computed in Arrow-batched pandas."""
+    d = spread(load_table(spark, sf_dir, "documents"))
+    tune(spark)
+
+    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = (
+                pdf.assign(word=pdf["text"].str.split(" "))
+                .explode("word")
+                .groupby(["doc_id", "word"], as_index=False)
+                .size()
+                .rename(columns={"size": "cnt"})
+            )
+            yield out[["doc_id", "word", "cnt"]]
+
+    return d.select("doc_id", "text").mapInPandas(
+        expand, "doc_id long, word string, cnt long"
+    )
+
+
+SQL_MAP_IN_PANDAS_TOKENS = """
+SELECT doc_id, u.word, COUNT(*) AS cnt
+FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents) u
+GROUP BY doc_id, u.word
+"""
+
+
+def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Canonical text normalization with audit metrics: lowercase, trim,
+    collapse runs of whitespace to single spaces; emit before/after
+    sizes, a changed flag, and an md5 fingerprint of the normalized
+    text (the key exact dedup should run on — byte-noise variants of
+    the same content collapse to one fingerprint).
+
+    Map-only: pure string expressions inside whole-stage codegen, no
+    shuffle, no UDF — at 100 TB this pass is scan-bound, exactly as a
+    first-pass normalizer must be.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    return d.select(
+        "doc_id",
+        "lang",
+        F.length("text").alias("n_chars_raw"),
+        F.length(norm).alias("n_chars_norm"),
+        F.size(F.split(norm, " ")).alias("n_tokens_norm"),
+        (norm != F.col("text")).alias("changed"),
+        F.md5(norm).alias("norm_fingerprint"),
+    )
+
+
+SQL_TEXT_NORMALIZE = r"""
+WITH n AS (
+  SELECT doc_id, lang, text,
+         trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS norm
+  FROM documents
+)
+SELECT doc_id, lang,
+       length(text) AS n_chars_raw,
+       length(norm) AS n_chars_norm,
+       length(string_split(norm, ' ')) AS n_tokens_norm,
+       norm != text AS changed,
+       md5(norm) AS norm_fingerprint
+FROM n
+"""
+
+
+# ---------------------------------------------------------------------------
+# fuzzy_match_strings
+
+FUZZY_PREFIX_LEN = 24
+FUZZY_MAX_EDITS = 8
+
+
+def q_fuzzy_match_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Edit-distance record linkage: document pairs whose normalized
+    24-char prefixes are within 8 Levenshtein edits, within language
+    blocks — the string-similarity primitive behind entity resolution
+    and near-duplicate title/URL matching, on the built-in exact DP
+    (``F.levenshtein`` — JVM-side, no UDF; DuckDB's ``levenshtein``
+    computes the identical unit-cost distance, so the pairs match
+    exactly).
+
+    The lang-block pair join is quadratic within block — the standard
+    oracle-twin formulation (same contract as ``sim_join`` /
+    ``knn_graph``): at 100 TB the SAME verify step runs on banded
+    q-gram/MinHash candidates (``dedup_fuzzy``'s machinery) instead of
+    block pairs; Levenshtein-verify-after-candidate is the linkage
+    pipeline shape. The family's quadratic guard applies (fixture
+    footer row count, no Spark job — :mod:`.guards`): past the bound
+    this lane refuses and points at the candidate-based pipeline.
+    """
+
+    guard_fixture_quadratic(
+        sf_dir, "documents", "fuzzy_match_strings", "dedup_fuzzy"
+    )
+    d = load_table(spark, sf_dir, "documents")
+    p = d.select(
+        "doc_id",
+        "lang",
+        F.substring(F.lower("text"), 1, FUZZY_PREFIX_LEN).alias("pre"),
+    )
+    a = p.select(F.col("doc_id").alias("doc_a"), "lang", F.col("pre").alias("pre_a"))
+    b = p.select(F.col("doc_id").alias("doc_b"), "lang", F.col("pre").alias("pre_b"))
+    return (
+        a.join(b, "lang")
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .withColumn("edits", F.levenshtein("pre_a", "pre_b"))
+        .where(F.col("edits") <= FUZZY_MAX_EDITS)
+        .select("lang", "doc_a", "doc_b", "edits")
+    )
+
+
+SQL_FUZZY_MATCH_STRINGS = f"""
+WITH p AS (
+  SELECT doc_id, lang, substr(lower(text), 1, {FUZZY_PREFIX_LEN}) AS pre
+  FROM documents
+)
+SELECT a.lang, a.doc_id AS doc_a, b.doc_id AS doc_b,
+       levenshtein(a.pre, b.pre) AS edits
+FROM p a JOIN p b ON a.lang = b.lang AND a.doc_id < b.doc_id
+WHERE levenshtein(a.pre, b.pre) <= {FUZZY_MAX_EDITS}
+"""
+
+
+# ---------------------------------------------------------------------------
+# chunk_text
+
+CHUNK_TOKENS = 64
+CHUNK_OVERLAP = 16
+_CHUNK_STEP = CHUNK_TOKENS - CHUNK_OVERLAP
+
+
+def q_chunk_text(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Overlapping token-window chunking — the retrieval/embedding
+    ingestion shape: split each document into 64-token chunks with a
+    16-token overlap so no sentence is stranded on a boundary, and
+    emit (doc_id, chunk_id, start_pos, n_chunk_tokens, chunk_text).
+
+    Entirely Catalyst array algebra: split → ``sequence`` of chunk
+    starts → explode → ``slice`` + ``array_join``. Map-only (the
+    explode multiplies rows but introduces no shuffle); at 100 TB
+    chunking is scan-bound, exactly as the first pass of an embedding
+    pipeline must be. The trailing chunk keeps whatever remains (may
+    be short) — chunk starts advance by step = tokens − overlap from
+    position 1, so every token lands in ≥ 1 chunk and interior tokens
+    in exactly 1 + overlap/step on average.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select("doc_id", F.split("text", " ").alias("t")).withColumn(
+        "n", F.size("t")
+    )
+    starts = F.sequence(
+        F.lit(1),
+        F.greatest(F.col("n") - CHUNK_OVERLAP, F.lit(1)),
+        F.lit(_CHUNK_STEP),
+    )
+    return (
+        toks.select("doc_id", "n", "t", F.explode(starts).alias("start_pos"))
+        .withColumn("chunk", F.slice("t", F.col("start_pos"), CHUNK_TOKENS))
+        .select(
+            "doc_id",
+            ((F.col("start_pos") - 1) / _CHUNK_STEP + 1)
+            .cast("long")
+            .alias("chunk_id"),
+            "start_pos",
+            F.size("chunk").alias("n_chunk_tokens"),
+            F.array_join("chunk", " ").alias("chunk_text"),
+        )
+    )
+
+
+SQL_CHUNK_TEXT = f"""
+WITH tk AS (
+  SELECT doc_id, string_split(text, ' ') AS t,
+         len(string_split(text, ' ')) AS n
+  FROM documents
+),
+st AS (
+  SELECT doc_id, n, t,
+         unnest(generate_series(1, greatest(n - {CHUNK_OVERLAP}, 1),
+                                {_CHUNK_STEP})) AS start_pos
+  FROM tk
+)
+SELECT doc_id,
+       CAST((start_pos - 1) / {_CHUNK_STEP} + 1 AS BIGINT) AS chunk_id,
+       start_pos,
+       len(t[start_pos : start_pos + {CHUNK_TOKENS - 1}]) AS n_chunk_tokens,
+       array_to_string(t[start_pos : start_pos + {CHUNK_TOKENS - 1}], ' ')
+         AS chunk_text
+FROM st
+"""
+
+
+# ---------------------------------------------------------------------------
+# corpus_report
+
+
+def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The dataset-card row: one-line corpus summary a data release
+    ships with — document and token volume, language spread, the
+    exact-duplicate rate (by normalized-content fingerprint), and the
+    quality-gate keep rate (Gopher rules) — composed from the same
+    building blocks the individual operators grade.
+
+    Plan: one scan computes the volume/fingerprint aggregates
+    (map-side combinable; the distinct fingerprint count shuffles
+    md5 hashes, not text); the keep rate re-aggregates the
+    quality_gopher output (its own single scan); a cross join of two
+    one-row frames stitches the report. Rates use the exact decimal
+    mean pattern rounded to 6 dp.
+    """
+
+    d = load_table(spark, sf_dir, "documents")
+    norm_fp = F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")))
+    vol = d.agg(
+        F.count("*").alias("n_docs"),
+        F.countDistinct("lang").alias("n_langs"),
+        F.sum(F.size(F.split("text", " "))).alias("total_tokens"),
+        F.countDistinct(norm_fp).alias("n_unique"),
+    )
+    keep = q_quality_gopher(spark, sf_dir).agg(
+        F.sum(F.col("keep").cast("long")).alias("n_keep")
+    )
+    return vol.crossJoin(keep).select(
+        "n_docs",
+        "n_langs",
+        "total_tokens",
+        F.round(F.col("total_tokens") / F.col("n_docs"), 6).alias(
+            "avg_doc_tokens"
+        ),
+        (F.col("n_docs") - F.col("n_unique")).alias("n_exact_dups"),
+        F.round(
+            (F.col("n_docs") - F.col("n_unique")) / F.col("n_docs"), 6
+        ).alias("dup_rate"),
+        F.round(F.col("n_keep") / F.col("n_docs"), 6).alias("keep_rate"),
+    )
+
+
+# oracle: the volume aggregates inline; the keep count reuses the
+# quality_gopher oracle verbatim as a subquery (one source of truth
+# for the gate's SQL semantics)
+def _sql_corpus_report() -> str:
+    return f"""
+WITH vol AS (
+  SELECT COUNT(*) AS n_docs,
+         COUNT(DISTINCT lang) AS n_langs,
+         SUM(len(string_split(text, ' '))) AS total_tokens,
+         COUNT(DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))))
+           AS n_unique
+  FROM documents
+),
+keep AS (
+  SELECT SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS n_keep
+  FROM ({SQL_QUALITY_GOPHER}) g
+)
+SELECT n_docs, n_langs,
+       CAST(total_tokens AS BIGINT) AS total_tokens,
+       ROUND(CAST(total_tokens AS DOUBLE) / n_docs, 6) AS avg_doc_tokens,
+       CAST(n_docs - n_unique AS BIGINT) AS n_exact_dups,
+       ROUND(CAST(n_docs - n_unique AS DOUBLE) / n_docs, 6) AS dup_rate,
+       ROUND(CAST(n_keep AS DOUBLE) / n_docs, 6) AS keep_rate
+FROM vol CROSS JOIN keep
+"""
+
+
+SQL_CORPUS_REPORT = _sql_corpus_report()
+
+
+# --------------------------------------------------------------------
+# inverted_index
+# --------------------------------------------------------------------
+
+POSTINGS_CAP = 8  # doc ids retained per posting list (smallest-first)
+
+
+def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus inverted index: per term, the document frequency (df),
+    total occurrence count (tf), and a bounded posting list — the
+    first ``POSTINGS_CAP`` doc_ids ascending, comma-joined. The
+    retrieval-side artifact of a corpus build (term lookup, df-based
+    stopword discovery, seed postings for BM25), where
+    ``tfidf_top_terms`` ranks terms per document.
+
+    Scale shape: the posting list is CAPPED BEFORE aggregation — a
+    per-term row_number over the distinct (term, doc) pairs keeps
+    ≤ ``POSTINGS_CAP`` rows per term ahead of the collect, and Spark's
+    WindowGroupLimit pushes that rank filter below the exchange, so a
+    stopword's million-document posting list never materializes on one
+    task (the classic inverted-index skew trap; full postings would be
+    written sharded-by-(term, bucket), same keys, no collect). df and
+    tf come from map-side-combinable counts; the three term-keyed
+    aggregates co-partition, so AQE plans the final joins without an
+    extra shuffle of anything corpus-sized.
+    """
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.explode(F.split("text", " ")).alias("term")
+    )
+    tf = d.groupBy("term").agg(F.count("*").alias("tf"))
+    pairs = d.distinct()
+    df = pairs.groupBy("term").agg(F.count("*").alias("df"))
+    w = Window.partitionBy("term").orderBy("doc_id")
+    postings = (
+        pairs.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= POSTINGS_CAP)
+        .groupBy("term")
+        .agg(
+            F.array_join(F.sort_array(F.collect_list("doc_id")), ",").alias(
+                "postings"
+            )
+        )
+    )
+    # every side is vocabulary-sized — which GROWS with the corpus
+    # (typos, ids, rare tokens), so none may be broadcast-elected
+    # (the §45 rule); all three aggs share the term partitioning
+    return (
+        df.join(tf.hint("shuffle_hash"), "term")
+        .join(postings.hint("shuffle_hash"), "term")
+        .select("term", "df", "tf", "postings")
+    )
+
+
+SQL_INVERTED_INDEX = f"""
+WITH occ AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
+),
+pairs AS (SELECT DISTINCT term, doc_id FROM occ),
+tf AS (SELECT term, COUNT(*) AS tf FROM occ GROUP BY term),
+df AS (SELECT term, COUNT(*) AS df FROM pairs GROUP BY term),
+capped AS (
+  SELECT term, doc_id FROM (
+    SELECT term, doc_id,
+           ROW_NUMBER() OVER (PARTITION BY term ORDER BY doc_id) AS rn
+    FROM pairs
+  ) WHERE rn <= {POSTINGS_CAP}
+),
+p AS (
+  SELECT term, string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
+  FROM capped GROUP BY term
+)
+SELECT term, df.df, tf.tf, p.postings
+FROM df JOIN tf USING (term) JOIN p USING (term)
+"""
+
+
+# --------------------------------------------------------------------
+# rank_bm25
+# --------------------------------------------------------------------
+
+# Fixed query terms over the fixture vocabulary, chosen for an IDF
+# spread: "dup" is rare (df 25/500 at sf0.01 — high IDF, dominates the
+# ranking) while the others are near-ubiquitous (df ~380-400/500 — low
+# IDF, tf/length tie-breakers). Okapi constants k1 = 1.2, b = 0.75
+# (Robertson & Zaragoza, "The Probabilistic Relevance Framework:
+# BM25 and Beyond").
+BM25_TERMS = ("dup", "vector", "join", "scan")
+BM25_TOPK = 20
+
+# The per-(doc, term) BM25 contribution in MICRO units, as ONE shared
+# expression string evaluated verbatim by BOTH engines (the
+# corr_pearson rule: exact integer inputs — tf, df, dl, n_docs,
+# total_len — cast to double once, a pinned IEEE op sequence, then
+# micro-quantize; identical text ⇒ identical double ops ⇒ identical
+# bits on one libm). avgdl never materializes: dl/avgdl is computed
+# as dl * n_docs / total_len to keep the operand order pinned.
+_BM25_MICRO_EXPR = (
+    "CAST(ROUND("
+    "ln(1.0 + (CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5))"
+    " * ((CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE)"
+    " + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) * CAST(n_docs AS DOUBLE)"
+    " / CAST(total_len AS DOUBLE)))))"
+    " * 1000000, 0) AS BIGINT)"
+)
+
+
+def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, n_hit_terms, micro_score) for every document matching
+    ≥ 1 query term — the shared core of :func:`q_rank_bm25` (top-k)
+    and :func:`q_rank_fusion_rrf` (hybrid fusion)."""
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("w")
+    )
+    tf = (
+        toks.where(F.col("w").isin(*BM25_TERMS))
+        .groupBy("doc_id", "w")
+        .agg(F.count("*").alias("tf"))
+    )
+    df_tbl = tf.groupBy("w").agg(F.count("*").alias("df"))
+    doclen = d.select(
+        "doc_id", F.size(F.split("text", " ")).alias("dl")
+    )
+    stats = d.select(F.size(F.split("text", " ")).alias("dl0")).agg(
+        F.count("*").alias("n_docs"),
+        F.sum("dl0").alias("total_len"),
+    )
+    return (
+        tf.join(F.broadcast(df_tbl), "w")
+        .join(doclen.hint("shuffle_hash"), "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .select(
+            "doc_id", F.expr(_BM25_MICRO_EXPR).alias("micro")
+        )
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias("n_hit_terms"),
+            F.sum("micro").alias("micro_score"),
+        )
+    )
+
+
+def q_rank_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Okapi BM25 retrieval scoring: the top-``BM25_TOPK`` documents
+    for a fixed multi-term query, scored from exact corpus statistics
+    — the ranking half of the retrieval story whose artifact half is
+    ``inverted_index`` (its postings are exactly the (term → doc, tf)
+    pairs this query joins).
+
+    Scale shape: the token explode is filtered to the query terms
+    MAP-SIDE (a 4-literal isin before any exchange, so only matching
+    tokens ever shuffle); per-doc tf is one combinable groupBy; the
+    df table is bounded by |query| (a provably safe broadcast, the
+    ``vocab_coverage`` rule); corpus stats (n_docs, total_len) are a
+    one-row aggregate cross-joined as a broadcast; doc lengths join
+    the tf pairs with a shuffle_hash pin (both sides are
+    corpus-proportional — df of a common term is O(corpus) — so
+    letting Catalyst broadcast the post-explode side would be the
+    driver-OOM trap, SCALE.md §3). The final top-k is
+    TakeOrderedAndProject — never a single-task global sort — with a
+    row_number window only over the ≤ ``BM25_TOPK`` survivors.
+
+    Exactness: per-(doc, term) scores are micro-quantized through one
+    shared expression string (see ``_BM25_MICRO_EXPR``) and summed as
+    int64; ranking ties break on doc_id. The reported score is the
+    one exact int→double projection.
+    """
+    scored = _bm25_scored(spark, sf_dir)
+    topk = scored.orderBy(
+        F.desc("micro_score"), F.col("doc_id")
+    ).limit(BM25_TOPK)
+    w = Window.orderBy(F.desc("micro_score"), F.col("doc_id"))
+    return topk.select(
+        F.row_number().over(w).alias("rank"),
+        "doc_id",
+        "n_hit_terms",
+        (F.col("micro_score").cast("double") / 1e6).alias("score"),
+    )
+
+
+_BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_TERMS)
+# The scored-docs CTE chain, factored so the RRF fusion oracle embeds
+# the IDENTICAL text (oracle drift between the standalone and fused
+# BM25 would be a silent correctness hole).
+_SQL_BM25_SCORED = f"""
+WITH toks AS (
+  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
+),
+tf AS (
+  SELECT doc_id, w, COUNT(*) AS tf FROM toks
+  WHERE w IN ({_BM25_TERMS_SQL}) GROUP BY doc_id, w
+),
+df_tbl AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
+doclen AS (SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents),
+stats AS (
+  SELECT COUNT(*) AS n_docs,
+         CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS total_len
+  FROM documents
+),
+scored AS (
+  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_hit_terms,
+         CAST(SUM({_BM25_MICRO_EXPR}) AS BIGINT) AS micro_score
+  FROM tf JOIN df_tbl USING (w) JOIN doclen USING (doc_id)
+  CROSS JOIN stats
+  GROUP BY doc_id
+)
+SELECT doc_id, n_hit_terms, micro_score FROM scored
+"""
+
+SQL_RANK_BM25 = f"""
+WITH bm_scored AS ({_SQL_BM25_SCORED})
+SELECT CAST(ROW_NUMBER() OVER (ORDER BY micro_score DESC, doc_id) AS INT)
+         AS rank,
+       doc_id, n_hit_terms,
+       CAST(micro_score AS DOUBLE) / 1000000.0 AS score
+FROM bm_scored
+ORDER BY micro_score DESC, doc_id
+LIMIT {BM25_TOPK}
+"""
+
+
+# --------------------------------------------------------------------
+# rank_fusion_rrf
+# --------------------------------------------------------------------
+
+# Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR'09):
+# score(d) = sum over rankings of 1/(k + rank_d), k = 60 — the
+# training-free hybrid-retrieval combiner. Lists are truncated to the
+# top RRF_LIST_N before fusing, which is both the standard practice
+# and the scale story: everything after the two TakeOrdered heads is
+# constant-size.
+RRF_K = 60
+RRF_LIST_N = 50
+RRF_TOPK = 20
+
+# one shared expression (the _BM25_MICRO_EXPR rule): CAST(1 AS DOUBLE)
+# forces double division in BOTH engines — a bare 1.0 literal is
+# DECIMAL in Spark SQL and its division rounds differently
+_RRF_MICRO_EXPR = (
+    f"CAST(ROUND((COALESCE(CAST(1 AS DOUBLE) / ({RRF_K} + ra), CAST(0 AS DOUBLE))"
+    f" + COALESCE(CAST(1 AS DOUBLE) / ({RRF_K} + rb), CAST(0 AS DOUBLE)))"
+    f" * 1000000, 0) AS BIGINT)"
+)
+
+
+def q_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hybrid retrieval: fuse the lexical BM25 ranking
+    (:func:`_bm25_scored`) with the LM-fluency ranking
+    (``lm_unigram_score``'s avg_nll, ascending — a quality prior) by
+    reciprocal-rank fusion. RRF is the production hybrid-search
+    combiner (lexical + semantic/quality lists) precisely because it
+    needs no score calibration — only ranks — so two incomparable
+    scoring scales compose without tuning.
+
+    Scale shape: each list is a TakeOrderedAndProject head (never a
+    global sort); ranks come from row_number windows over the ≤
+    ``RRF_LIST_N`` survivors; the full-outer join and final top-k run
+    on constant-size frames. Exactness: ranks are exact ints, the
+    1/(k+r) terms are the same pinned double expression in both
+    engines, micro-quantized once.
+    """
+
+    bm = (
+        _bm25_scored(spark, sf_dir)
+        .orderBy(F.desc("micro_score"), F.col("doc_id"))
+        .limit(RRF_LIST_N)
+    )
+    wa = Window.orderBy(F.desc("micro_score"), F.col("doc_id"))
+    bm_top = bm.select(
+        "doc_id", F.row_number().over(wa).alias("ra")
+    )
+    lm = (
+        q_lm_unigram_score(spark, sf_dir)
+        .orderBy(F.asc("avg_nll"), F.col("doc_id"))
+        .limit(RRF_LIST_N)
+    )
+    wb = Window.orderBy(F.asc("avg_nll"), F.col("doc_id"))
+    lm_top = lm.select(
+        "doc_id", F.row_number().over(wb).alias("rb")
+    )
+    fused = bm_top.join(lm_top, "doc_id", "full_outer").select(
+        "doc_id", "ra", "rb", F.expr(_RRF_MICRO_EXPR).alias("micro")
+    )
+    top = fused.orderBy(F.desc("micro"), F.col("doc_id")).limit(RRF_TOPK)
+    wr = Window.orderBy(F.desc("micro"), F.col("doc_id"))
+    return top.select(
+        F.row_number().over(wr).alias("rank"),
+        "doc_id",
+        F.col("ra").alias("bm25_rank"),
+        F.col("rb").alias("lm_rank"),
+        (F.col("micro").cast("double") / 1e6).alias("rrf_score"),
+    )
+
+
+def _sql_rank_fusion_rrf() -> str:
+    # late import would be circular at module load; the lm oracle text
+    # is embedded verbatim as a nested-WITH subquery so the fused and
+    # standalone lm rankings can never drift
+
+    return f"""
+WITH bm_scored AS ({_SQL_BM25_SCORED}),
+lm AS ({SQL_LM_UNIGRAM_SCORE}),
+bm_top AS (
+  SELECT doc_id,
+         CAST(ROW_NUMBER() OVER (ORDER BY micro_score DESC, doc_id) AS INT)
+           AS ra
+  FROM bm_scored ORDER BY micro_score DESC, doc_id LIMIT {RRF_LIST_N}
+),
+lm_top AS (
+  SELECT doc_id,
+         CAST(ROW_NUMBER() OVER (ORDER BY avg_nll ASC, doc_id) AS INT) AS rb
+  FROM lm ORDER BY avg_nll ASC, doc_id LIMIT {RRF_LIST_N}
+),
+fused AS (
+  SELECT COALESCE(b.doc_id, l.doc_id) AS doc_id, ra, rb,
+         {_RRF_MICRO_EXPR} AS micro
+  FROM bm_top b FULL OUTER JOIN lm_top l ON b.doc_id = l.doc_id
+)
+SELECT CAST(ROW_NUMBER() OVER (ORDER BY micro DESC, doc_id) AS INT) AS rank,
+       doc_id, ra AS bm25_rank, rb AS lm_rank,
+       CAST(micro AS DOUBLE) / 1000000.0 AS rrf_score
+FROM fused ORDER BY micro DESC, doc_id LIMIT {RRF_TOPK}
+"""
+
+
+# --------------------------------------------------------------------
+# ccnet_buckets
+# --------------------------------------------------------------------
+
+CCNET_N_BUCKETS = 3
+
+
+def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CCNet-style perplexity bucketing (Wenzek et al. 2019): per
+    language, rank every document by the corpus-trained unigram-LM
+    fluency score (``lm_unigram_score.avg_nll``, ascending — low =
+    stereotypical, high = rare/garbled), NTILE(3) the ranking into
+    head/middle/tail, and report per-(lang, bucket) document count,
+    token mass, and the score range. CCNet keeps "head" (and samples
+    "middle") when building training corpora; this operator is the
+    partition that decision reads.
+
+    Determinism: ``avg_nll`` is the fixed-point lane that is already
+    bitwise-equal across engines, and the NTILE order is the total
+    order (avg_nll, doc_id), so bucket boundaries cannot drift.
+    NTILE's fill rule (earlier buckets one larger on non-divisible
+    partitions) is the same in Spark and DuckDB.
+
+    Scale shape: scoring is the lm lane (one token shuffle + broadcast
+    vocab); the NTILE is one window sort PER LANGUAGE — at 100 TB the
+    same partition comes from approx-quantile cutpoints (two passes,
+    no sort) as CCNet itself does; the exact NTILE is the
+    oracle-checkable fixture form of the same contract.
+    """
+
+    lm = q_lm_unigram_score(spark, sf_dir)
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
+    j = lm.join(d, "doc_id")
+    w = Window.partitionBy("lang").orderBy("avg_nll", "doc_id")
+    t = j.select(
+        "lang",
+        "n_words",
+        "avg_nll",
+        F.ntile(CCNET_N_BUCKETS).over(w).alias("b"),
+    )
+    bucket = (
+        F.when(F.col("b") == 1, "head")
+        .when(F.col("b") == 2, "middle")
+        .otherwise("tail")
+    )
+    return (
+        t.select("lang", bucket.alias("bucket"), "n_words", "avg_nll")
+        .groupBy("lang", "bucket")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_words").alias("n_tokens"),
+            F.min("avg_nll").alias("min_nll"),
+            F.max("avg_nll").alias("max_nll"),
+        )
+    )
+
+
+def _sql_ccnet_buckets() -> str:
+    # embedded verbatim (the rank_fusion_rrf convention) so the bucket
+    # partition and the standalone lm score can never drift
+
+    return f"""
+WITH lm AS ({SQL_LM_UNIGRAM_SCORE}),
+j AS (
+  SELECT l.doc_id, l.n_words, l.avg_nll, d.lang
+  FROM lm l JOIN documents d USING (doc_id)
+),
+t AS (
+  SELECT lang, n_words, avg_nll,
+         NTILE({CCNET_N_BUCKETS})
+           OVER (PARTITION BY lang ORDER BY avg_nll, doc_id) AS b
+  FROM j
+)
+SELECT lang,
+       CASE WHEN b = 1 THEN 'head'
+            WHEN b = 2 THEN 'middle'
+            ELSE 'tail' END AS bucket,
+       COUNT(*) AS n_docs,
+       CAST(SUM(n_words) AS BIGINT) AS n_tokens,
+       MIN(avg_nll) AS min_nll,
+       MAX(avg_nll) AS max_nll
+FROM t
+GROUP BY 1, 2
+"""
+
+
+# --------------------------------------------------------------------
+# lm_bigram_score
+# --------------------------------------------------------------------
+
+LM_BIGRAM_VOCAB = 1024
+
+# 1-word documents produce no bigrams and drop out of the score on
+# BOTH engines (inner explode). Spark's sequence(1, n) DESCENDS when
+# n < 1, so the empty case must be guarded explicitly; DuckDB's
+# generate_series is empty there already.
+_BIGRAMS_EXPR = (
+    "CASE WHEN size(t) < 2 THEN array() "
+    "ELSE transform(sequence(1, size(t) - 1),"
+    " i -> concat(element_at(t, i), ' ', element_at(t, i + 1))) END"
+)
+
+
+def q_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bigram surprisal scoring: per document, the mean negative log2
+    JOINT frequency of its word bigrams under the corpus's top-V
+    bigram distribution (V = {LM_BIGRAM_VOCAB}, count-ordered, ties by
+    bigram text; unseen bigrams get the add-half pseudo-count) — the
+    order-sensitive fluency signal next to ``lm_unigram_score``'s
+    bag-of-words one. Word-salad text with a plausible vocabulary
+    (which unigram scoring cannot see through) scores poorly here
+    because its ADJACENCIES are rare; that gap between the two scores
+    is itself a quality feature (CCNet-style LM filtering, Wenzek et
+    al. 2019, at the fixture-honest n-gram order).
+
+    Same fixed-point discipline as the unigram lane (which pinned it
+    the hard way at sf0.1): per-bigram nll quantized to integer
+    micro-nll, summed exactly in int64, one half-up integer division
+    for the mean. Scale shape identical too: one map-side-combinable
+    bigram count, a count-ordered LIMIT for the top-V table, one
+    broadcast of the fixed-size vocab onto the bigram stream, one
+    doc_id shuffle for the per-doc mean.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    bigrams = d.select(
+        "doc_id", F.split("text", " ").alias("t")
+    ).select("doc_id", F.explode(F.expr(_BIGRAMS_EXPR)).alias("bg"))
+    cnt = bigrams.groupBy("bg").agg(F.count("*").alias("c"))
+    total = cnt.agg(F.sum("c").alias("n_total"))
+    vocab = cnt.orderBy(F.desc("c"), "bg").limit(LM_BIGRAM_VOCAB)
+    scored = (
+        bigrams.join(F.broadcast(vocab), "bg", "left")
+        .crossJoin(F.broadcast(total))
+        .select(
+            "doc_id",
+            F.col("c").isNull().alias("oov"),
+            F.round(
+                -F.log2(
+                    F.coalesce(F.col("c").cast("double"), F.lit(0.5))
+                    / F.col("n_total")
+                )
+                * 1_000_000,
+                0,
+            )
+            .cast("long")
+            .alias("micro_nll"),
+        )
+    )
+    return (
+        scored.groupBy("doc_id")
+        .agg(
+            F.count("*").alias("n_bigrams"),
+            F.sum(F.col("oov").cast("int")).alias("n_oov"),
+            F.sum("micro_nll").alias("s"),
+        )
+        .select(
+            "doc_id",
+            "n_bigrams",
+            "n_oov",
+            (
+                F.expr("(2 * s + n_bigrams) div (2 * n_bigrams)").cast(
+                    "double"
+                )
+                / F.lit(1_000_000.0)
+            ).alias("avg_nll"),
+        )
+    )
+
+
+SQL_LM_BIGRAM_SCORE = f"""
+WITH bg AS (
+  SELECT doc_id,
+         unnest([t[i] || ' ' || t[i+1]
+                 for i in generate_series(1, len(t) - 1)]) AS bg
+  FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
+),
+cnt AS (SELECT bg, COUNT(*) AS c FROM bg GROUP BY bg),
+tot AS (SELECT SUM(c) AS n_total FROM cnt),
+vocab AS (SELECT bg, c FROM cnt ORDER BY c DESC, bg LIMIT {LM_BIGRAM_VOCAB}),
+scored AS (
+  SELECT b.doc_id,
+         v.c IS NULL AS oov,
+         CAST(ROUND(-log2(COALESCE(CAST(v.c AS DOUBLE), 0.5) / t.n_total)
+                    * 1000000, 0) AS BIGINT) AS micro_nll
+  FROM bg b LEFT JOIN vocab v USING (bg) CROSS JOIN tot t
+),
+agg AS (
+  SELECT doc_id, COUNT(*) AS n_bigrams,
+         CAST(SUM(CASE WHEN oov THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
+         SUM(micro_nll) AS s
+  FROM scored GROUP BY doc_id
+)
+SELECT doc_id, n_bigrams, n_oov,
+       CAST((2 * s + n_bigrams) // (2 * n_bigrams) AS DOUBLE) / 1000000.0
+         AS avg_nll
+FROM agg
+"""
+
+
+# --------------------------------------------------------------------
+# bpe_fertility
+# --------------------------------------------------------------------
+
+# Guarded like every micro expression (the 0/0 standard): groups only
+# form from rows with >= 1 token, so the denominators are positive by
+# construction — the CASE documents the policy rather than papering
+# over a reachable state.
+_FERT_EXPR = (
+    "CASE WHEN n_words = 0 THEN CAST(0 AS BIGINT)"
+    " ELSE CAST(ROUND((CAST(1000000 AS DOUBLE) * n_bpe_tokens) / n_words,"
+    " 0) AS BIGINT) END"
+)
+_CPT_EXPR = (
+    "CASE WHEN n_bpe_tokens = 0 THEN CAST(0 AS BIGINT)"
+    " ELSE CAST(ROUND((CAST(1000000 AS DOUBLE) * n_chars) / n_bpe_tokens,"
+    " 0) AS BIGINT) END"
+)
+
+
+def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-language tokenizer-fertility report over the learned BPE
+    tokenizer (``bpe_merges`` / ``bpe_apply``'s model, reused) — the
+    table a multilingual training pipeline reads before trusting one
+    tokenizer across languages: fertility (BPE tokens per word) and
+    compression (chars per BPE token) both in micros, with the doc /
+    word / char / token volumes they derive from. A language whose
+    fertility runs far above the corpus mean is under-served by the
+    merge table (its words stay fragmented), which inflates its
+    effective sequence lengths and shrinks its effective context —
+    the standard reason tokenizer audits are per-language (SURVEY §2B
+    text-analysis family; fertility is the metric multilingual
+    tokenizer papers report).
+
+    Scale shape (inherits ``bpe_apply``'s): the merged symbol form is
+    computed once per DISTINCT word; the corpus-sized work is one
+    token explode joined to that vocabulary table
+    (shuffle_hash-pinned — vocabulary grows with the corpus) and one
+    |languages|-group combinable aggregate. ``n_docs`` counts
+    documents contributing ≥ 1 non-empty token (the same universe the
+    other volumes are summed over).
+    """
+
+    _, base, s_col = _bpe_learn(spark, sf_dir)
+    word_sym = base.select(
+        "w",
+        F.length(
+            F.replace(F.trim(s_col), F.lit(" "), F.lit(""))
+        ).cast("long").alias("n_chars_w"),
+        F.size(F.split(F.trim(s_col), " ")).cast("long").alias("n_sym_w"),
+    )
+    d = load_table(spark, sf_dir, "documents")
+    toks = d.select(
+        "doc_id", "lang", F.explode(F.split("text", " ")).alias("w")
+    ).where(F.col("w") != "")
+    out = (
+        toks.join(word_sym.hint("shuffle_hash"), "w")
+        .groupBy("lang")
+        .agg(
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.count("*").alias("n_words"),
+            F.sum("n_chars_w").alias("n_chars"),
+            F.sum("n_sym_w").alias("n_bpe_tokens"),
+        )
+        .select(
+            "lang",
+            "n_docs",
+            "n_words",
+            "n_chars",
+            "n_bpe_tokens",
+            F.expr(_FERT_EXPR).alias("fertility_micro"),
+            F.expr(_CPT_EXPR).alias("chars_per_token_micro"),
+        )
+    )
+    base.unpersist()  # lineage stays valid; cache only served the loop
+    return out
+
+
+def _sql_bpe_fertility() -> str:
+    chain = SQL_BPE_MERGES[: SQL_BPE_MERGES.rindex("\nSELECT CAST(1 AS")]
+    return f"""{chain},
+ws AS (
+  SELECT w,
+         CAST(length(replace(trim(s), ' ', '')) AS BIGINT) AS n_chars_w,
+         CAST(len(string_split(trim(s), ' ')) AS BIGINT) AS n_sym_w
+  FROM s{BPE_ROUNDS}
+),
+toks AS (
+  SELECT doc_id, lang, w FROM (
+    SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
+    FROM documents
+  ) WHERE w <> ''
+),
+g AS (
+  SELECT lang,
+         CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
+         CAST(COUNT(*) AS BIGINT) AS n_words,
+         CAST(SUM(ws.n_chars_w) AS BIGINT) AS n_chars,
+         CAST(SUM(ws.n_sym_w) AS BIGINT) AS n_bpe_tokens
+  FROM toks JOIN ws ON toks.w = ws.w
+  GROUP BY lang
+)
+SELECT lang, n_docs, n_words, n_chars, n_bpe_tokens,
+       {_FERT_EXPR} AS fertility_micro,
+       {_CPT_EXPR} AS chars_per_token_micro
+FROM g
+"""
+
+
 QUERIES: list[Query] = [
     Query("text_stats", q_text_stats, SQL_TEXT_STATS, ("llm", "text"), bench=True),
     Query(
@@ -2859,5 +3865,79 @@ QUERIES: list[Query] = [
         q_eval_lang_confusion,
         SQL_EVAL_LANG_CONFUSION,
         ("llm", "evaluation", "text", "quality"),
+    ),
+    Query(
+        "map_in_pandas_tokens",
+        q_map_in_pandas_tokens,
+        SQL_MAP_IN_PANDAS_TOKENS,
+        ("llm", "udf"),
+    ),
+    Query(
+        "text_normalize",
+        q_text_normalize,
+        SQL_TEXT_NORMALIZE,
+        ("llm", "text"),
+    ),
+    Query(
+        "lm_unigram_score",
+        q_lm_unigram_score,
+        SQL_LM_UNIGRAM_SCORE,
+        ("llm", "text", "quality"),
+        bench=True,  # broadcast-vocab scoring over the token stream
+    ),
+    Query(
+        "fuzzy_match_strings",
+        q_fuzzy_match_strings,
+        SQL_FUZZY_MATCH_STRINGS,
+        ("llm", "text", "linkage"),
+    ),
+    Query(
+        "chunk_text",
+        q_chunk_text,
+        SQL_CHUNK_TEXT,
+        ("llm", "text", "rag"),
+        bench=True,  # the explode-heavy map-only representative
+    ),
+    Query(
+        "corpus_report",
+        q_corpus_report,
+        SQL_CORPUS_REPORT,
+        ("llm", "text", "report"),
+    ),
+    Query(
+        "inverted_index",
+        q_inverted_index,
+        SQL_INVERTED_INDEX,
+        ("llm", "text", "retrieval"),
+    ),
+    Query(
+        "rank_bm25",
+        q_rank_bm25,
+        SQL_RANK_BM25,
+        ("llm", "text", "retrieval", "ranking"),
+    ),
+    Query(
+        "rank_fusion_rrf",
+        q_rank_fusion_rrf,
+        _sql_rank_fusion_rrf(),
+        ("llm", "text", "retrieval", "ranking"),
+    ),
+    Query(
+        "ccnet_buckets",
+        q_ccnet_buckets,
+        _sql_ccnet_buckets(),
+        ("llm", "text", "quality", "mixing"),
+    ),
+    Query(
+        "lm_bigram_score",
+        q_lm_bigram_score,
+        SQL_LM_BIGRAM_SCORE,
+        ("llm", "text", "quality"),
+    ),
+    Query(
+        "bpe_fertility",
+        q_bpe_fertility,
+        _sql_bpe_fertility(),
+        ("llm", "text", "tokenizer", "evaluation"),
     ),
 ]

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.numeric import davg, davg_sql
+from ..functions.numeric import MICRO_MEAN_EXPR, davg, davg_sql
 from ..functions.text import (
     STOPWORDS,
     alpha_ratio,
@@ -22,6 +22,7 @@ from ..functions.text import (
 )
 from ..plans.spec import Query
 from ..sources.catalog import load_table, spread
+
 
 # First 4 hex chars of md5(doc_id) below this bound → test split.
 # 0x1999 / 0x10000 ≈ 10.0%. Lowercase-hex string comparison IS numeric
@@ -1380,7 +1381,7 @@ NUM_SHARDS = 16
 # 12 hex digits = 48 bits: the per-doc fingerprint integer is exact in
 # a double on both engines (< 2^53), so the DuckDB mirror can rebuild
 # it with double powers and CAST once — same reasoning as
-# relational6._HEX_DENOM, widened from 24 to 48 bits because the XOR
+# _HEX_DENOM (sample_weighted), widened from 24 to 48 bits because the XOR
 # below wants collision-resistant content checksums, not sample keys.
 _FP_HEX_DIGITS = 12
 
@@ -1611,18 +1612,51 @@ BOOT_HI_RANK = -(-975 * BOOT_B // 1000)
 BOOT_LO_SEL = "(25 * nrep + 999) {div} 1000"
 BOOT_HI_SEL = "(975 * nrep + 999) {div} 1000"
 
-# Replicate mean in micro-dollars: the midpoint-free half-up integer
-# division (2·10⁴·swc + sw) div (2·sw) on decimal(38,0) ↔ HUGEINT
-# (the _COMM_TRANS_EXPR house form; half-up == half-away on the
-# non-negative operands here). ADVICE r12: the earlier double-ROUND
-# form was deterministic and cross-engine identical but left exact
-# integer arithmetic once 10⁴·swc crossed 2^53 (~sf0.1 already); this
-# form never leaves the exact integer domain.
-_BOOT_MEAN_EXPR = (
-    "CASE WHEN sw = 0 THEN CAST(NULL AS BIGINT)"
-    " ELSE CAST((2 * CAST(10000 AS {big}) * CAST(swc AS {big}) + sw)"
-    " {div} (2 * CAST(sw AS {big})) AS BIGINT) END"
-)
+# The replicate ids 0..BOOT_B-1 as a VALUES row list, for both engines.
+BOOT_VALUES = ", ".join(f"({b})" for b in range(BOOT_B))
+
+
+def boot_replicates(spark: SparkSession) -> DataFrame:
+    """The replicate ids as a BOOT_B-row frame with one column ``b``."""
+    return spark.sql(f"SELECT * FROM VALUES {BOOT_VALUES} AS t(b)")
+
+
+def boot_ci(
+    g: DataFrame, key: str | None, value: str, rep: str = "b", unit: str = "micro"
+) -> DataFrame:
+    """``n_replicates`` and the bounds ``ci_lo_<unit>``/``ci_hi_<unit>``
+    per ``key`` (one global group when ``key`` is None): the replicate
+    values of ``value`` at ranks BOOT_LO_SEL and BOOT_HI_SEL, ties broken
+    by the replicate id ``rep``, so the bounds are picked, never
+    interpolated."""
+    part = Window.partitionBy(F.lit(0) if key is None else key)
+    ranked = g.withColumn(
+        "rn", F.row_number().over(part.orderBy(value, rep))
+    ).withColumn("nrep", F.count("*").over(part))
+    return ranked.groupBy(*([] if key is None else [key])).agg(
+        F.count("*").alias("n_replicates"),
+        *(
+            F.max(F.when(F.col("rn") == F.expr(sel.format(div="div")), F.col(value)))
+            .alias(f"ci_{end}_{unit}")
+            for sel, end in ((BOOT_LO_SEL, "lo"), (BOOT_HI_SEL, "hi"))
+        ),
+    )
+
+
+def sql_boot_ci(value: str, unit: str = "micro") -> str:
+    """The two bound columns of :func:`boot_ci` as a SQL select list
+    over a frame carrying ``rn`` and ``nrep``."""
+    return ",\n       ".join(
+        f"MAX(CASE WHEN rn = {sel.format(div='//')} THEN {value} END)"
+        f" AS ci_{end}_{unit}"
+        for sel, end in ((BOOT_LO_SEL, "lo"), (BOOT_HI_SEL, "hi"))
+    )
+
+
+# Replicate mean in micro-dollars (half-up == half-away on the
+# non-negative operands here). A double-ROUND form left exact integer
+# arithmetic once 10⁴·swc crossed 2^53 (~sf0.1 already).
+_BOOT_MEAN_EXPR = MICRO_MEAN_EXPR.format(n="sw", s="swc", big="{big}", div="{div}")
 
 
 def q_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1668,8 +1702,7 @@ def q_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     (status, b) aggregate, then a ≤ B-row per-group window for the
     rank selection. Zero joins, zero broadcasts.
     """
-    b_lit = ", ".join(f"({b})" for b in range(BOOT_B))
-    reps = spark.sql(f"SELECT * FROM VALUES {b_lit} AS t(b)")
+    reps = boot_replicates(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderstatus").alias("status"),
@@ -1692,26 +1725,12 @@ def q_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = g.withColumn(
         "mean_micro", F.expr(_BOOT_MEAN_EXPR.format(big=dec, div="div"))
     ).where(F.col("mean_micro").isNotNull())
-    win = Window.partitionBy("status").orderBy("mean_micro", "b")
-    ranked = g.withColumn("rn", F.row_number().over(win)).withColumn(
-        "nrep", F.count("*").over(Window.partitionBy("status"))
-    )
-    lo_sel, hi_sel = BOOT_LO_SEL.format(div="div"), BOOT_HI_SEL.format(div="div")
-    return ranked.groupBy("status").agg(
-        F.count("*").alias("n_replicates"),
-        F.max(
-            F.when(F.col("rn") == F.expr(lo_sel), F.col("mean_micro"))
-        ).alias("ci_lo_micro"),
-        F.max(
-            F.when(F.col("rn") == F.expr(hi_sel), F.col("mean_micro"))
-        ).alias("ci_hi_micro"),
-    )
+    return boot_ci(g, "status", "mean_micro")
 
 
 def _sql_bootstrap_ci_mean() -> str:
-    b_lit = ", ".join(f"({b})" for b in range(BOOT_B))
     return f"""
-WITH reps AS (SELECT * FROM (VALUES {b_lit}) AS t(b)),
+WITH reps AS (SELECT * FROM (VALUES {BOOT_VALUES}) AS t(b)),
 o AS (
   SELECT o_orderkey, o_orderstatus AS status,
          CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS cents
@@ -1745,10 +1764,7 @@ r AS (
 )
 SELECT status,
        CAST(COUNT(*) AS BIGINT) AS n_replicates,
-       MAX(CASE WHEN rn = {BOOT_LO_SEL.format(div="//")} THEN mean_micro END)
-         AS ci_lo_micro,
-       MAX(CASE WHEN rn = {BOOT_HI_SEL.format(div="//")} THEN mean_micro END)
-         AS ci_hi_micro
+       {sql_boot_ci("mean_micro")}
 FROM r GROUP BY status
 """
 
@@ -1800,8 +1816,7 @@ def q_bootstrap_ci_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mean lane: broadcast ×B explode, one combinable (status, b)
     aggregate, the bounded rank window. Zero data joins.
     """
-    b_lit = ", ".join(f"({b})" for b in range(BOOT_B))
-    reps = spark.sql(f"SELECT * FROM VALUES {b_lit} AS t(b)")
+    reps = boot_replicates(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderstatus").alias("status"),
@@ -1826,20 +1841,7 @@ def q_bootstrap_ci_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ratio_micro",
         F.expr(_BOOT_RATIO_EXPR.format(big="decimal(38,0)", div="div")),
     ).where(F.col("ratio_micro").isNotNull())
-    win = Window.partitionBy("status").orderBy("ratio_micro", "b")
-    ranked = g.withColumn("rn", F.row_number().over(win)).withColumn(
-        "nrep", F.count("*").over(Window.partitionBy("status"))
-    )
-    lo_sel, hi_sel = BOOT_LO_SEL.format(div="div"), BOOT_HI_SEL.format(div="div")
-    ci = ranked.groupBy("status").agg(
-        F.count("*").alias("n_replicates"),
-        F.max(
-            F.when(F.col("rn") == F.expr(lo_sel), F.col("ratio_micro"))
-        ).alias("ci_lo_micro"),
-        F.max(
-            F.when(F.col("rn") == F.expr(hi_sel), F.col("ratio_micro"))
-        ).alias("ci_hi_micro"),
-    )
+    ci = boot_ci(g, "status", "ratio_micro")
     return ci.join(F.broadcast(plain), "status").select(
         "status",
         "n_orders",
@@ -1854,9 +1856,8 @@ def q_bootstrap_ci_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_bootstrap_ci_ratio() -> str:
-    b_lit = ", ".join(f"({b})" for b in range(BOOT_B))
     return f"""
-WITH reps AS (SELECT * FROM (VALUES {b_lit}) AS t(b)),
+WITH reps AS (SELECT * FROM (VALUES {BOOT_VALUES}) AS t(b)),
 o AS (
   SELECT o_orderkey, o_orderstatus AS status,
          CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END AS u
@@ -1896,10 +1897,7 @@ r AS (
 ci AS (
   SELECT status,
          CAST(COUNT(*) AS BIGINT) AS n_replicates,
-         MAX(CASE WHEN rn = {BOOT_LO_SEL.format(div="//")} THEN ratio_micro END)
-           AS ci_lo_micro,
-         MAX(CASE WHEN rn = {BOOT_HI_SEL.format(div="//")} THEN ratio_micro END)
-           AS ci_hi_micro
+         {sql_boot_ci("ratio_micro")}
   FROM r GROUP BY status
 )
 SELECT ci.status, n_orders, n_urgent,
@@ -1955,8 +1953,7 @@ def q_bootstrap_ci_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the effective count. Everything stays integer cents end-to-end —
     this lane has NO division but the two integer thr computations.
     """
-    b_lit = ", ".join(f"({b})" for b in range(BOOT_B))
-    reps = spark.sql(f"SELECT * FROM VALUES {b_lit} AS t(b)")
+    reps = boot_replicates(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderstatus").alias("status"),
@@ -1998,20 +1995,7 @@ def q_bootstrap_ci_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("status", "b")
         .agg(F.min("cents").alias("med_cents"))
     )
-    win = Window.partitionBy("status").orderBy("med_cents", "b")
-    ranked = med.withColumn("rn", F.row_number().over(win)).withColumn(
-        "nrep", F.count("*").over(Window.partitionBy("status"))
-    )
-    lo_sel, hi_sel = BOOT_LO_SEL.format(div="div"), BOOT_HI_SEL.format(div="div")
-    ci = ranked.groupBy("status").agg(
-        F.count("*").alias("n_replicates"),
-        F.max(
-            F.when(F.col("rn") == F.expr(lo_sel), F.col("med_cents"))
-        ).alias("ci_lo_cents"),
-        F.max(
-            F.when(F.col("rn") == F.expr(hi_sel), F.col("med_cents"))
-        ).alias("ci_hi_cents"),
-    )
+    ci = boot_ci(med, "status", "med_cents", unit="cents")
     return ci.join(F.broadcast(plain), "status").select(
         "status",
         "n_orders",
@@ -2023,9 +2007,8 @@ def q_bootstrap_ci_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_bootstrap_ci_quantile() -> str:
-    b_lit = ", ".join(f"({b})" for b in range(BOOT_B))
     return f"""
-WITH reps AS (SELECT * FROM (VALUES {b_lit}) AS t(b)),
+WITH reps AS (SELECT * FROM (VALUES {BOOT_VALUES}) AS t(b)),
 o AS (
   SELECT o_orderkey, o_orderstatus AS status,
          CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS cents
@@ -2084,10 +2067,7 @@ r AS (
 ci AS (
   SELECT status,
          CAST(COUNT(*) AS BIGINT) AS n_replicates,
-         MAX(CASE WHEN rn = {BOOT_LO_SEL.format(div="//")} THEN med_cents END)
-           AS ci_lo_cents,
-         MAX(CASE WHEN rn = {BOOT_HI_SEL.format(div="//")} THEN med_cents END)
-           AS ci_hi_cents
+         {sql_boot_ci("med_cents", "cents")}
   FROM r GROUP BY status
 )
 SELECT ci.status, n_orders, median_cents,
@@ -2260,14 +2240,6 @@ FROM a2
 # --------------------------------------------------------------------
 
 
-# cents → micro-dollar mean, the house half-up form (the relational9
-# _PT_U_EXPR shape, local to avoid a trainprep ↔ relational9 cycle).
-_SAE_MEAN_EXPR = (
-    "CASE WHEN {n} = 0 THEN CAST(NULL AS BIGINT)"
-    " ELSE CAST((2 * CAST(10000 AS {big}) * CAST({s} AS {big}) + {n})"
-    " {div} (2 * CAST({n} AS {big})) AS BIGINT) END"
-)
-
 
 def q_sample_alloc_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Neyman allocation EXECUTED (SURVEY §19.4 candidate):
@@ -2360,10 +2332,10 @@ def q_sample_alloc_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cents").alias("pop_sum_cents"),
     )
     dec = "decimal(38,0)"
-    smean = _SAE_MEAN_EXPR.format(
+    smean = MICRO_MEAN_EXPR.format(
         n="n_drawn", s="drawn_sum_cents", big=dec, div="div"
     )
-    pmean = _SAE_MEAN_EXPR.format(
+    pmean = MICRO_MEAN_EXPR.format(
         n="n_rows", s="pop_sum_cents", big=dec, div="div"
     )
     return (
@@ -2387,10 +2359,10 @@ def q_sample_alloc_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_sample_alloc_executed() -> str:
-    smean = _SAE_MEAN_EXPR.format(
+    smean = MICRO_MEAN_EXPR.format(
         n="n_drawn", s="drawn_sum_cents", big="HUGEINT", div="//"
     )
-    pmean = _SAE_MEAN_EXPR.format(
+    pmean = MICRO_MEAN_EXPR.format(
         n="n_rows", s="pop_sum_cents", big="HUGEINT", div="//"
     )
     return f"""
@@ -2463,6 +2435,444 @@ JOIN pop p ON a.status = p.status
 
 
 SQL_SAMPLE_ALLOC_EXECUTED = _sql_sample_alloc_executed()
+
+
+WEIGHTED_K = 50
+# 6 hex digits = 24 bits: the integer is exact in a double on both
+# engines, so u and every downstream value are bitwise engine-neutral.
+_HEX_DENOM = 16**6 + 1
+
+
+def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted sampling without replacement: top-{k} documents by the
+    Efraimidis-Spirakis key u^(1/w), weight = ``n_chars`` — longer
+    documents proportionally likelier, the standard trick for
+    quality- or length-weighted training mixes.
+
+    Determinism rules (same as ``sample_split`` / ``sample_stratified``,
+    SCALE.md §20): u comes from the first 6 hex digits of
+    ``md5(doc_id)`` — a pure function of row values, so the draw is
+    seedless, partition-layout-independent, and identical on any
+    cluster size or engine. The E-S key makes "top-k by key" EQUAL in
+    distribution to sampling without replacement ∝ w, so the whole
+    operator is one map + TakeOrderedAndProject (no shuffle beyond the
+    top-k reduction; per-task state O(k)). The key is rounded before
+    ranking so cross-engine pow/division ulp noise cannot flip an
+    order the oracle can still see (SCALE.md §19 rule).
+    """
+    d = load_table(spark, sf_dir, "documents")
+    v = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10)
+    u = (v.cast("double") + F.lit(1.0)) / F.lit(float(_HEX_DENOM))
+    wkey = F.round(
+        F.pow(u, F.lit(1.0) / F.greatest(F.col("n_chars"), F.lit(1)).cast("double")),
+        10,
+    )
+    return (
+        d.select("doc_id", "lang", "n_chars", wkey.alias("wkey"))
+        .orderBy(F.desc("wkey"), "doc_id")
+        .limit(WEIGHTED_K)
+    )
+
+
+q_sample_weighted.__doc__ = q_sample_weighted.__doc__.format(k=WEIGHTED_K)
+
+SQL_SAMPLE_WEIGHTED = f"""
+WITH keyed AS (
+  SELECT doc_id, lang, n_chars,
+         ROUND(POW(
+           (list_sum(list_transform(range(1, 7),
+              i -> (strpos('0123456789abcdef',
+                           substr(md5(CAST(doc_id AS VARCHAR)), i, 1)) - 1)
+                   * 16 ^ (6 - i))) + 1) / {_HEX_DENOM}.0,
+           1.0 / GREATEST(n_chars, 1)), 10) AS wkey
+  FROM documents
+)
+SELECT doc_id, lang, n_chars, wkey
+FROM keyed
+ORDER BY wkey DESC, doc_id
+LIMIT {WEIGHTED_K}
+"""
+
+
+# Integer stride weights per language (higher = denser in the mix).
+# LCM-based integer strides keep the interleave key exact — float
+# strides would risk cross-engine rounding flips on ties.
+MIX_WEIGHTS = {"en": 5, "fr": 4, "de": 3, "es": 2, "zh": 1}
+_MIX_LCM = 60  # lcm(1..5)
+
+
+def _stride_case() -> str:
+    whens = " ".join(
+        f"WHEN '{lang}' THEN {_MIX_LCM // w}" for lang, w in MIX_WEIGHTS.items()
+    )
+    return f"CASE lang {whens} ELSE {_MIX_LCM} END"
+
+
+def q_interleave_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic weighted corpus interleave (stride scheduling).
+
+    Each language is an input "source" with an integer weight; the k-th
+    document of source s (in md5(doc_id) order — value-derived, layout-
+    independent) is scheduled at virtual time (2k-1)·(LCM/w_s), and the
+    global mix order is that key ascending. The result is the classic
+    stride/WFQ schedule: over any window of the output, source s
+    contributes ≈ w_s/Σw of the rows — the exact composition control a
+    training data loader needs, with no RNG anywhere.
+
+    Scale: the per-language row_number is an ordinary partitioned
+    window; ``mix_key`` is a pure function of row values, so
+    re-running on any cluster size or appending a shard yields the
+    same schedule (same invariance argument as ``sample_split``,
+    SCALE.md §20). The final GLOBAL ``row_number`` exists only to
+    materialize an explicit position for the oracle's hash — it is a
+    single-partition window by definition. A production loader does
+    NOT need it: ``mix_key`` is already the total order, so consumers
+    range-sort by it (``repartitionByRange`` — fully distributed) and
+    read partitions in key order.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    per_src = Window.partitionBy("lang").orderBy(
+        F.md5(F.col("doc_id").cast("string")), "doc_id"
+    )
+    stride = F.expr(_stride_case())
+    keyed = d.select(
+        "doc_id",
+        "lang",
+        F.row_number().over(per_src).alias("rn"),
+    ).withColumn("mix_key", (2 * F.col("rn") - 1) * stride)
+    return keyed.select(
+        F.row_number()
+        .over(Window.orderBy("mix_key", "lang", "doc_id"))
+        .alias("mix_pos"),
+        "doc_id",
+        "lang",
+        "rn",
+        "mix_key",
+    )
+
+
+def interleave_mix_distributed(
+    spark: SparkSession, sf_dir: str, num_ranges: int = 8
+) -> DataFrame:
+    """The PRODUCTION materialization of :func:`q_interleave_mix`'s
+    schedule — identical output, no single-partition sort (the one
+    graded plan VERDICT r5's audit flagged as not surviving 100×).
+
+    Distributed global ranking, the classic two-pass shape:
+
+    1. ``repartitionByRange`` on the total order (mix_key, lang,
+       doc_id) — a fully parallel range shuffle (sampled bounds) —
+       then sort WITHIN each range partition only;
+    2. count rows per range partition (a ``spark_partition_id``
+       groupBy: one map-side-combined shuffle of ≤ num_ranges rows)
+       and turn the counts into cumulative offsets driver-side —
+       bounded by the partition count, never by data volume;
+    3. ``mix_pos`` = offset[pid] + intra-partition row_number.
+
+    Every stage is parallel in num_ranges; the only driver state is
+    one integer per range partition. Equivalence to the graded
+    single-partition materialization is pinned by
+    tests/test_operators.py::test_interleave_mix_distributed_matches_graded.
+
+    Storage lifetime (ADVICE r6): the eager ``localCheckpoint`` that
+    pins partition ids across the two passes keeps one copy of the
+    ranged frame in executor storage until released — it CANNOT be
+    unpersisted here because the returned frame is lazy and its
+    lineage is truncated at the checkpoint. The checkpointed frame is
+    exposed as ``result.checkpoint_frame``; callers that invoke this
+    repeatedly in one session should call
+    ``result.checkpoint_frame.unpersist()`` after materializing the
+    result.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    per_src = Window.partitionBy("lang").orderBy(
+        F.md5(F.col("doc_id").cast("string")), "doc_id"
+    )
+    stride = F.expr(_stride_case())
+    keyed = d.select(
+        "doc_id", "lang", F.row_number().over(per_src).alias("rn")
+    ).withColumn("mix_key", (2 * F.col("rn") - 1) * stride)
+
+    ranged = (
+        keyed.repartitionByRange(num_ranges, "mix_key", "lang", "doc_id")
+        .sortWithinPartitions("mix_key", "lang", "doc_id")
+        .withColumn("pid", F.spark_partition_id())
+    )
+    ranged = ranged.localCheckpoint(eager=True)  # pin pids across the two passes
+    counts = {
+        r.pid: r.c
+        for r in ranged.groupBy("pid").agg(F.count("*").alias("c")).collect()
+    }
+    offsets, acc = {}, 0
+    for pid in sorted(counts):
+        offsets[pid] = acc
+        acc += counts[pid]
+    off = F.create_map(
+        *[F.lit(x) for kv in offsets.items() for x in kv]
+    )
+    intra = Window.partitionBy("pid").orderBy("mix_key", "lang", "doc_id")
+    out = ranged.select(
+        (off[F.col("pid")] + F.row_number().over(intra)).alias("mix_pos"),
+        "doc_id",
+        "lang",
+        "rn",
+        "mix_key",
+    )
+    out.checkpoint_frame = ranged  # release handle — see docstring
+    return out
+
+
+SQL_INTERLEAVE_MIX = f"""
+WITH keyed AS (
+  SELECT doc_id, lang,
+         row_number() OVER (PARTITION BY lang
+                            ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
+  FROM documents
+),
+strided AS (
+  SELECT doc_id, lang, rn,
+         (2 * rn - 1) * ({_stride_case()}) AS mix_key
+  FROM keyed
+)
+SELECT row_number() OVER (ORDER BY mix_key, lang, doc_id) AS mix_pos,
+       doc_id, lang, rn, mix_key
+FROM strided
+"""
+
+
+# ---------------------------------------------------------------------------
+# sample_span_mask
+
+# Mask a token when the first md5 byte of (doc_id:pos) is < 0x28 —
+# 40/256 ≈ 15.6%, the T5 corruption rate. Hex-prefix thresholding is
+# the repo's standard engine-portable hash gate (same construction as
+# sample_split's split bound: md5 is standardized, string compare on
+# fixed-width hex is a byte compare).
+SPAN_MASK_BOUND = "28"
+
+
+def q_sample_span_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T5-style span-corruption sampler: mask ≈15% of tokens chosen by
+    a per-(doc, position) hash gate, merge runs of masked tokens into
+    one numbered sentinel each, and emit the (input_text, target_text)
+    pair an encoder-decoder denoising objective trains on::
+
+        text   = "a b c d e f"   masked = {c, d, f}
+        input  = "a b <extra_id_0> e <extra_id_1>"
+        target = "<extra_id_0> c d <extra_id_1> f"
+
+    Determinism: the mask is a pure function of (doc_id, pos) — no RNG,
+    so the sample is identical across engines, partitionings, cluster
+    sizes, and reruns (the same invariance contract as sample_split).
+
+    Scale shape: posexplode multiplies rows by tokens-per-doc, but the
+    three window passes (lag → run-start flag → running span counter)
+    and the ordered re-aggregation all share ONE partitioning by
+    doc_id, so the whole pipeline is a single shuffle of the token
+    stream followed by map-side work; per-task window state is O(1)
+    (lag 1 + running sum). Token rows carry (int, int, short string) —
+    the shuffled bytes ≈ the corpus itself, the floor for any
+    token-level transform.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    tok = d.select(
+        "doc_id",
+        F.posexplode(F.split(F.col("text"), " ")).alias("pos0", "tok"),
+    ).select(
+        "doc_id",
+        (F.col("pos0") + 1).alias("pos"),  # 1-based, matching the oracle
+        "tok",
+    )
+    gate = F.substring(
+        F.md5(
+            F.concat_ws(
+                ":",
+                F.col("doc_id").cast("string"),
+                F.col("pos").cast("string"),
+            )
+        ),
+        1,
+        2,
+    )
+    tok = tok.withColumn("m", gate < SPAN_MASK_BOUND)
+
+    wo = Window.partitionBy("doc_id").orderBy("pos")
+    tok = tok.withColumn(
+        "span_start", F.col("m") & ~F.lag("m", 1, False).over(wo)
+    ).withColumn(
+        "span_id",
+        F.sum(F.col("span_start").cast("int")).over(
+            wo.rowsBetween(Window.unboundedPreceding, 0)
+        ),
+    )
+
+    sentinel = F.concat(
+        F.lit("<extra_id_"), (F.col("span_id") - 1).cast("string"), F.lit(">")
+    )
+    piece_in = F.when(~F.col("m"), F.col("tok")).when(
+        F.col("span_start"), sentinel
+    )  # masked non-start tokens -> NULL (dropped)
+    piece_tgt = F.when(
+        F.col("span_start"), F.concat(sentinel, F.lit(" "), F.col("tok"))
+    ).when(F.col("m"), F.col("tok"))
+
+    def _joined(piece, alias):
+        # collect_list skips the NULL structs when() leaves behind;
+        # array_sort orders struct arrays by their first field (pos),
+        # giving an ordered, engine-stable concatenation.
+        return F.array_join(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(
+                        F.when(piece.isNotNull(), F.struct("pos", piece.alias("p")))
+                    )
+                ),
+                lambda x: x["p"],
+            ),
+            " ",
+        ).alias(alias)
+
+    return tok.groupBy("doc_id").agg(
+        F.count("*").alias("n_tokens"),
+        F.sum(F.col("m").cast("int")).alias("n_masked"),
+        F.max("span_id").alias("n_spans"),
+        _joined(piece_in, "input_text"),
+        _joined(piece_tgt, "target_text"),
+    )
+
+
+SQL_SAMPLE_SPAN_MASK = f"""
+WITH tk AS (
+  SELECT doc_id, string_split(text, ' ') AS t FROM documents
+),
+tok AS (
+  SELECT doc_id,
+         unnest([{{'pos': i, 'tok': t[i]}}
+                 for i in generate_series(1, len(t))],
+                recursive := true)
+  FROM tk
+),
+gated AS (
+  SELECT doc_id, pos, tok,
+         substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR)),
+                1, 2) < '{SPAN_MASK_BOUND}' AS m
+  FROM tok
+),
+runs AS (
+  SELECT *,
+         m AND NOT lag(m, 1, false)
+                   OVER (PARTITION BY doc_id ORDER BY pos) AS span_start
+  FROM gated
+),
+spans AS (
+  SELECT *,
+         SUM(CASE WHEN span_start THEN 1 ELSE 0 END)
+           OVER (PARTITION BY doc_id ORDER BY pos
+                 ROWS UNBOUNDED PRECEDING) AS span_id
+  FROM runs
+),
+pieces AS (
+  SELECT doc_id, pos, m, span_id,
+         '<extra_id_' || CAST(span_id - 1 AS VARCHAR) || '>' AS sentinel,
+         CASE WHEN NOT m THEN tok
+              WHEN span_start THEN
+                   '<extra_id_' || CAST(span_id - 1 AS VARCHAR) || '>'
+         END AS piece_in,
+         CASE WHEN span_start THEN
+                   '<extra_id_' || CAST(span_id - 1 AS VARCHAR) || '>' || ' ' || tok
+              WHEN m THEN tok
+         END AS piece_tgt
+  FROM spans
+)
+SELECT doc_id,
+       COUNT(*) AS n_tokens,
+       CAST(SUM(CASE WHEN m THEN 1 ELSE 0 END) AS BIGINT) AS n_masked,
+       CAST(MAX(span_id) AS BIGINT) AS n_spans,
+       COALESCE(string_agg(piece_in, ' ' ORDER BY pos)
+                FILTER (WHERE piece_in IS NOT NULL), '') AS input_text,
+       COALESCE(string_agg(piece_tgt, ' ' ORDER BY pos)
+                FILTER (WHERE piece_tgt IS NOT NULL), '') AS target_text
+FROM pieces
+GROUP BY doc_id
+"""
+
+
+# --------------------------------------------------------------------
+# feature_vector
+# --------------------------------------------------------------------
+
+# Fixed category order — a MODEL artifact, not data-derived: encoders
+# must emit the same slot for the same category on every snapshot, so
+# the vocabulary is pinned here (a data-driven DISTINCT would silently
+# reorder slots when a category disappears from a batch).
+FEATURE_PRIORITIES = (
+    "1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW",
+)
+
+# the one-hot leaves the engine as a compact "0,1,0,0,0" STRING —
+# the driver's canonicalizer cannot hash array cells (round-1
+# TypeError, the array_map_json lesson), and one shared || expression
+# keeps both engines bit-identical
+_FEAT_ONEHOT_EXPR = " || ',' || ".join(
+    f"CASE WHEN o_orderpriority = '{p}' THEN '1' ELSE '0' END"
+    for p in FEATURE_PRIORITIES
+)
+
+_FEAT_SCALE_EXPR = (
+    "CASE WHEN mx = mn THEN 0 "
+    "ELSE CAST(ROUND((CAST(1000000 AS DOUBLE) * (o_totalprice - mn))"
+    " / (mx - mn), 0) AS BIGINT) END"
+)
+
+
+def q_feature_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tabular feature engineering — the encode step in front of any
+    classical model: one-hot the categorical (``o_orderpriority``
+    against the PINNED vocabulary ``FEATURE_PRIORITIES``), min-max
+    scale the numeric (``o_totalprice`` to micro units against the
+    corpus min/max; the one-hot travels as a compact slot string —
+    the driver cannot hash array cells), and keep the cyclical
+    calendar feature
+    (day-of-week) as an index — per order, as typed columns an ML
+    runtime consumes directly.
+
+    Exactness: one-hot slots are int; the one division (min-max) is a
+    pinned micro expression against exact corpus extrema; day-of-week
+    uses Spark's 1=Sunday..7=Saturday convention (DuckDB counts
+    0=Sunday, so the oracle adds one — a classic silent-offset trap
+    pinned here in both texts).
+
+    Scale shape: map-only over the scan except the one-row min/max
+    aggregate broadcast (the classic fit/transform split — the
+    "fitted" state is O(1)); the pinned vocabulary removes the
+    data-dependent DISTINCT a naive encoder would shuffle for.
+    """
+    orders = load_table(spark, sf_dir, "orders")
+    ext = orders.agg(
+        F.min("o_totalprice").alias("mn"), F.max("o_totalprice").alias("mx")
+    )
+    return (
+        orders.crossJoin(F.broadcast(ext))
+        .select(
+            "o_orderkey",
+            F.expr(_FEAT_ONEHOT_EXPR).alias("priority_onehot"),
+            F.expr(_FEAT_SCALE_EXPR).alias("price_scaled_micro"),
+            F.expr("dayofweek(o_orderdate)").alias("dow"),
+        )
+    )
+
+
+def _sql_feature_vector() -> str:
+    return f"""
+WITH ext AS (
+  SELECT MIN(o_totalprice) AS mn, MAX(o_totalprice) AS mx FROM orders
+)
+SELECT o_orderkey,
+       {_FEAT_ONEHOT_EXPR} AS priority_onehot,
+       {_FEAT_SCALE_EXPR} AS price_scaled_micro,
+       CAST(dayofweek(o_orderdate) AS INT) + 1 AS dow
+FROM orders CROSS JOIN ext
+"""
 
 
 QUERIES: list[Query] = [
@@ -2600,5 +3010,30 @@ QUERIES: list[Query] = [
         q_sample_alloc_executed,
         SQL_SAMPLE_ALLOC_EXECUTED,
         ("relational", "statistics", "sampling", "pipeline"),
+    ),
+    Query(
+        "sample_weighted",
+        q_sample_weighted,
+        SQL_SAMPLE_WEIGHTED,
+        ("llm", "sampling"),
+    ),
+    Query(
+        "interleave_mix",
+        q_interleave_mix,
+        SQL_INTERLEAVE_MIX,
+        ("llm", "sampling", "window"),
+    ),
+    Query(
+        "sample_span_mask",
+        q_sample_span_mask,
+        SQL_SAMPLE_SPAN_MASK,
+        ("llm", "sampling", "text"),
+        bench=True,  # the token-stream-shuffle representative
+    ),
+    Query(
+        "feature_vector",
+        q_feature_vector,
+        _sql_feature_vector(),
+        ("llm", "ml-prep", "encoding"),
     ),
 ]

@@ -30,27 +30,16 @@ from .spec import Query
 # Modules whose QUERIES lists are collected; their order does not matter.
 _MODULES = [
     "data_ingestion_s3_to_parquet_spark.operators.dedup",
+    "data_ingestion_s3_to_parquet_spark.operators.evaluation",
     "data_ingestion_s3_to_parquet_spark.operators.graph",
     "data_ingestion_s3_to_parquet_spark.operators.multimodal",
     "data_ingestion_s3_to_parquet_spark.operators.parity",
+    "data_ingestion_s3_to_parquet_spark.operators.quality",
     "data_ingestion_s3_to_parquet_spark.operators.relational",
-    "data_ingestion_s3_to_parquet_spark.operators.relational10",
-    "data_ingestion_s3_to_parquet_spark.operators.relational11",
-    "data_ingestion_s3_to_parquet_spark.operators.relational12",
-    "data_ingestion_s3_to_parquet_spark.operators.relational13",
-    "data_ingestion_s3_to_parquet_spark.operators.relational14",
-    "data_ingestion_s3_to_parquet_spark.operators.relational15",
-    "data_ingestion_s3_to_parquet_spark.operators.relational16",
-    "data_ingestion_s3_to_parquet_spark.operators.relational2",
-    "data_ingestion_s3_to_parquet_spark.operators.relational3",
-    "data_ingestion_s3_to_parquet_spark.operators.relational4",
-    "data_ingestion_s3_to_parquet_spark.operators.relational5",
-    "data_ingestion_s3_to_parquet_spark.operators.relational6",
-    "data_ingestion_s3_to_parquet_spark.operators.relational7",
-    "data_ingestion_s3_to_parquet_spark.operators.relational8",
-    "data_ingestion_s3_to_parquet_spark.operators.relational9",
     "data_ingestion_s3_to_parquet_spark.operators.similarity",
+    "data_ingestion_s3_to_parquet_spark.operators.stats",
     "data_ingestion_s3_to_parquet_spark.operators.textstats",
+    "data_ingestion_s3_to_parquet_spark.operators.timeseries",
     "data_ingestion_s3_to_parquet_spark.operators.trainprep",
     "data_ingestion_s3_to_parquet_spark.streaming.windows",
 ]

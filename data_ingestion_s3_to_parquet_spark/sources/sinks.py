@@ -519,5 +519,5 @@ def write_orc(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
     a native vectorized reader/writer next to parquet; splittable,
     stripe min/max statistics, so the data-skipping story carries
     over). The end-to-end bit-exactness of the roundtrip is graded by
-    ``operators.relational11.q_orc_interop``'s oracle."""
+    ``operators.relational.q_orc_interop``'s oracle."""
     df.write.mode(mode).orc(path)

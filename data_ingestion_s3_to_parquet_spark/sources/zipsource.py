@@ -22,6 +22,7 @@ import csv
 import io
 import logging
 import os
+import shutil
 import zipfile
 from collections.abc import Iterator
 
@@ -85,7 +86,7 @@ def extract_zip(zip_path: str, output_dir: str) -> list[str]:
             part = f"{target}.part-{os.getpid()}-{uuid.uuid4().hex[:8]}"
             try:
                 with zf.open(info) as src, open(part, "wb") as dst:
-                    dst.write(src.read())
+                    shutil.copyfileobj(src, dst)  # bounded buffer, not the entry
                 os.replace(part, target)  # publish only complete bytes
             except BaseException:
                 try:

@@ -384,7 +384,7 @@ def sliding_stateful(events: DataFrame, *, watermark: str = "10 minutes") -> Dat
 
 
 # --- custom stateful rate-spike alerting -------------------------------------
-# The streaming twin of operators.relational14.q_alert_rate_spike: the
+# The streaming twin of operators.timeseries.q_alert_rate_spike: the
 # batch lane computes per-(event_type, hour) counts and flags buckets
 # whose count exceeds ALERT_FACTOR x the trailing-
 # ALERT_BASELINE_BUCKETS-observed-bucket mean (integer cross-
@@ -428,7 +428,7 @@ def _alert_rows(etype, buckets, hist, to_close):
     bucket; the baseline is the last ALERT_BASELINE_BUCKETS entries of
     ``hist`` at close time, matching the batch lane's trailing
     observed-bucket ROWS frame."""
-    from ..operators.relational14 import ALERT_BASELINE_BUCKETS, ALERT_FACTOR
+    from ..operators.timeseries import ALERT_BASELINE_BUCKETS, ALERT_FACTOR
 
     out = {
         "event_type": [],
@@ -530,7 +530,7 @@ def alert_stateful(events: DataFrame, *, watermark: str = "10 minutes") -> DataF
 
 
 # ---------------------------------------------------------------------------
-# cdc_stateful — streaming twin of operators.relational6.q_cdc_apply
+# cdc_stateful — streaming twin of operators.relational.q_cdc_apply
 
 CDC_OUT_SCHEMA = StructType(
     [
@@ -560,7 +560,7 @@ def cdc_fn(
 ) -> Iterator[pd.DataFrame]:
     """Per-user latest-wins CDC compaction: fold the batch's events
     into the stored winner under the batch lane's exact ordering
-    (ts DESC, event_id DESC — relational6.q_cdc_apply:152), and emit
+    (ts DESC, event_id DESC — relational.q_cdc_apply), and emit
     ONE state-transition row when (and only when) the winner
     advanced. Late events that lose to the stored winner emit
     nothing — latest-wins compaction, not an append log — so a
@@ -585,7 +585,7 @@ def cdc_fn(
     if not changed:
         return
     state.update(best)
-    from ..operators.relational6 import CDC_TOMBSTONE
+    from ..operators.relational import CDC_TOMBSTONE
 
     yield pd.DataFrame(
         {
@@ -626,7 +626,7 @@ def cdc_stateful(events: DataFrame, *, watermark: str = "10 minutes") -> DataFra
 
 # ---------------------------------------------------------------------------
 # interarrival_stateful — streaming twin of
-# operators.relational14.q_event_interarrival
+# operators.timeseries.q_event_interarrival
 
 # Inter-arrival statistics are defined over the SORTED event times, so
 # the streaming twin buffers events inside the lateness horizon and

@@ -235,32 +235,13 @@ def _boot_finish(g: DataFrame) -> DataFrame:
     the pinned half-up integer division, type-1 rank selection —
     bounded |types|·B input, the post-processing step a streaming
     deployment runs on each counter snapshot."""
-    from pyspark.sql.window import Window
-
-    from ..operators.trainprep import (
-        BOOT_HI_SEL,
-        BOOT_LO_SEL,
-        _BOOT_MEAN_EXPR,
-    )
+    from ..operators.trainprep import _BOOT_MEAN_EXPR, boot_ci
 
     g = g.withColumn(
         "mean_micro",
         F.expr(_BOOT_MEAN_EXPR.format(big="decimal(38,0)", div="div")),
     ).where(F.col("mean_micro").isNotNull())
-    win = Window.partitionBy("event_type").orderBy("mean_micro", "b")
-    ranked = g.withColumn("rn", F.row_number().over(win)).withColumn(
-        "nrep", F.count("*").over(Window.partitionBy("event_type"))
-    )
-    lo_sel, hi_sel = BOOT_LO_SEL.format(div="div"), BOOT_HI_SEL.format(div="div")
-    return ranked.groupBy("event_type").agg(
-        F.count("*").alias("n_replicates"),
-        F.max(
-            F.when(F.col("rn") == F.expr(lo_sel), F.col("mean_micro"))
-        ).alias("ci_lo_micro"),
-        F.max(
-            F.when(F.col("rn") == F.expr(hi_sel), F.col("mean_micro"))
-        ).alias("ci_hi_micro"),
-    )
+    return boot_ci(g, "event_type", "mean_micro")
 
 
 def q_stream_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,16 +284,14 @@ def bootstrap_stream(events: DataFrame) -> DataFrame:
 
 def _sql_stream_bootstrap() -> str:
     from ..operators.trainprep import (
-        BOOT_B,
-        BOOT_HI_SEL,
-        BOOT_LO_SEL,
+        BOOT_VALUES,
         _BOOT_MEAN_EXPR,
         _pois_w_expr,
+        sql_boot_ci,
     )
 
-    b_lit = ", ".join(f"({b})" for b in range(BOOT_B))
     return f"""
-WITH reps AS (SELECT * FROM (VALUES {b_lit}) AS t(b)),
+WITH reps AS (SELECT * FROM (VALUES {BOOT_VALUES}) AS t(b)),
 e AS (
   SELECT event_type, event_id,
          CAST(CAST(value AS DECIMAL(18,8)) * 100 AS BIGINT) AS cents
@@ -346,10 +325,7 @@ r AS (
 )
 SELECT event_type,
        CAST(COUNT(*) AS BIGINT) AS n_replicates,
-       MAX(CASE WHEN rn = {BOOT_LO_SEL.format(div="//")} THEN mean_micro END)
-         AS ci_lo_micro,
-       MAX(CASE WHEN rn = {BOOT_HI_SEL.format(div="//")} THEN mean_micro END)
-         AS ci_hi_micro
+       {sql_boot_ci("mean_micro")}
 FROM r GROUP BY event_type
 """
 
@@ -367,7 +343,7 @@ def _srm_counters(ev: DataFrame) -> DataFrame:
     monoid, so the identical code path runs batch or under
     readStream (complete/update mode) with |types|·2 rows of state.
     The arm gate is the A/B family's md5 split on the user id."""
-    from ..operators.relational9 import AB_SPLIT_BOUND
+    from ..operators.stats import AB_SPLIT_BOUND
 
     arm = (
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 4)
@@ -384,7 +360,7 @@ def _srm_finish(g: DataFrame) -> DataFrame:
     the bounded counter frame — the streaming-safe substitute for
     ROLLUP, which streaming aggregation does not support), then the
     srm_check expressions verbatim."""
-    from ..operators.relational9 import _SRM_ALERT_EXPR, _SRM_CHI2_EXPR
+    from ..operators.stats import _SRM_ALERT_EXPR, _SRM_CHI2_EXPR
 
     dec = "decimal(38,0)"
     per = g.groupBy("event_type").agg(
@@ -458,11 +434,7 @@ def srm_stream(events: DataFrame) -> DataFrame:
 
 
 def _sql_stream_srm() -> str:
-    from ..operators.relational9 import (
-        AB_SPLIT_BOUND,
-        _SRM_ALERT_EXPR,
-        _SRM_CHI2_EXPR,
-    )
+    from ..operators.stats import AB_SPLIT_BOUND, _SRM_ALERT_EXPR, _SRM_CHI2_EXPR
 
     chi2 = _SRM_CHI2_EXPR.format(big="HUGEINT", div="//")
     alert = _SRM_ALERT_EXPR.format(big="HUGEINT")

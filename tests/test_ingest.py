@@ -156,6 +156,82 @@ def test_cold_path_without_s3_uses_local_zip(spark, csv_file, tmp_path, monkeypa
     assert spark.read.parquet(out).count() == N_ROWS
 
 
+def test_pipeline_logs_ingested_and_ignored_csv_entries(
+    spark, csv_file, tmp_path, caplog
+):
+    # only the first CSV entry of an archive is ingested; the rest must
+    # be named in a warning, not dropped silently
+    zpath = tmp_path / "two.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        zf.write(csv_file, "first.csv")
+        zf.write(csv_file, "second.csv")
+    with caplog.at_level(logging.INFO):
+        run_pipeline(
+            spark,
+            unzipped_data=str(tmp_path / "does-not-exist.csv"),
+            destination=str(zpath),
+            unzip_dir=str(tmp_path / "unzipped"),
+            out_path=str(tmp_path / "out.parquet"),
+        )
+    info = [r.getMessage() for r in caplog.records if r.levelno == logging.INFO]
+    warn = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
+    assert any("2 CSV entries" in m and m.endswith("first.csv") for m in info)
+    assert any("second.csv" in m for m in warn)
+    assert not any("first.csv" in m for m in warn)
+
+
+def test_extract_zip_streams_large_entries(tmp_path):
+    # an entry is copied through a bounded buffer, so a multi-GB CSV
+    # does not need that much driver memory
+    import tracemalloc
+
+    size = 16 * 1024 * 1024
+    chunk = bytes(range(256)) * 256  # 64 KiB
+    zpath = tmp_path / "big.zip"
+    with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as zf:
+        with zf.open("big.csv", "w") as dst:
+            for _ in range(size // len(chunk)):
+                dst.write(chunk)
+    tracemalloc.start()
+    try:
+        (path,) = extract_zip(str(zpath), str(tmp_path / "out"))
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert os.path.getsize(path) == size
+    assert peak < size // 8
+
+
+def test_load_table_converts_nanosecond_event_times(spark, tmp_path):
+    # events.ts written as timestamp[ns] loads through the nanosAsLong
+    # branch and truncates to microseconds exactly as DuckDB does
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
+
+    ns = [1_700_000_000_123_456_789, 1_600_000_000_000_000_999]
+    table = pa.table(
+        {
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+        }
+    )
+    path = tmp_path / "events.parquet"
+    pq.write_table(table, path)
+    df = load_table(spark, str(tmp_path), "events")
+    assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+    got = [r.ts for r in df.orderBy("event_id").collect()]
+    want = [
+        r[0]
+        for r in duckdb.sql(
+            f"SELECT ts::timestamp FROM '{path}' ORDER BY event_id"
+        ).fetchall()
+    ]
+    assert got == want
+
+
 def test_distributed_zip_csv_scan(spark, csv_file, tmp_path):
     # The 100 TB path: binaryFile + mapInPandas decompression.
     for i in range(3):

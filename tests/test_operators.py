@@ -246,7 +246,7 @@ def test_interleave_mix_is_a_stride_schedule(spark, sf_dir):
     # the k-th row of language s sits at mix_key (2k-1)*stride_s, so
     # per-language subsequences are evenly spaced — and the schedule is
     # deterministic across runs.
-    from data_ingestion_s3_to_parquet_spark.operators.relational7 import (
+    from data_ingestion_s3_to_parquet_spark.operators.trainprep import (
         MIX_WEIGHTS,
         _MIX_LCM,
         q_interleave_mix,
@@ -273,9 +273,7 @@ def test_interleave_mix_is_a_stride_schedule(spark, sf_dir):
 
 
 def test_text_normalize_is_idempotent_and_flags_changes(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational7 import (
-        q_text_normalize,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import q_text_normalize
 
     rows = q_text_normalize(spark, sf_dir).collect()
     assert len(rows) == 500
@@ -342,7 +340,7 @@ def test_ref_pairs_cache_matches_rebuild(spark, sf_dir):
     assert repaired["count"] == len(fresh)            # rebuild re-stamped it
 
 
-def test_quadratic_lane_guard_names_scale_safe_twin(spark, sf_dir, monkeypatch):
+def test_quadratic_lane_guard_names_scale_safe_twin(spark, sf_dir):
     # VERDICT r4 #5: the label-block-quadratic exact lanes must refuse
     # oversized inputs with an error that names their LSH twin, and
     # must keep working (guard passes) at fixture scale.
@@ -364,12 +362,7 @@ def test_quadratic_lane_guard_names_scale_safe_twin(spark, sf_dir, monkeypatch):
         msg = str(exc.value)
         assert twin in msg and op in msg and "quadratic" in msg
 
-    # the env override raises the bound (explicit opt-in)
-    monkeypatch.setenv("SPARK_GRAFT_QUADRATIC_BOUND", str(10**9 + 1))
-    check_quadratic_rows(10**9, "sim_join", "sim_join_lsh")  # no raise
-
     # fixture-scale inputs pass the guard end-to-end
-    monkeypatch.delenv("SPARK_GRAFT_QUADRATIC_BOUND", raising=False)
     from data_ingestion_s3_to_parquet_spark.operators.similarity import (
         q_sim_join,
     )
@@ -389,7 +382,7 @@ def test_knn_edge_artifact_matches_rebuild(spark, sf_dir):
         fixture_fingerprint,
     )
     from data_ingestion_s3_to_parquet_spark.operators.graph import _knn_edges
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.similarity import (
         KNN_K,
         q_knn_graph,
     )
@@ -939,7 +932,7 @@ def test_sha2_keyed_dedup_matches_text_keyed_output(spark, sf_dir):
 def test_bloom_prefilter_prunes_but_never_drops_matches(spark, sf_dir):
     # the bloom probe is a superset filter: every true match survives
     # (oracle proves output equality; this pins the pruning mechanics)
-    from data_ingestion_s3_to_parquet_spark.operators.relational6 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         BLOOM_SEGMENT,
         q_join_bloom_prefilter,
     )
@@ -956,7 +949,7 @@ def test_bloom_prefilter_prunes_but_never_drops_matches(spark, sf_dir):
 def test_cdc_apply_latest_wins_and_tombstones(spark, tmp_path):
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational6 import q_cdc_apply
+    from data_ingestion_s3_to_parquet_spark.operators.relational import q_cdc_apply
 
     base = dt.datetime(2024, 1, 1)
     rows = [
@@ -989,9 +982,9 @@ def test_sample_weighted_is_exact_topk_of_es_keys(spark, sf_dir):
     # operator returns exactly the global top-k (with tie-break order)
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational6 import (
-        _HEX_DENOM,
+    from data_ingestion_s3_to_parquet_spark.operators.trainprep import (
         WEIGHTED_K,
+        _HEX_DENOM,
         q_sample_weighted,
     )
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
@@ -1012,9 +1005,7 @@ def test_sample_weighted_is_exact_topk_of_es_keys(spark, sf_dir):
 def test_resample_ffill_fills_gaps_with_carried_values(spark, tmp_path):
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational6 import (
-        q_resample_ffill,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import q_resample_ffill
 
     base = dt.datetime(2024, 1, 1, 0, 30)
     rows = [
@@ -1517,9 +1508,7 @@ def test_pii_redact_scrubs_all_planted_pii(spark, sf_dir):
 def test_scd2_history_ranges_chain_per_user(spark, sf_dir):
     from collections import defaultdict
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational5 import (
-        q_scd2_history,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.relational import q_scd2_history
 
     by_user = defaultdict(list)
     for r in q_scd2_history(spark, sf_dir).collect():
@@ -1535,7 +1524,7 @@ def test_scd2_history_ranges_chain_per_user(spark, sf_dir):
 
 
 def test_unpivot_stack_melts_measures_exactly(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         UNPIVOT_MEASURES,
         q_unpivot_stack,
     )
@@ -1559,7 +1548,7 @@ def test_unpivot_stack_melts_measures_exactly(spark, sf_dir):
 
 
 def test_window_range_interval_matches_hand_rolled_frame(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_window_range_interval,
     )
 
@@ -1579,7 +1568,7 @@ def test_window_range_interval_matches_hand_rolled_frame(spark, sf_dir):
 def test_sample_span_mask_round_trips_to_original(spark, sf_dir):
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.trainprep import (
         q_sample_span_mask,
     )
 
@@ -1628,9 +1617,7 @@ def test_sample_span_mask_round_trips_to_original(spark, sf_dir):
 def test_anomaly_zscore_agrees_with_numpy(spark, sf_dir):
     import math
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
-        q_anomaly_zscore,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import q_anomaly_zscore
 
     rows = q_anomaly_zscore(spark, sf_dir).collect()
     by_type: dict[str, list] = {}
@@ -1648,7 +1635,7 @@ def test_anomaly_zscore_agrees_with_numpy(spark, sf_dir):
 def test_knn_graph_is_exact_topk_per_vector(spark, sf_dir):
     import math
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.similarity import (
         KNN_K,
         q_knn_graph,
     )
@@ -1682,7 +1669,7 @@ def test_knn_graph_is_exact_topk_per_vector(spark, sf_dir):
 
 
 def test_lm_unigram_score_separates_common_from_rare_text(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         q_lm_unigram_score,
     )
 
@@ -1717,9 +1704,7 @@ def test_cogrouped_asof_twin_matches_join_lane(spark, sf_dir):
     from data_ingestion_s3_to_parquet_spark.operators.cogrouped import (
         asof_join_cogrouped,
     )
-    from data_ingestion_s3_to_parquet_spark.operators.relational import (
-        q_join_asof,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.relational import q_join_asof
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
 
     events = load_table(spark, sf_dir, "events")
@@ -1746,9 +1731,7 @@ def test_pagerank_matches_hand_iteration(spark, sf_dir):
         _r,
         q_pagerank,
     )
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
-        q_knn_graph,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.similarity import q_knn_graph
 
     got = {r.node: r.pr for r in q_pagerank(spark, sf_dir).collect()}
     edges = [(r.src, r.dst) for r in q_knn_graph(spark, sf_dir).collect()]
@@ -1779,9 +1762,7 @@ def test_pagerank_matches_hand_iteration(spark, sf_dir):
 
 
 def test_profile_table_matches_direct_queries(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
-        q_profile_table,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_profile_table
 
     prof = {r.column: r for r in q_profile_table(spark, sf_dir).collect()}
     e = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -1798,9 +1779,7 @@ def test_label_propagation_respects_components_and_is_deterministic(spark, sf_di
     from data_ingestion_s3_to_parquet_spark.operators.graph import (
         q_label_propagation,
     )
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
-        q_knn_graph,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.similarity import q_knn_graph
 
     got = {r.node: r.community for r in q_label_propagation(spark, sf_dir).collect()}
     again = {r.node: r.community for r in q_label_propagation(spark, sf_dir).collect()}
@@ -1833,7 +1812,7 @@ def test_label_propagation_respects_components_and_is_deterministic(spark, sf_di
 
 
 def test_time_weighted_avg_matches_hand_integration(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_time_weighted_avg,
     )
 
@@ -1861,7 +1840,7 @@ def test_time_weighted_avg_matches_hand_integration(spark, sf_dir):
 
 
 def test_funnel_conversion_counts_are_ordered_and_exact(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         q_funnel_conversion,
     )
 
@@ -1889,7 +1868,7 @@ def test_funnel_conversion_counts_are_ordered_and_exact(spark, sf_dir):
 
 
 def test_retention_cohort_offset_zero_covers_every_user(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         q_retention_cohort,
     )
 
@@ -1944,7 +1923,7 @@ def test_knn_graph_lsh_ranks_planted_neighbor_first(spark, tmp_path):
 
 
 def test_recursive_cte_depths_match_bit_length(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         q_recursive_hierarchy,
     )
 
@@ -2007,9 +1986,7 @@ def test_pagerank_loop_accepts_lsh_candidate_edges(spark, tmp_path):
 
 
 def test_data_expectations_gate_shape_and_failing_rule(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_data_expectations,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_data_expectations
 
     rows = {r.rule: r for r in q_data_expectations(spark, sf_dir).collect()}
     assert len(rows) == 6
@@ -2032,7 +2009,7 @@ def test_data_expectations_gate_shape_and_failing_rule(spark, sf_dir):
 
 
 def test_fuzzy_match_strings_agrees_with_python_levenshtein(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         FUZZY_MAX_EDITS,
         FUZZY_PREFIX_LEN,
         q_fuzzy_match_strings,
@@ -2073,7 +2050,7 @@ def test_fuzzy_match_strings_agrees_with_python_levenshtein(spark, sf_dir):
 
 
 def test_chunk_text_covers_every_token_with_exact_overlap(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         CHUNK_OVERLAP,
         CHUNK_TOKENS,
         q_chunk_text,
@@ -2103,9 +2080,7 @@ def test_chunk_text_covers_every_token_with_exact_overlap(spark, sf_dir):
 
 
 def test_corpus_report_composes_its_building_blocks(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_corpus_report,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import q_corpus_report
     from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         q_quality_gopher,
     )
@@ -2125,7 +2100,7 @@ def test_corpus_report_composes_its_building_blocks(spark, sf_dir):
 
 
 def test_value_histogram_is_dense_and_conserves_mass(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.quality import (
         HIST_BINS,
         q_value_histogram,
     )
@@ -2154,7 +2129,7 @@ def test_value_histogram_is_dense_and_conserves_mass(spark, sf_dir):
 
 
 def test_skyline_frontier_is_exactly_the_pareto_set(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         q_skyline_frontier,
     )
 
@@ -2183,7 +2158,7 @@ def test_skyline_frontier_is_exactly_the_pareto_set(spark, sf_dir):
 def test_basket_pairs_match_hand_counted_cooccurrence(spark, sf_dir):
     from collections import Counter, defaultdict
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         BASKET_MIN_SUPPORT,
         q_basket_pairs,
     )
@@ -2223,9 +2198,7 @@ def test_basket_pairs_match_hand_counted_cooccurrence(spark, sf_dir):
 def test_period_growth_matches_fraction_arithmetic(spark, sf_dir):
     from fractions import Fraction
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_period_growth,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import q_period_growth
 
     rows = sorted(
         q_period_growth(spark, sf_dir).collect(), key=lambda r: r.month
@@ -2263,7 +2236,7 @@ def test_ab_test_metrics_replay_with_fractions(spark, sf_dir):
     from fractions import Fraction
     from hashlib import md5
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         q_ab_test_metrics,
     )
@@ -2412,7 +2385,7 @@ def test_quality_signals_artifact_matches_rebuild(spark, sf_dir):
     from data_ingestion_s3_to_parquet_spark.artifacts import (
         fixture_fingerprint,
     )
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         q_lm_unigram_score,
     )
     from data_ingestion_s3_to_parquet_spark.operators.textstats import (
@@ -2462,7 +2435,7 @@ def test_interleave_mix_distributed_matches_graded(spark, sf_dir):
     # the production materialization (range shuffle + per-partition
     # offsets, no single-partition sort) must reproduce the graded
     # single-partition ranking bitwise — VERDICT r5 plan-audit item
-    from data_ingestion_s3_to_parquet_spark.operators.relational7 import (
+    from data_ingestion_s3_to_parquet_spark.operators.trainprep import (
         interleave_mix_distributed,
         q_interleave_mix,
     )
@@ -3707,7 +3680,7 @@ def test_merge_intervals_disjoint_and_cover(spark, sf_dir):
     # partition the events table
     from collections import defaultdict
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_merge_intervals,
     )
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
@@ -3948,7 +3921,7 @@ def test_markov_transitions_matches_python_recompute(spark, sf_dir):
     # conditional probability must all match exactly
     from collections import Counter, defaultdict
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         q_markov_transitions,
     )
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
@@ -3986,9 +3959,7 @@ def test_robust_stats_matches_python_recompute(spark, sf_dir):
     import math
     from collections import defaultdict
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_robust_stats,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_robust_stats
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
 
     rows = load_table(spark, sf_dir, "documents").select(
@@ -4223,7 +4194,7 @@ def test_session_paths_matches_python_recompute(spark, sf_dir):
     # where concat_ws must skip the missing slots) and the shares
     from collections import Counter, defaultdict
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         SESSION_PATH_LEN,
         q_session_paths,
     )
@@ -4255,7 +4226,7 @@ def test_chi2_contingency_matches_python_recompute(spark, sf_dir):
     # the sum of the micro-quantized terms
     from collections import Counter
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         CHI2_HOUR_BUCKETS,
         q_chi2_contingency,
     )
@@ -4569,9 +4540,7 @@ def test_corr_pearson_matches_pure_python_recompute(spark, sf_dir):
     from collections import defaultdict
     from decimal import ROUND_HALF_UP, Decimal
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_corr_pearson,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_corr_pearson
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
 
     acc = defaultdict(lambda: [0, 0, 0, 0, 0, 0])  # n sx sy sxy sxx syy
@@ -4619,7 +4588,7 @@ def test_corr_pearson_zero_variance_group_is_null_on_both_engines(
     # exact statistic for the healthy one.
     import duckdb
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         SQL_CORR_PEARSON,
         q_corr_pearson,
     )
@@ -4825,7 +4794,7 @@ def _py_winnow(text: str):
     every complete window's rightmost-minimum k-gram hash."""
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
+    from data_ingestion_s3_to_parquet_spark.operators.dedup import (
         WINNOW_GRAM_N,
         WINNOW_W,
         _FP_HEX,
@@ -4854,9 +4823,7 @@ def _py_winnow(text: str):
 
 
 def test_doc_winnow_matches_python_reference(spark, sf_dir):
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
-        q_doc_winnow,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.dedup import q_doc_winnow
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
 
     want = {
@@ -4878,9 +4845,7 @@ def test_winnow_guarantee_shared_span_always_collides(spark):
     # least one identical selected fingerprint in both documents —
     # plant a 6-word span inside otherwise-disjoint text and check the
     # fingerprint join finds it
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
-        winnow_fingerprints,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.dedup import winnow_fingerprints
 
     span = "the quick brown fox jumps high"
     rows = [
@@ -4901,7 +4866,7 @@ def test_winnow_guarantee_shared_span_always_collides(spark):
 def test_inverted_index_matches_python_recompute(spark, sf_dir):
     from collections import Counter, defaultdict
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         POSTINGS_CAP,
         q_inverted_index,
     )
@@ -4937,7 +4902,7 @@ def test_changepoint_cusum_finds_planted_level_shift(spark):
     # a flat customer still reports its (tiny) max with earliest-tie
     from datetime import datetime
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         cusum_changepoints,
     )
 
@@ -4981,9 +4946,7 @@ def test_link_predict_matches_python_recompute(spark, sf_dir):
         LP_TOP,
         q_link_predict,
     )
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
-        q_knn_graph,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.similarity import q_knn_graph
 
     adj = defaultdict(set)
     for r in q_knn_graph(spark, sf_dir).select("src", "dst").collect():
@@ -5182,7 +5145,7 @@ def test_media_exif_probe_and_scrub_distributed(spark):
 def test_winnow_overlap_matches_python_recompute(spark, sf_dir):
     from collections import defaultdict
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
+    from data_ingestion_s3_to_parquet_spark.operators.dedup import (
         OVERLAP_FP_MAX_DF,
         OVERLAP_MIN_SHARED,
         q_winnow_overlap,
@@ -5330,7 +5293,7 @@ def test_rank_bm25_matches_pure_python_recompute(spark, sf_dir):
     import math
     from collections import Counter, defaultdict
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         BM25_TERMS,
         BM25_TOPK,
         q_rank_bm25,
@@ -5391,7 +5354,7 @@ def test_ewma_smooth_matches_pure_python_recompute(spark, sf_dir):
     # half-up integer division recomputed per event in pure Python
     from collections import defaultdict
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         EWMA_COEFS,
         EWMA_DEPTH,
         q_ewma_smooth,
@@ -5452,14 +5415,14 @@ def test_rank_fusion_rrf_matches_composition_of_its_two_rankings(
     # q_lm_unigram_score (each pinned by its own recompute test), fuse
     # in pure Python with the same k=60 micro-quantization, and demand
     # the identical top list — ranks, ids, and scores
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         RRF_K,
         RRF_LIST_N,
         RRF_TOPK,
         _bm25_scored,
         q_rank_fusion_rrf,
     )
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         q_lm_unigram_score,
     )
 
@@ -5624,7 +5587,7 @@ def test_orc_roundtrip_is_bit_exact(spark, sf_dir):
     # the interop claim, checked at row level (not just through the
     # aggregate the oracle grades): the ORC copy holds exactly the
     # multiset of projected parquet rows
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         ORC_COLS,
         _orc_path,
         q_orc_interop,
@@ -5644,7 +5607,7 @@ def test_acf_lags_matches_pure_python(spark, sf_dir):
     import math
     from collections import Counter
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         ACF_MAX_LAG,
         q_acf_lags,
     )
@@ -5692,11 +5655,11 @@ def test_acf_lags_matches_pure_python(spark, sf_dir):
 def test_ccnet_buckets_matches_pure_python_ntile(spark, sf_dir):
     from collections import defaultdict
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         CCNET_N_BUCKETS,
         q_ccnet_buckets,
     )
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         q_lm_unigram_score,
     )
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
@@ -5749,7 +5712,7 @@ def test_zorder_key_sql_rendering_matches_python(spark):
 
     import duckdb
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         _zorder_interleave_expr,
         zorder_key_py,
     )
@@ -5786,7 +5749,7 @@ def test_zorder_sorted_layout_narrows_per_file_ranges(spark, sf_dir, tmp_path):
     # prune on for EITHER dimension
     from pyspark.sql import functions as F
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         _zorder_interleave_expr,
     )
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
@@ -5834,7 +5797,7 @@ def test_jsonl_roundtrip_is_exact_and_tolerates_corrupt_lines(
     # widening columns
     import os
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         JSONL_SCHEMA,
         _jsonl_path,
         q_jsonl_interop,
@@ -5893,7 +5856,7 @@ def test_interop_sweep_collects_only_aged_out_generations(tmp_path, monkeypatch)
     import tempfile as _tf
     import time
 
-    from data_ingestion_s3_to_parquet_spark.operators import relational11
+    from data_ingestion_s3_to_parquet_spark.operators import relational
 
     monkeypatch.setattr(_tf, "gettempdir", lambda: str(tmp_path))
     fresh = tmp_path / "spark_graft_orc_fresh"
@@ -5905,7 +5868,7 @@ def test_interop_sweep_collects_only_aged_out_generations(tmp_path, monkeypatch)
     old = time.time() - 3600
     os.utime(stale, (old, old))
     os.utime(other, (old, old))
-    relational11._sweep_stale_siblings(
+    relational._sweep_stale_siblings(
         "spark_graft_orc_", "spark_graft_orc_current"
     )
     assert not stale.exists()          # aged out, superseded: swept
@@ -5951,10 +5914,8 @@ def test_lm_bigram_score_sees_through_word_salad(spark, tmp_path):
     # vocabulary (identical unigram profile) must score worse than the
     # stereotyped original, because its adjacencies are rare. Corpus:
     # many copies of a fixed phrase + one scrambled permutation of it.
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
-        q_lm_bigram_score,
-    )
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import q_lm_bigram_score
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         q_lm_unigram_score,
     )
 
@@ -5983,7 +5944,7 @@ def test_eval_auc_planted_separable_and_tied_cases(spark, tmp_path):
     # perfect separation both ways, then a hand-computed tie case,
     # on planted corpora where lm avg_nll ordering is forced by word
     # rarity (frequent words => low nll)
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         AUC_POS_LANG,
         q_eval_auc,
     )
@@ -6029,10 +5990,8 @@ def test_eval_ndcg_matches_pure_python_recompute(spark, sf_dir):
     # recompute DCG/IDCG/NDCG from the shared bm25-scored frame with
     # plain Python sorts — pins ranking order, the literal discount
     # table, and the quantized ratio
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
-        _bm25_scored,
-    )
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import _bm25_scored
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         NDCG_DISCOUNTS_MICRO,
         NDCG_K,
         q_eval_ndcg,
@@ -6069,12 +6028,8 @@ def test_eval_ndcg_is_one_on_a_relevance_ordered_corpus(spark, tmp_path):
     # plant a corpus where BM25 order == relevance order: docs with
     # more distinct query terms (higher rel) also score higher, so
     # DCG == IDCG exactly
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
-        BM25_TERMS,
-    )
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
-        q_eval_ndcg,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import BM25_TERMS
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import q_eval_ndcg
 
     rows = []
     for i in range(12):
@@ -6093,10 +6048,10 @@ def test_eval_ndcg_is_one_on_a_relevance_ordered_corpus(spark, tmp_path):
 def test_eval_calibration_matches_pure_python_recompute(spark, sf_dir):
     # replicate rank + NTILE fill (earlier bins one larger) + the two
     # micro-quantized ratios in plain Python
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         q_lm_unigram_score,
     )
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         CAL_N_BINS,
         CAL_POS_LANG,
         q_eval_calibration,
@@ -6139,7 +6094,7 @@ def test_eval_calibration_perfect_and_worst_cases(spark, tmp_path):
     # planted corpora: (a) positives uniformly mixed through every
     # score level -> acc flat at the base rate; (b) positives all in
     # the top-score bins -> top-bin acc 1_000_000, bottom 0
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         CAL_N_BINS,
         CAL_POS_LANG,
         q_eval_calibration,
@@ -6260,10 +6215,10 @@ def test_eval_pr_curve_matches_pure_python_and_planted_monotonics(
     # plain Python; planted corpus: positives exactly the fluent half
     # -> precision stays 1.0 through bin 5, recall hits 1.0 at 5 and
     # precision decays harmonically after
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         q_lm_unigram_score,
     )
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         CAL_N_BINS,
         CAL_POS_LANG,
         q_eval_pr_curve,
@@ -6332,7 +6287,7 @@ def test_drift_psi_matches_pure_python_recompute(spark, sf_dir):
     # contribution sequence (ln, 1e-6 floor, micro-round) in Python
     import math
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
+    from data_ingestion_s3_to_parquet_spark.operators.quality import (
         PSI_PIVOT_DATE,
         PSI_PRICE_BIN,
         PSI_PRICE_MAX_BIN,
@@ -6397,9 +6352,7 @@ def test_drift_psi_planted_shift_and_stability(spark, tmp_path):
     # priority dim only, and one-sided buckets still surface
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
-        q_drift_psi,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_drift_psi
 
     before = dt.datetime(1996, 1, 1)
     after = dt.datetime(2000, 1, 1)
@@ -6452,12 +6405,8 @@ def test_drift_ks_matches_pure_python_recompute(spark, sf_dir):
     # bucketed prefix sum against the textbook definition
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
-        PSI_PIVOT_DATE,
-    )
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
-        q_drift_ks,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import PSI_PIVOT_DATE
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_drift_ks
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
 
     pivot = dt.datetime.fromisoformat(PSI_PIVOT_DATE)
@@ -6490,9 +6439,7 @@ def test_drift_ks_planted_shift_and_identity(spark, tmp_path):
     # prefix-sum buckets so the carry path is exercised.
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
-        q_drift_ks,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_drift_ks
 
     before = dt.datetime(1996, 1, 1)
     after = dt.datetime(2000, 1, 1)
@@ -6540,7 +6487,7 @@ def test_skew_autosalt_decision_and_sums_on_planted_skew(spark, tmp_path):
     # aggregation exactly and partial counts stay within the fan-out
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         SALT_TARGET_ROWS,
         SALT_TOPK,
         q_skew_autosalt,
@@ -6578,9 +6525,7 @@ def test_skew_autosalt_decision_and_sums_on_planted_skew(spark, tmp_path):
 def test_privacy_kanon_planted_classes(spark, tmp_path):
     # hand-built QI classes of size 1, 3, 6, and 12 -> one row per
     # band with exact class/row counts and the k=5 violation flags
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
-        q_privacy_kanon,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_privacy_kanon
 
     rows = []
     cid = 0
@@ -6616,7 +6561,7 @@ def test_quantile_select_matches_pure_python_recompute(spark, sf_dir):
     # plain Python sort — pins the distributed selection (bucket
     # locate + bucket-local row_number) against the naive definition,
     # and asserts every sketch contract boolean landed true
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         QSEL_QUANTILES,
         q_quantile_select,
     )
@@ -6654,9 +6599,7 @@ def test_reconcile_sources_planted_statuses(spark, tmp_path):
     # gross mismatch, header-only (left_only), detail-only (right_only)
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
-        q_reconcile_sources,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_reconcile_sources
 
     d = dt.datetime(1997, 1, 1)
     orders = [
@@ -6703,9 +6646,7 @@ def test_rolling_median_ignores_planted_spike(spark, tmp_path):
     # also pins the (n+1) div 2 lower-median rank on partial windows
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
-        q_rolling_median,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import q_rolling_median
 
     base = dt.datetime(2024, 1, 1)
     vals = [10.0, 10.0, 1000.0, 10.0, 10.0, 10.0]
@@ -6737,7 +6678,7 @@ def test_forecast_snaive_planted_profile_and_coverage(spark, tmp_path):
     # hour with NO training data counts in n_holdout but not n_covered
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         FC_PIVOT_TS,
         q_forecast_snaive,
     )
@@ -6772,7 +6713,7 @@ def test_ref_integrity_audit_counts_planted_orphans(spark, tmp_path):
     # must not double-count matches (DISTINCT on the parent side)
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
+    from data_ingestion_s3_to_parquet_spark.operators.quality import (
         q_ref_integrity_audit,
     )
 
@@ -6831,7 +6772,7 @@ def test_mmr_rerank_matches_pure_python_greedy(spark, sf_dir):
     # recompute the greedy from the SAME distributed pool/pair frames
     # with an independent Python implementation (argmax over
     # (-obj, doc_id)) — pins selection order, penalties, objectives
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
+    from data_ingestion_s3_to_parquet_spark.operators.similarity import (
         MMR_K,
         MMR_LAMBDA_TENTHS,
         _mmr_pool,
@@ -6872,9 +6813,7 @@ def test_mmr_rerank_planted_duplicate_is_skipped(spark, tmp_path):
     # duplicates: plain relevance ranking returns both back-to-back,
     # MMR's round-2 penalty (sim = 1e6) must demote the copy below the
     # diverse-but-slightly-weaker doc
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
-        q_mmr_rerank,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.similarity import q_mmr_rerank
 
     # identical tf/dl/df structure => all three docs share one BM25
     # score (rel = 1e6 each, ties by id); 0 and 1 are exact copies
@@ -6903,7 +6842,7 @@ def test_join_asof_nearest_planted_directions(spark, tmp_path):
     # break exact-distance ties toward the EARLIER order
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         q_join_asof_nearest,
     )
 
@@ -6947,9 +6886,7 @@ def test_ts_interpolate_planted_gaps_and_no_extrapolation(spark, tmp_path):
     # appear (spine is min..max per key)
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
-        q_ts_interpolate,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import q_ts_interpolate
 
     base = dt.datetime(2024, 3, 1, 0, 0, 0)
     rows = [
@@ -6983,9 +6920,7 @@ def test_ts_interpolate_matches_pure_python_recompute(spark, sf_dir):
     from collections import defaultdict
     from decimal import Decimal
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
-        q_ts_interpolate,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import q_ts_interpolate
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
 
     rows = load_table(spark, sf_dir, "events").select(
@@ -7031,7 +6966,7 @@ def test_ts_interpolate_matches_pure_python_recompute(spark, sf_dir):
 
 def test_privacy_erase_cascade_matches_pure_python(spark, sf_dir):
     # recompute the erase set and every cascade count in plain Python
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
+    from data_ingestion_s3_to_parquet_spark.operators.quality import (
         PRIVACY_ERASE_MOD,
         q_privacy_erase,
     )
@@ -7077,7 +7012,7 @@ def test_feature_vector_encoding_contract(spark, sf_dir, tmp_path):
     # land on 0 / 1e6, and the zero-variance guard
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
+    from data_ingestion_s3_to_parquet_spark.operators.trainprep import (
         FEATURE_PRIORITIES,
         q_feature_vector,
     )
@@ -7121,7 +7056,7 @@ def test_feature_vector_encoding_contract(spark, sf_dir, tmp_path):
 def test_skew_report_matches_pure_python(spark, sf_dir):
     from collections import Counter
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         SKEW_TOPK,
         q_skew_report,
     )
@@ -7177,7 +7112,7 @@ def test_rolling_quantile_planted_band(spark, tmp_path):
     # from ONE sorted frame
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_rolling_quantile,
     )
 
@@ -7209,9 +7144,7 @@ def test_eval_mrr_planted_relevance(spark, tmp_path):
     # first, NOT relevant); docs 2/3 carry 'dup' in the prefix with
     # tf 2/1 (ranks 2/3, both relevant) -> first hit at rank 2,
     # RR = 0.5, recall@10 = 1, MRR = 0.5/4 over the fixed 4-term set
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
-        q_eval_mrr,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import q_eval_mrr
 
     filler = ["x"] * 16
 
@@ -7252,7 +7185,7 @@ def test_schema_drift_report_verdicts_and_counts(spark, tmp_path):
     # dropped counts v1, added counts v2, widened/unchanged count all
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.quality import (
         q_schema_drift_report,
     )
 
@@ -7289,7 +7222,7 @@ def test_dedup_threshold_sweep_planted_curve(spark, tmp_path):
     # doc2 differs in the last word (J=0.6 against both) -> the curve
     # steps from 3 pairs / 2 dropped at tau<=60 to 1 pair / 1 dropped
     # at tau>=70; zero-pair thresholds would still report (none here)
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.dedup import (
         q_dedup_threshold_sweep,
     )
 
@@ -7321,7 +7254,7 @@ def test_alert_rate_spike_planted_baseline(spark, tmp_path):
     # alert (no baseline); a constant-rate type never alerts
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_alert_rate_spike,
     )
 
@@ -7361,7 +7294,7 @@ def test_eval_mrr_scale_matches_window_formulation(spark, sf_dir):
     # graded window lane (they share one oracle; this pins the Spark-
     # side equivalence directly, including tie handling via the
     # struct-encoded (micro desc, doc_id asc) order)
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         q_eval_mrr,
         q_eval_mrr_scale,
     )
@@ -7376,9 +7309,7 @@ def test_bpe_fertility_planted_single_char_words(spark, tmp_path):
     # every word is exactly one token: fertility = 1.0 and chars/token
     # = 1.0 in micros for every language; volumes pin the per-language
     # split (en: 2 docs / 5 words, fr: 1 doc / 2 words)
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
-        q_bpe_fertility,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import q_bpe_fertility
 
     rows = [
         (1, "a b a", "en", "s", 5),
@@ -7406,7 +7337,7 @@ def test_compaction_plan_planted_sorted_fill(spark, tmp_path):
     # as: 3000 (cum 0 -> g0), 2000 (cum 3000 -> g0), 1500 (cum 5000 ->
     # g1), 100 (cum 6500 -> g1) — pins the largest-first order, the
     # div-target group rule, and the fill shares
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         q_compaction_plan,
     )
 
@@ -7437,9 +7368,7 @@ def test_privacy_ldiv_planted_disclosure_class(spark, tmp_path):
     # orders carry two distinct priorities (lv=2, compliant)
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
-        q_privacy_ldiv,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_privacy_ldiv
 
     cust = [
         (1, "a", 1, 100.0, "AUTO"),   # class A
@@ -7483,10 +7412,8 @@ def test_eval_regression_planted_metrics(spark, tmp_path):
     import datetime as dt
     import math
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
-        FC_PIVOT_TS,
-    )
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import FC_PIVOT_TS
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         q_eval_regression,
     )
 
@@ -7521,9 +7448,7 @@ def test_dedup_cluster_stats_planted_histogram(spark, tmp_path):
     # (identical, size 2), and two singletons (6 alone in its label;
     # 7 orthogonal to 4,5 inside label 2) — pins the histogram rows,
     # the keep-one drop counts, and the micro corpus shares
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_dedup_cluster_stats,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.dedup import q_dedup_cluster_stats
 
     rows = [
         (1, [1.0, 0.0], 1),
@@ -7558,9 +7483,7 @@ def test_corr_spearman_planted_ties_and_zero_variance(spark, tmp_path):
     # sum_d2 = 14 (hand-computed in the module's terms).
     # segment Z: two customers with x=1 each — zero rank variance in
     # x -> rho NULL, sum_d2 = 2 (dry 2 vs 4, drx 3,3)
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_corr_spearman,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_corr_spearman
 
     cust = [
         (1, "a", 1, 0.0, "S"),
@@ -7608,9 +7531,7 @@ def test_trend_linfit_planted_line_and_degenerate_groups(spark, tmp_path):
     # 2, r2 NULL (zero y variance)
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_trend_linfit,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_trend_linfit
 
     d0 = dt.datetime(2024, 1, 1, 12)
     rows = []
@@ -7646,9 +7567,7 @@ def test_anova_oneway_planted_f_statistic(spark, tmp_path):
     # F=(13/1)/(4/4)=13.0
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_anova_oneway,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_anova_oneway
 
     d = dt.datetime(2024, 1, 1)
     prices = [("A", 0.60), ("A", 2.00), ("A", 3.49),
@@ -7681,9 +7600,7 @@ def test_rank_mannwhitney_planted_u_and_ties(spark, tmp_path):
     # half-ties) -> u_x2=2, AUC = 1/6 -> micro 166667
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_rank_mannwhitney,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_rank_mannwhitney
 
     d = dt.datetime(2024, 1, 1)
     rows = [
@@ -7709,9 +7626,7 @@ def test_quantile_weighted_planted_cutoffs(spark, tmp_path):
     # (360 > 300 = 100*cumw(20), 400 >= 360)
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
-        q_quantile_weighted,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_quantile_weighted
 
     d = dt.datetime(2024, 1, 1)
     orders = [
@@ -7745,9 +7660,7 @@ def test_gini_concentration_planted_identity(spark, tmp_path):
     # orders) -> G = 4/(2*3*4) -> micro 166667, mean gap 4/9 ->
     # 444444; single-doc source B is a true G=0; all-zero source C is
     # undefined (NULL gini) but gap 0
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
-        q_gini_concentration,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_gini_concentration
 
     rows = [
         (1, "x", "en", "A", 1),
@@ -7805,7 +7718,7 @@ def test_eval_cohen_kappa_planted_table_and_degenerate(spark, tmp_path):
     # lang x: one doc in each 2x2 cell -> po = 0.5, chance agreement
     # also 0.5 -> kappa exactly 0; lang z: both raters keep everything
     # -> pe = 1, kappa undefined (NULL), po = 1.0
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         q_eval_cohen_kappa,
     )
 
@@ -7843,7 +7756,7 @@ def test_privacy_tcloseness_planted_bands(spark, tmp_path):
     # absent-value mass is part of D by construction
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.quality import (
         q_privacy_tcloseness,
     )
 
@@ -7893,7 +7806,7 @@ def test_graph_assortativity_matches_python_recompute(spark, tmp_path):
     from data_ingestion_s3_to_parquet_spark.operators.graph import (
         q_graph_assortativity,
     )
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import KNN_K
+    from data_ingestion_s3_to_parquet_spark.operators.similarity import KNN_K
 
     vecs = [
         (0, [1.0, 0.0], 1),
@@ -8420,7 +8333,7 @@ def test_perm_test_diff_matches_python_recompute(spark, sf_dir):
     import hashlib
     import math
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         PERM_B,
         q_perm_test_diff,
@@ -8482,7 +8395,7 @@ def test_perm_test_diff_planted_no_effect_and_strong_effect(spark, tmp_path):
     # reproducing the exact partition could tie it -> p = 1/100.
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         q_perm_test_diff,
     )
@@ -8528,7 +8441,7 @@ def test_bootstrap_ci_diff_matches_python_recompute(spark, sf_dir):
     import hashlib
     import math
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         q_bootstrap_ci_diff,
     )
@@ -8606,7 +8519,7 @@ def test_bootstrap_ci_diff_cluster_weights_hold_customers_together(
     # spread the replicate distribution.
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         q_bootstrap_ci_diff,
     )
@@ -8647,7 +8560,7 @@ def test_srm_check_matches_python_recompute(spark, sf_dir):
     # pinned chi2 micro division, and the integer-crossmul verdict.
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         SRM_CHI2_CRIT_MICRO,
         q_srm_check,
@@ -8691,7 +8604,7 @@ def test_srm_check_planted_segment_loss_alerts_only_that_nation(
     # nation's md5 imbalance far under the chi2 critical value.
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         q_srm_check,
     )
@@ -8730,7 +8643,7 @@ def test_eval_win_rate_matches_python_recompute(spark, sf_dir):
     # win rate.
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         KRIPP_ORD_CHAR_BANDS,
         KRIPP_ORD_WORD_BANDS,
         q_eval_win_rate,
@@ -8797,9 +8710,7 @@ def test_eval_win_rate_planted_all_ties_collapses_ci(spark, tmp_path):
     # the win algebra gives exactly 0.5 for EVERY replicate whatever
     # the weights (win = (0 + sw)/(2*sw)), so the CI collapses to the
     # point 500000 — ties ride the counter algebra, never float 0.5.
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
-        q_eval_win_rate,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import q_eval_win_rate
 
     rows = [(i, "x", "en", "synth", 1) for i in range(1, 61)]
     spark.createDataFrame(
@@ -8819,9 +8730,7 @@ def test_metric_winsorized_matches_python_recompute(spark, sf_dir):
     # Python against the lane.
     import math
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_metric_winsorized,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_metric_winsorized
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
 
     lane = {r.status: r
@@ -8860,9 +8769,7 @@ def test_metric_winsorized_planted_tail_is_clamped(spark, tmp_path):
     # 99 orders at $10 + one at $1,000,000: the raw mean moves ~$10k,
     # the winsorized mean clamps the whale to p95 = $10 -> exactly
     # $10. Ties at the p5 boundary exercise the histogram path.
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_metric_winsorized,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_metric_winsorized
 
     rows = [(i, 1, "O", "10.00") for i in range(1, 100)]
     rows.append((100, 1, "O", "1000000.00"))
@@ -8963,12 +8870,12 @@ def test_eval_brier_matches_python_recompute_and_identity(spark, sf_dir):
     # BS = REL - RES + UNC within the per-term quantization bound.
     from fractions import Fraction
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         CAL_N_BINS,
         CAL_POS_LANG,
         q_eval_brier,
     )
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         q_lm_unigram_score,
     )
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
@@ -9078,7 +8985,7 @@ def _bt_python(rows_abc, iters):
 def test_eval_bradley_terry_matches_python_recompute(spark, sf_dir):
     # exact-integer recompute of the win matrix and all 8 unrolled MM
     # iterations (grades from the three rubric bands).
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         BT_ITERS,
         KRIPP_ABSTAIN_MIN,
         KRIPP_ORD_CHAR_BANDS,
@@ -9132,7 +9039,7 @@ def test_eval_bradley_terry_planted_strict_dominance(spark, tmp_path):
     # theta_B > theta_C and the never-winning C is driven to 0 (the
     # MM fixed point for a winless player). Long, medium, short
     # texts produce the strict grade ordering a=3 > b in {1,2} > c=0.
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         q_eval_bradley_terry,
     )
 
@@ -9247,7 +9154,7 @@ def test_perm_test_ratio_matches_python_recompute(spark, sf_dir):
     # share differences, and the add-one p-value.
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         PERM_B,
         q_perm_test_ratio,
@@ -9309,7 +9216,7 @@ def test_perm_test_ratio_planted_effects(spark, tmp_path):
     # reproducing the partition ties it -> p = 1/100.
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         q_perm_test_ratio,
     )
@@ -9352,7 +9259,7 @@ def test_bootstrap_ci_winsorized_consistent_with_components(spark, sf_dir):
     import hashlib
     import math
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         q_bootstrap_ci_winsorized,
         q_metric_winsorized,
     )
@@ -9645,7 +9552,7 @@ def test_event_burstiness_planted_grid(spark, tmp_path):
     # 24/(3*6) = 1.3333 -> 1333333; mean = 6/3 = 2.0
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_event_burstiness,
     )
 
@@ -9681,7 +9588,7 @@ def test_event_interarrival_planted_subhour_clumping(spark, tmp_path):
     import datetime as dt
     import math
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_event_burstiness,
         q_event_interarrival,
     )
@@ -9727,7 +9634,7 @@ def test_event_interarrival_scale_is_row_identical(spark, sf_dir):
     # the segmented (type, day) formulation must reproduce the base
     # lane bitwise — one gap-multiset definition, two plans (the
     # eval_mrr_scale twin contract; both share ONE oracle).
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_event_interarrival,
         q_event_interarrival_scale,
     )
@@ -9748,7 +9655,7 @@ def test_event_interarrival_scale_planted_boundary_stitch(spark, tmp_path):
     # max-min. Both formulations must agree exactly.
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_event_interarrival,
         q_event_interarrival_scale,
     )
@@ -9780,7 +9687,7 @@ def test_eval_kripp_alpha_planted_abstentions(spark, tmp_path):
     # (1,1,1) m=3 x=3 -> o2 0; (0,1,-) m=2 x=1 -> o2 4; (0,0,0) m=3
     # x=0 -> 0; (0,0,-) m=2 x=0 -> 0. n=10, n1=4, n0=6, O2=4 ->
     # alpha = 1 - 4*9/(4*6*4) = 60/96 = 0.625
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         q_eval_kripp_alpha,
     )
 
@@ -9812,7 +9719,7 @@ def test_eval_kripp_alpha_ordinal_planted_graded_panel(spark, tmp_path):
     #   ordinal point; nominal alpha weighs both units equally).
     # Totals: n=8, S1=15, S2=35, O=24, E = 2*(8*35-225) = 110,
     # alpha = 1 - 24*7/110 = -58/110 -> -527273 micro.
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         q_eval_kripp_alpha_ordinal,
     )
 
@@ -9850,7 +9757,7 @@ def test_eval_kripp_alpha_ordinal_matches_textbook_recompute(spark, sf_dir):
     import itertools
     import math
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         KRIPP_ABSTAIN_MIN,
         _rater_char_grade,
         _rater_ttr_grade,
@@ -9901,9 +9808,7 @@ def test_eval_qwk_planted_graded_pair(spark, tmp_path):
     # disagree-or-agree equally, but the (0,3) blown call carries
     # 9x the adjacent miss. Plus the degenerate lang: both raters
     # constant on the same grade -> den = 0 -> NULL.
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
-        q_eval_qwk,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import q_eval_qwk
 
     t60 = " ".join(f"u{i}" for i in range(60))       # b=2 (55<=60<80)
     t85 = " ".join(f"w{i}" for i in range(85))       # b=3 (>=80)
@@ -9935,7 +9840,7 @@ def test_eval_qwk_matches_textbook_contingency(spark, sf_dir):
     # den = N*Saa - 2*Sa*Sb + N*Sbb against Cohen's 1968 definition.
     import math
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         _rater_char_grade,
         _rater_words_grade,
         q_eval_qwk,
@@ -9976,7 +9881,7 @@ def test_eval_fleiss_kappa_planted_panel(spark, tmp_path):
     # unanimous drop (s=9) -> N=3, T=5, S=23: P_o = 14/18 -> 777778;
     # kappa = (3N(S-3N) - 2*pe)/(18N^2 - 2*pe) = (126-82)/(162-82)
     # = 44/80 -> 550000
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         q_eval_fleiss_kappa,
     )
 
@@ -10004,7 +9909,7 @@ def test_metric_cuped_matches_python_recompute(spark, sf_dir):
     import datetime as dt
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         CUPED_SPLIT_DATE,
         q_metric_cuped,
@@ -10080,7 +9985,7 @@ def test_metric_cuped_planted_covariate_shrinks_ci(spark, tmp_path):
     import datetime as dt
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         q_bootstrap_ci_diff,
         q_metric_cuped,
@@ -10188,9 +10093,7 @@ def test_metric_cuped_zero_variance_covariate_degrades_to_raw(
         " o_orderdate date",
     ).write.parquet(f"{tmp_path}/orders.parquet")
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_metric_cuped,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_metric_cuped
 
     for r in q_metric_cuped(spark, str(tmp_path)).collect():
         assert r.theta_micro == 0
@@ -10203,10 +10106,8 @@ def test_rank_test_u_matches_python_recompute(spark, sf_dir):
     # two-sided compare, and the add-one p — scipy-free, pure ints.
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_rank_test_u,
-    )
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_rank_test_u
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         PERM_B,
     )
@@ -10270,12 +10171,8 @@ def test_rank_test_u_planted_effects(spark, tmp_path):
     # (AUC = 1.0), no relabeling reaches the max deviation -> p = 1/100.
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_rank_test_u,
-    )
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        AB_SPLIT_BOUND,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_rank_test_u
+    from data_ingestion_s3_to_parquet_spark.operators.stats import AB_SPLIT_BOUND
 
     def arm_a(u):
         return hashlib.md5(str(u).encode()).hexdigest()[:4] < AB_SPLIT_BOUND
@@ -10308,7 +10205,7 @@ def test_fdr_bh_matches_python_recompute(spark, sf_dir):
     # min, the alpha verdict).
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         FDR_ALPHA_MICRO,
         PERM_B,
@@ -10387,7 +10284,7 @@ def test_fdr_bh_planted_one_effect_survives(spark, tmp_path):
     # nulls' raw p = 1.0 never sneaks under after adjustment.
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         q_fdr_bh,
     )
@@ -10427,7 +10324,7 @@ def test_chisq_independence_matches_python_recompute(spark, sf_dir):
     # exact recompute of the pinned two-step per-cell sequence
     # (e_u half-up, dev, dev^2/e_u half-up), zero-cell synthesis,
     # df, and the pinned critical-value verdict.
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         _CHISQ_CRIT_MICRO,
         q_chisq_independence,
     )
@@ -10478,9 +10375,7 @@ def test_chisq_independence_planted_association(spark, tmp_path):
             " o_orderstatus string",
         ).write.parquet(f"{d}/orders.parquet")
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_chisq_independence,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_chisq_independence
 
     prios = ["1-URGENT", "2-HIGH", "3-MEDIUM"]
     stats = ["O", "F", "P"]
@@ -10503,7 +10398,7 @@ def test_power_mde_matches_python_recompute(spark, sf_dir):
     # finisher, and the relative-MDE pinned division.
     import math
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         POWER_Z_SUM_MICRO,
         q_power_mde,
     )
@@ -10550,9 +10445,7 @@ def test_power_mde_planted_scaling(spark, tmp_path):
     # constant metric -> V = 0 -> MDE exactly 0 (a zero-variance
     # metric detects any effect); and quadrupling n at fixed variance
     # halves the MDE (the 1/sqrt(n) law) up to quantization.
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_power_mde,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_power_mde
 
     def write(rows, d):
         spark.createDataFrame(
@@ -10583,9 +10476,7 @@ def test_stream_srm_planted_one_armed_segment_alerts(spark, tmp_path):
     import datetime as dt
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        AB_SPLIT_BOUND,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import AB_SPLIT_BOUND
     from data_ingestion_s3_to_parquet_spark.streaming.windows import (
         q_stream_srm,
     )
@@ -10627,7 +10518,7 @@ def test_eval_pass_at_k_matches_python_recompute(spark, sf_dir):
     # recompute the exact k-step pinned division sequence AND
     # cross-check it against the float closed form within the
     # documented k/2-micro quantization drift.
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         PASS_AT_KS,
         PASS_GATE_MIN_CHARS,
         q_eval_pass_at_k,
@@ -10670,9 +10561,7 @@ def test_eval_pass_at_k_planted_boundaries(spark, tmp_path):
     # n = c (everything passes): pass@k = 1 exactly for all k.
     # c = 0: pass@k = 0 exactly. c = 1, n = 5: pass@1 = 1/5 and
     # pass@5 = 1 exactly (n - c < k clamps); k = 10 > n -> NULL.
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
-        q_eval_pass_at_k,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import q_eval_pass_at_k
 
     rows = []
     did = 0
@@ -10705,7 +10594,7 @@ def test_survival_km_matches_python_recompute(spark, sf_dir):
     # exact recompute: per-user first event / first error / last
     # event in integer microseconds, death-vs-censoring bucketing,
     # at-risk recursion, and the pinned per-bucket survival chain.
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         KM_HORIZON_DAYS,
         q_survival_km,
     )
@@ -10763,9 +10652,7 @@ def test_survival_km_planted_censoring(spark, tmp_path):
     # it could not distinguish 4/10 from 4/7).
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_survival_km,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_survival_km
 
     base = dt.datetime(2024, 1, 1)
     rows = []
@@ -10895,7 +10782,7 @@ def test_fdr_holm_matches_python_recompute_and_shares_pvalues(
     # the Holm walk recomputed exactly AND the p-value columns pinned
     # bitwise-equal to fdr_bh's (the two corrections must read the
     # SAME f:-salted draw — that is the lane contract).
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         FDR_ALPHA_MICRO,
         q_fdr_bh,
         q_fdr_holm,
@@ -10936,7 +10823,7 @@ def test_fdr_holm_planted_effect_at_bonferroni_edge(spark, tmp_path):
     # adjusted p caps at 1.0 and survives nothing.
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         q_fdr_holm,
     )
@@ -11065,7 +10952,7 @@ def test_metric_did_matches_python_recompute(spark, sf_dir):
     import datetime as dt
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         CUPED_SPLIT_DATE,
         q_metric_did,
@@ -11126,7 +11013,7 @@ def test_metric_did_planted_confounded_level(spark, tmp_path):
     import datetime as dt
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         AB_SPLIT_BOUND,
         q_metric_did,
     )
@@ -11255,7 +11142,7 @@ def test_eval_lang_confusion_planted_matrix(spark, tmp_path):
 def test_sample_size_calc_matches_python_recompute(spark, sf_dir):
     # the sizing columns recomputed from power_mde's own outputs with
     # exact ceil arithmetic, plus the 1%-needs-25x-5% invariant.
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         q_power_mde,
         q_sample_size_calc,
     )
@@ -11277,9 +11164,7 @@ def test_sample_size_calc_matches_python_recompute(spark, sf_dir):
 def test_sample_size_calc_planted_zero_variance(spark, tmp_path):
     # a constant metric sizes to 0 for any target (any n detects any
     # effect when sd = 0)
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_sample_size_calc,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_sample_size_calc
 
     spark.createDataFrame(
         [(i, "O", 42.0) for i in range(1, 31)],
@@ -11295,14 +11180,12 @@ def test_survival_logrank_matches_python_recompute(spark, sf_dir):
     # the final chi-square division + verdict.
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         KM_HORIZON_DAYS,
         LOGRANK_CRIT_MICRO,
         q_survival_logrank,
     )
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        AB_SPLIT_BOUND,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import AB_SPLIT_BOUND
     from data_ingestion_s3_to_parquet_spark.sources.catalog import load_table
 
     row, = q_survival_logrank(spark, sf_dir).collect()
@@ -11370,12 +11253,8 @@ def test_survival_logrank_planted_arm_effect(spark, tmp_path):
     import datetime as dt
     import hashlib
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_survival_logrank,
-    )
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        AB_SPLIT_BOUND,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_survival_logrank
+    from data_ingestion_s3_to_parquet_spark.operators.stats import AB_SPLIT_BOUND
 
     def arm_a(u):
         return hashlib.md5(str(u).encode()).hexdigest()[:4] < AB_SPLIT_BOUND

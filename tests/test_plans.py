@@ -25,9 +25,7 @@ def plan_of(df) -> str:
 
 
 def test_project_filter_pushes_down_to_scan(spark):
-    from data_ingestion_s3_to_parquet_spark.operators.relational import (
-        q_project_filter,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.relational import q_project_filter
 
     plan = plan_of(q_project_filter(spark, SF_SMOKE))
     assert "PushedFilters: [" in plan
@@ -40,9 +38,7 @@ def test_project_filter_pushes_down_to_scan(spark):
 
 
 def test_join_broadcast_is_broadcast(spark):
-    from data_ingestion_s3_to_parquet_spark.operators.relational import (
-        q_join_broadcast,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.relational import q_join_broadcast
 
     plan = plan_of(q_join_broadcast(spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan
@@ -96,9 +92,7 @@ def test_flagship_broadcasts_small_dims(spark):
 def test_topk_per_group_uses_window_group_limit(spark):
     # rnk <= k must become WindowGroupLimit (per-group k-row heap), not
     # a full per-group sort followed by a filter
-    from data_ingestion_s3_to_parquet_spark.operators.relational import (
-        q_window_rank,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.relational import q_window_rank
 
     plan = plan_of(q_window_rank(spark, SF_SMOKE))
     assert "WindowGroupLimit" in plan
@@ -183,7 +177,7 @@ def test_dedup_shuffle_keys_are_fingerprints_not_text(spark):
 def test_bloom_probe_runs_in_fact_scan_stage(spark):
     # the bloom membership test must filter the orders scan BEFORE the
     # semi-join's exchange — if it sits above the join it prunes nothing
-    from data_ingestion_s3_to_parquet_spark.operators.relational6 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         q_join_bloom_prefilter,
     )
 
@@ -203,9 +197,7 @@ def test_bloom_probe_runs_in_fact_scan_stage(spark):
 def test_udtf_runs_arrow_batched(spark):
     # the table function must evaluate through the Arrow UDTF node
     # (one vectorized python pass), not row-pickling BatchEvalPython
-    from data_ingestion_s3_to_parquet_spark.operators.relational6 import (
-        q_udtf_lateral,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.relational import q_udtf_lateral
 
     plan = plan_of(q_udtf_lateral(spark, SF_SMOKE))
     assert "ArrowEvalPythonUDTF" in plan, plan
@@ -213,15 +205,13 @@ def test_udtf_runs_arrow_batched(spark):
 
 def test_cdc_apply_gets_window_group_limit(spark):
     # rn = 1 must push a per-key one-row limit below the exchange
-    from data_ingestion_s3_to_parquet_spark.operators.relational6 import q_cdc_apply
+    from data_ingestion_s3_to_parquet_spark.operators.relational import q_cdc_apply
 
     assert "WindowGroupLimit" in plan_of(q_cdc_apply(spark, SF_SMOKE))
 
 
 def test_sample_weighted_is_take_ordered(spark):
-    from data_ingestion_s3_to_parquet_spark.operators.relational6 import (
-        q_sample_weighted,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.trainprep import q_sample_weighted
 
     assert "TakeOrderedAndProject" in plan_of(q_sample_weighted(spark, SF_SMOKE))
 
@@ -240,9 +230,7 @@ def test_knn_graph_topk_uses_window_group_limit(spark):
     # the rank <= k filter must execute as WindowGroupLimit (k-row
     # per-group state) — a full per-source sort of the block pairs
     # would make per-task state O(block), not O(k)
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
-        q_knn_graph,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.similarity import q_knn_graph
 
     plan = plan_of(q_knn_graph(spark, SF_SMOKE))
     assert "WindowGroupLimit" in plan
@@ -251,9 +239,7 @@ def test_knn_graph_topk_uses_window_group_limit(spark):
 def test_unpivot_is_expand_with_pushed_filter_and_no_shuffle(spark):
     # the melt must stay map-side: Expand above a pruned scan with the
     # row filter pushed down, and zero exchanges anywhere
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
-        q_unpivot_stack,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.relational import q_unpivot_stack
 
     plan = plan_of(q_unpivot_stack(spark, SF_SMOKE))
     assert "Expand" in plan
@@ -264,9 +250,7 @@ def test_unpivot_is_expand_with_pushed_filter_and_no_shuffle(spark):
 def test_anomaly_zscore_broadcasts_the_stats_side(spark):
     # the 6-row per-type stats frame must broadcast back onto the
     # events scan — a shuffle join here would move the fact table twice
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
-        q_anomaly_zscore,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import q_anomaly_zscore
 
     plan = plan_of(q_anomaly_zscore(spark, SF_SMOKE))
     assert "BroadcastExchange" in plan
@@ -277,7 +261,7 @@ def test_range_window_pays_exactly_one_shuffle(spark):
     # and nothing else
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_window_range_interval,
     )
 
@@ -289,9 +273,7 @@ def test_range_window_pays_exactly_one_shuffle(spark):
 def test_profile_table_is_one_expanded_aggregation(spark):
     # the multi-distinct profile must compile to Expand (one scan),
     # not one aggregation per column
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
-        q_profile_table,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_profile_table
 
     import re
 
@@ -390,7 +372,7 @@ def test_markov_totals_are_a_bounded_window_not_a_join(spark):
     # window), no recomputed subtree
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         q_markov_transitions,
     )
 
@@ -402,9 +384,7 @@ def test_markov_totals_are_a_bounded_window_not_a_join(spark):
 def test_robust_stats_joins_stay_broadcast(spark):
     # both join sides (per-lang medians / MADs) are group-cardinality
     # frames — broadcast; the rank windows are the only big shuffles
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_robust_stats,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_robust_stats
 
     plan = plan_of(q_robust_stats(spark, SF_SMOKE))
     assert "BroadcastHashJoin" in plan
@@ -489,9 +469,7 @@ def test_pmi_joins_are_all_broadcast_after_the_topk_cut(spark):
 
 
 def test_session_paths_broadcasts_only_the_total(spark):
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_session_paths,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.relational import q_session_paths
 
     plan = plan_of(q_session_paths(spark, SF_SMOKE))
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
@@ -504,9 +482,7 @@ def test_chi2_is_cell_frame_algebra_after_one_count(spark):
     # appear anywhere
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_chi2_contingency,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_chi2_contingency
 
     plan = plan_of(q_chi2_contingency(spark, SF_SMOKE))
     assert "Join" not in plan
@@ -613,9 +589,7 @@ def test_corr_pearson_is_one_combinable_aggregation(spark):
     # scan; the statistic itself is driver-free column algebra
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_corr_pearson,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_corr_pearson
 
     plan = plan_of(q_corr_pearson(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
@@ -657,9 +631,7 @@ def test_doc_winnow_is_one_doc_keyed_window_pass(spark):
     # the packed-argmin trick collapses winnowing into a single
     # window pass: one doc-keyed exchange (the distinct reuses the
     # doc_id clustering — its keys are a superset), no joins, no UDF
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
-        q_doc_winnow,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.dedup import q_doc_winnow
 
     plan = plan_of(q_doc_winnow(spark, SF_SMOKE))
     assert "Join" not in plan
@@ -671,9 +643,7 @@ def test_doc_winnow_is_one_doc_keyed_window_pass(spark):
 def test_inverted_index_never_broadcasts_vocabulary(spark):
     # all three aggregates and both joins are term-keyed; vocabulary
     # grows with the corpus, so no side may be broadcast-elected
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
-        q_inverted_index,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import q_inverted_index
 
     plan = plan_of(q_inverted_index(spark, SF_SMOKE))
     assert "Broadcast" not in plan
@@ -683,7 +653,7 @@ def test_inverted_index_never_broadcasts_vocabulary(spark):
 def test_changepoint_cusum_shares_one_customer_exchange(spark):
     # prefix-sum window, whole-partition totals, and the argmax rank
     # all partition on o_custkey: one exchange, zero joins
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_changepoint_cusum,
     )
 
@@ -709,9 +679,7 @@ def test_link_predict_never_broadcasts_graph_sides(spark):
 
 def test_winnow_overlap_never_broadcasts_fingerprint_sides(spark):
     # fingerprint sets, df table, and totals all grow with the corpus
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
-        q_winnow_overlap,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.dedup import q_winnow_overlap
 
     plan = plan_of(q_winnow_overlap(spark, SF_SMOKE))
     assert "BroadcastExchange" not in plan
@@ -724,9 +692,7 @@ def test_rank_bm25_broadcasts_are_bounded_and_topk_is_take_ordered(spark):
     # is TakeOrderedAndProject, never a single-task global sort
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
-        q_rank_bm25,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import q_rank_bm25
 
     plan = plan_of(q_rank_bm25(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) BroadcastExchange", plan)) == 2
@@ -743,9 +709,7 @@ def test_ewma_smooth_is_one_exchange_one_window_sort(spark):
     # no join, no second scan — the whole statistic is in-frame
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
-        q_ewma_smooth,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import q_ewma_smooth
 
     plan = plan_of(q_ewma_smooth(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
@@ -760,9 +724,7 @@ def test_rank_fusion_rrf_heads_are_take_ordered(spark):
     # scored corpus would be a one-task sort at 100 TB
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
-        q_rank_fusion_rrf,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import q_rank_fusion_rrf
 
     plan = plan_of(q_rank_fusion_rrf(spark, SF_SMOKE))
     assert len(re.findall(r"TakeOrderedAndProject", plan)) >= 3
@@ -778,9 +740,7 @@ def test_acf_lags_collapses_to_calendar_before_joining(spark):
     # the series must shrink to one row per day (partial_count before
     # the first exchange) and the lag pairing must be a broadcast of
     # the tiny calendar frame — never a sort-merge of raw orders
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
-        q_acf_lags,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import q_acf_lags
 
     plan = plan_of(q_acf_lags(spark, SF_SMOKE))
     assert "SortMergeJoin" not in plan
@@ -796,9 +756,7 @@ def test_zorder_layout_is_map_only_after_one_bounds_broadcast(spark):
     # crossJoin pattern); the keying is pure projection and the cell
     # rollup pays exactly one hash exchange with map-side combine.
     # No sort, no window, no corpus-proportional broadcast.
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
-        q_zorder_layout,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.relational import q_zorder_layout
 
     plan = plan_of(q_zorder_layout(spark, SF_SMOKE))
     # node-detail headers ("(9) BroadcastNestedLoopJoin"), not the tree
@@ -819,9 +777,7 @@ def test_zorder_layout_is_map_only_after_one_bounds_broadcast(spark):
 def test_ccnet_buckets_pays_one_window_on_lang(spark):
     # the NTILE is the only window, partitioned by lang (per-language
     # sort, the oracle-exact stand-in for CCNet's quantile cutpoints)
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
-        q_ccnet_buckets,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import q_ccnet_buckets
 
     plan = plan_of(q_ccnet_buckets(spark, SF_SMOKE))
     assert plan.count("(Window") + plan.count("Window (") == 1
@@ -833,9 +789,7 @@ def test_orc_interop_readback_is_vectorized_orc(spark):
     # the read-back side must be a batched (vectorized) ORC scan with
     # map-side partial aggregation — the same scan discipline as the
     # parquet lanes, on the second format
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
-        q_orc_interop,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.relational import q_orc_interop
 
     plan = plan_of(q_orc_interop(spark, SF_SMOKE))
     assert "Scan orc" in plan
@@ -862,9 +816,7 @@ def test_lm_bigram_broadcasts_only_the_bounded_vocab(spark):
     # same shape contract as the unigram lane: the only broadcasts are
     # the top-V vocab LIMIT and the 1-row total; the bigram stream
     # itself is never a broadcast side
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
-        q_lm_bigram_score,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import q_lm_bigram_score
 
     plan = plan_of(q_lm_bigram_score(spark, SF_SMOKE))
     n_bcast = plan.count(") BroadcastExchange")
@@ -878,9 +830,7 @@ def test_drift_psi_is_two_combinable_aggregates_and_one_broadcast(spark):
     # totals as the single one-row broadcast, no sort anywhere
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
-        q_drift_psi,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_drift_psi
 
     plan = plan_of(q_drift_psi(spark, SF_SMOKE))
     assert plan.count(") BroadcastExchange") == 1
@@ -911,7 +861,7 @@ def test_eval_calibration_pays_one_window_sort_and_bounded_broadcasts(spark):
     # one-row totals
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         q_eval_calibration,
     )
 
@@ -926,7 +876,7 @@ def test_eval_ndcg_heads_are_take_ordered_and_discounts_are_literals(spark):
     # both top-k cuts must be TakeOrderedAndProject (never a global
     # sort of the scored corpus) and the discount table must appear as
     # a literal array, not a computed log
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         NDCG_DISCOUNTS_MICRO,
         q_eval_ndcg,
     )
@@ -961,7 +911,7 @@ def test_ref_integrity_audit_never_broadcasts_a_parent(spark):
     # BroadcastExchange nodes, ever.
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
+    from data_ingestion_s3_to_parquet_spark.operators.quality import (
         q_ref_integrity_audit,
     )
 
@@ -979,9 +929,7 @@ def test_quantile_select_broadcasts_only_bounded_frames(spark):
     # grew (SCALE §83); the explicit hints pin all seven at any scale.
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
-        q_quantile_select,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_quantile_select
 
     plan = plan_of(q_quantile_select(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) BroadcastExchange", plan)) == 7
@@ -997,9 +945,7 @@ def test_drift_ks_data_window_is_bucket_partitioned(spark):
     # the corpus-sized cumulative window must carry the bucket
     # partition key; the only unpartitioned windows are over the
     # bounded carry frame (the token_budget_select rule)
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
-        q_drift_ks,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_drift_ks
 
     plan = plan_of(q_drift_ks(spark, SF_SMOKE))
     assert "partitionBy" not in plan  # formatted plans spell specs out
@@ -1020,7 +966,7 @@ def test_rolling_quantile_is_one_keyed_exchange(spark):
     # -window shape at any scale (rolling_median's pin, generalized)
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_rolling_quantile,
     )
 
@@ -1040,9 +986,7 @@ def test_eval_mrr_broadcasts_only_bounded_frames(spark):
     # driver-OOM trap (SCALE §82 rule)
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
-        q_eval_mrr,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import q_eval_mrr
 
     plan = plan_of(q_eval_mrr(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) ShuffledHashJoin", plan)) >= 2
@@ -1061,7 +1005,7 @@ def test_alert_rate_spike_bounded_by_time_domain(spark):
     # domain), never corpus-sized; no broadcast, no global sort
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_alert_rate_spike,
     )
 
@@ -1078,9 +1022,7 @@ def test_eval_mrr_scale_has_no_ranking_window(spark):
     # the only Window is the bounded 4-row MRR-mean carry
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
-        q_eval_mrr_scale,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import q_eval_mrr_scale
 
     plan = plan_of(q_eval_mrr_scale(spark, SF_SMOKE))
     assert plan.count("row_number(") == 0
@@ -1094,7 +1036,7 @@ def test_compaction_plan_carry_is_broadcast_and_windows_bucket_local(spark):
     # prefix) — no source-global single-task window exists
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         q_compaction_plan,
     )
 
@@ -1114,9 +1056,7 @@ def test_dedup_cluster_stats_histogram_is_bounded_carry(spark):
     # window, no corpus-sized broadcast materializes here
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_dedup_cluster_stats,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.dedup import q_dedup_cluster_stats
 
     plan = plan_of(q_dedup_cluster_stats(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Window\b", plan)) == 1
@@ -1132,9 +1072,7 @@ def test_corr_spearman_stats_are_combinable_after_ranks(spark):
     # (not row_number) keeps ties layout-independent
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_corr_spearman,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_corr_spearman
 
     plan = plan_of(q_corr_spearman(spark, SF_SMOKE))
     assert plan.count("row_number(") == 0
@@ -1154,9 +1092,7 @@ def test_trend_linfit_is_two_combinable_aggregates(spark):
     # most two exchanges end-to-end (the alert_rate_spike rule)
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_trend_linfit,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_trend_linfit
 
     plan = plan_of(q_trend_linfit(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Window\b", plan)) == 0
@@ -1171,9 +1107,7 @@ def test_anova_oneway_is_one_shuffle_plus_bounded_carry(spark):
     # two exchanges end-to-end
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_anova_oneway,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_anova_oneway
 
     plan = plan_of(q_anova_oneway(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Window\b", plan)) == 1
@@ -1190,9 +1124,7 @@ def test_rank_mannwhitney_carry_is_the_only_broadcast(spark):
     # window anywhere
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_rank_mannwhitney,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_rank_mannwhitney
 
     plan = plan_of(q_rank_mannwhitney(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) BroadcastExchange", plan)) == 1
@@ -1207,9 +1139,7 @@ def test_quantile_weighted_broadcasts_are_bounded_only(spark):
     # ranking window
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
-        q_quantile_weighted,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_quantile_weighted
 
     plan = plan_of(q_quantile_weighted(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) BroadcastExchange", plan)) == 2
@@ -1223,9 +1153,7 @@ def test_gini_concentration_windows_ride_the_value_domain(spark):
     # aggregate: no join, no broadcast, at most two exchanges
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
-        q_gini_concentration,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_gini_concentration
 
     plan = plan_of(q_gini_concentration(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) BroadcastExchange", plan)) == 0
@@ -1256,7 +1184,7 @@ def test_eval_cohen_kappa_is_one_combinable_aggregate(spark):
     # no join, no broadcast
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         q_eval_cohen_kappa,
     )
 
@@ -1273,7 +1201,7 @@ def test_privacy_tcloseness_broadcast_is_global_distribution_only(spark):
     # |values|-row global sensitive distribution, F.broadcast-pinned
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.quality import (
         q_privacy_tcloseness,
     )
 
@@ -1306,7 +1234,7 @@ def test_eval_fleiss_kappa_is_one_combinable_aggregate(spark):
     # |langs| — one exchange, no window, no join, no broadcast
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         q_eval_fleiss_kappa,
     )
 
@@ -1324,7 +1252,7 @@ def test_eval_kripp_alpha_ordinal_is_one_combinable_aggregate(spark):
     # to global sufficient statistics, so nothing else is allowed)
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         q_eval_kripp_alpha_ordinal,
     )
 
@@ -1342,7 +1270,7 @@ def test_event_interarrival_pays_exactly_one_shuffle(spark):
     # the aggregate stopped riding the window's partitioning.
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_event_interarrival,
     )
 
@@ -1426,9 +1354,7 @@ def test_eval_qwk_is_one_combinable_aggregate(spark):
     # window, no join, no broadcast — the agreement-family shape
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
-        q_eval_qwk,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import q_eval_qwk
 
     plan = plan_of(q_eval_qwk(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
@@ -1478,7 +1404,7 @@ def test_event_interarrival_scale_partitions_by_segment(spark):
     # final aggregate), no joins, no broadcasts
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_event_interarrival_scale,
     )
 
@@ -1534,9 +1460,7 @@ def test_perm_test_diff_combinable_counters_shape(spark):
     # joins, zero windows
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_perm_test_diff,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_perm_test_diff
 
     plan = plan_of(q_perm_test_diff(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 3
@@ -1570,9 +1494,7 @@ def test_bootstrap_ci_diff_cluster_counter_shape(spark):
     # broadcast: three exchanges, two broadcasts, zero SMJ/SHJ
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_bootstrap_ci_diff,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_bootstrap_ci_diff
 
     plan = plan_of(q_bootstrap_ci_diff(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 3
@@ -1585,9 +1507,7 @@ def test_srm_check_single_rollup_shape(spark):
     # scan: ONE exchange, zero broadcasts, zero joins, zero windows
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_srm_check,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_srm_check
 
     plan = plan_of(q_srm_check(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
@@ -1601,9 +1521,7 @@ def test_eval_win_rate_explode_counter_shape(spark):
     # broadcast: three exchanges, one broadcast, zero SMJ/SHJ
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
-        q_eval_win_rate,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import q_eval_win_rate
 
     plan = plan_of(q_eval_win_rate(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 3
@@ -1618,9 +1536,7 @@ def test_metric_winsorized_histogram_shape(spark):
     # broadcast (the |statuses|-row bounds frame), zero SMJ/SHJ
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_metric_winsorized,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_metric_winsorized
 
     plan = plan_of(q_metric_winsorized(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 4
@@ -1652,9 +1568,7 @@ def test_eval_brier_inherits_calibration_shape(spark):
     # as the upstream score pipeline, zero SMJ/SHJ
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
-        q_eval_brier,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import q_eval_brier
 
     plan = plan_of(q_eval_brier(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 10
@@ -1669,7 +1583,7 @@ def test_eval_bradley_terry_single_aggregate_shape(spark):
     # broadcasts, zero joins, zero windows
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         q_eval_bradley_terry,
     )
 
@@ -1702,9 +1616,7 @@ def test_perm_test_ratio_combinable_counters_shape(spark):
     # zero windows
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_perm_test_ratio,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_perm_test_ratio
 
     plan = plan_of(q_perm_test_ratio(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 3
@@ -1720,9 +1632,7 @@ def test_metric_cuped_suffstat_shape(spark):
     # SMJ/SHJ, zero windows
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_metric_cuped,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_metric_cuped
 
     plan = plan_of(q_metric_cuped(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 4
@@ -1740,9 +1650,7 @@ def test_rank_test_u_shape(spark):
     # data (the only windows are on the bounded bucket frame).
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_rank_test_u,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_rank_test_u
 
     plan = plan_of(q_rank_test_u(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) BroadcastExchange", plan)) == 4
@@ -1757,9 +1665,7 @@ def test_fdr_bh_bounded_frame_shape(spark):
     # p frame — 4 exchanges, 2 broadcasts, zero SMJ/SHJ
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_fdr_bh,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_fdr_bh
 
     plan = plan_of(q_fdr_bh(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 4
@@ -1774,9 +1680,7 @@ def test_chisq_independence_bounded_frame_shape(spark):
     # data-sized SMJ/SHJ, no Python
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_chisq_independence,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_chisq_independence
 
     plan = plan_of(q_chisq_independence(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 8
@@ -1790,9 +1694,7 @@ def test_power_mde_single_aggregate_shape(spark):
     # output rows — one exchange, nothing else
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_power_mde,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_power_mde
 
     plan = plan_of(q_power_mde(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
@@ -1821,9 +1723,7 @@ def test_eval_pass_at_k_single_aggregate_shape(spark):
     # expressions — one exchange, nothing else
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
-        q_eval_pass_at_k,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import q_eval_pass_at_k
 
     plan = plan_of(q_eval_pass_at_k(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
@@ -1836,9 +1736,7 @@ def test_survival_km_two_aggregate_shape(spark):
     # exchanges, no joins, no windows
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_survival_km,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_survival_km
 
     plan = plan_of(q_survival_km(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2
@@ -1866,9 +1764,7 @@ def test_fdr_holm_bounded_frame_shape(spark):
     # walk adds only bounded-frame windows
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_fdr_holm,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_fdr_holm
 
     plan = plan_of(q_fdr_holm(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 4
@@ -1899,9 +1795,7 @@ def test_metric_did_three_aggregate_shape(spark):
     # three exchanges, nothing else
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
-        q_metric_did,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_metric_did
 
     plan = plan_of(q_metric_did(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 3
@@ -1930,9 +1824,7 @@ def test_survival_logrank_two_aggregate_shape(spark):
     # two exchanges, no joins, no windows
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_survival_logrank,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_survival_logrank
 
     plan = plan_of(q_survival_logrank(spark, SF_SMOKE))
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 2
@@ -1948,7 +1840,7 @@ def test_bootstrap_ci_winsorized_composed_shape(spark):
     # zero SMJ/SHJ
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         q_bootstrap_ci_winsorized,
     )
 

@@ -93,7 +93,7 @@ def test_cdc_apply_matches_sequential_replay(spark, log, tmp_path_factory):
     last event by (ts, event_id); tombstone at the end => absent."""
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational6 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         CDC_TOMBSTONE,
         q_cdc_apply,
     )
@@ -147,7 +147,7 @@ def test_span_mask_round_trips_any_corpus(spark, docs, tmp_path_factory):
     the algebraic inverse property behind the fixture test."""
     import re
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational8 import (
+    from data_ingestion_s3_to_parquet_spark.operators.trainprep import (
         q_sample_span_mask,
     )
 
@@ -558,7 +558,7 @@ def test_interleave_mix_distributed_any_partition_count(spark, n_ranges):
     single-partition ranking for ANY range-partition count — including
     1 (degenerate: one range) and counts above the corpus's language
     count."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational7 import (
+    from data_ingestion_s3_to_parquet_spark.operators.trainprep import (
         interleave_mix_distributed,
         q_interleave_mix,
     )
@@ -592,7 +592,7 @@ def test_merge_intervals_matches_python_sweep(spark, events, tmp_path_factory):
     from collections import defaultdict
     from datetime import datetime, timezone
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational9 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_merge_intervals,
     )
 
@@ -1671,7 +1671,7 @@ def test_ewma_smooth_matches_sequential_replay(spark, log, tmp_path_factory):
     import datetime as dt
     from collections import defaultdict
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         EWMA_COEFS,
         EWMA_DEPTH,
         q_ewma_smooth,
@@ -1733,7 +1733,7 @@ def test_rank_bm25_matches_recompute_on_arbitrary_corpora(
     import math
     from collections import Counter, defaultdict
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational10 import (
+    from data_ingestion_s3_to_parquet_spark.operators.textstats import (
         BM25_TERMS,
         BM25_TOPK,
         q_rank_bm25,
@@ -1880,7 +1880,7 @@ def test_acf_lags_matches_sequential_replay(spark, days, tmp_path_factory):
     import math
     from collections import Counter
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational11 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         ACF_MAX_LAG,
         q_acf_lags,
     )
@@ -2640,9 +2640,7 @@ def test_mmr_greedy_invariants_on_random_pools(n, k, lam, seed):
     exactly relevance order."""
     import random
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational12 import (
-        mmr_greedy,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.similarity import mmr_greedy
 
     rng = random.Random(seed)
     ids = rng.sample(range(1000), n)
@@ -2844,9 +2842,7 @@ def test_drift_ks_matches_python_on_any_sample(
     """The two-phase bucketed ECDF equals the single-pass Python walk
     for ARBITRARY samples — including one-sided snapshots (n=0 on a
     side), all-equal values, and bucket-boundary prices."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
-        q_drift_ks,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_drift_ks
 
     tmp = tmp_path_factory.mktemp("ks")
     before = _dt.datetime(1996, 1, 1)
@@ -2907,7 +2903,7 @@ def test_quantile_select_matches_python_on_any_sample(
     ARBITRARY per-group samples — including n=1 groups (every rank is
     1), all-ties, and values on the selection-bucket boundary; the
     sketch contract must also hold on every draw."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         QSEL_QUANTILES,
         q_quantile_select,
     )
@@ -2969,7 +2965,7 @@ def test_rolling_median_matches_python_on_any_stream(
     """The bounded-ROWS-frame median equals a per-user Python replay
     for ARBITRARY streams — including timestamp ties (event_id breaks
     them), duplicate values, and windows shorter than W."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         ROLL_W,
         q_rolling_median,
     )
@@ -3021,7 +3017,7 @@ def test_skew_autosalt_matches_python_on_any_stream(
     plus salted sums and realized-part counts equal a Python replay
     for ARBITRARY streams — including <k distinct users and heavy
     duplicate values."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         SALT_TARGET_ROWS,
         SALT_TOPK,
         q_skew_autosalt,
@@ -3077,7 +3073,7 @@ def test_privacy_kanon_matches_python_on_any_table(
 ):
     """Band rollups equal a Python replay for ARBITRARY QI tables —
     including negative balances (the offset keeps div == floor-div)."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
+    from data_ingestion_s3_to_parquet_spark.operators.quality import (
         KANON_BAL_BAND,
         KANON_BAL_OFFSET,
         KANON_K,
@@ -3139,9 +3135,7 @@ def test_reconcile_sources_matches_python_on_any_pair(
 
     from hypothesis import assume
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
-        q_reconcile_sources,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.quality import q_reconcile_sources
 
     orders, details = pair
     assume(orders or details)  # at least one row somewhere
@@ -3227,7 +3221,7 @@ def test_forecast_snaive_matches_python_on_any_split(
 
     from hypothesis import assume
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational13 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         FC_PIVOT_TS,
         q_forecast_snaive,
     )
@@ -3311,7 +3305,7 @@ def test_rolling_quantile_matches_python_on_any_stream(
     duplicate values (tie ranks), and single-event users. The replay
     re-implements only the contract (sort the last W cents, pick rank
     (qn*n + qd - 1) // qd), not the plan."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         ROLLQ_QUANTILES,
         ROLLQ_W,
         q_rolling_quantile,
@@ -3369,7 +3363,7 @@ def test_alert_rate_spike_matches_python_on_any_stream(
     (type, hour) streams — including gap hours (observed-bucket frames
     skip them by design), single-bucket types, and spikes at the very
     first bucket (never alert: no baseline)."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         ALERT_BASELINE_BUCKETS,
         ALERT_FACTOR,
         q_alert_rate_spike,
@@ -3426,7 +3420,7 @@ def test_compaction_plan_matches_python_on_any_manifest(
     Python sorted-fill replay for ARBITRARY manifests — including size
     ties (doc_id order), sizes larger than the target (solo groups),
     and single-file sources."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.relational import (
         COMPACT_TARGET,
         q_compaction_plan,
     )
@@ -3490,9 +3484,7 @@ def test_corr_spearman_matches_python_on_any_table(
     plan."""
     import math
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_corr_spearman,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_corr_spearman
 
     tmp = tmp_path_factory.mktemp("spear")
     cust_rows = [
@@ -3575,7 +3567,7 @@ def test_trend_linfit_matches_python_on_any_stream(
     """The OLS closed forms over exact integer statistics equal a
     Python replay for ARBITRARY streams — including single-day groups
     (no line -> all NULL) and flat series (slope 0, R^2 NULL)."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         TREND_EPOCH,
         q_trend_linfit,
     )
@@ -3647,9 +3639,7 @@ def test_anova_oneway_matches_python_on_any_table(
     sequence equal a Python replay for ARBITRARY tables — including
     single-group designs (no between d.f. -> NULL F), all-equal
     values (SSW quantized to 0 -> NULL F), and single-row groups."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_anova_oneway,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_anova_oneway
 
     tmp = tmp_path_factory.mktemp("aov")
     base = _dt.datetime(2024, 1, 1)
@@ -3725,9 +3715,7 @@ def test_rank_mannwhitney_matches_python_on_any_table(
     """The two-phase rank-sum U equals the O(n^2) pair-counting
     definition for ARBITRARY tables — heavy ties, bucket-boundary
     prices, and one-sided designs (empty group -> NULL AUC)."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational15 import (
-        q_rank_mannwhitney,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_rank_mannwhitney
 
     tmp = tmp_path_factory.mktemp("mw")
     base = _dt.datetime(2024, 1, 1)
@@ -3777,7 +3765,7 @@ def test_quantile_weighted_matches_python_on_any_table(
     bucket-boundary prices included."""
     import datetime as _dtm
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.stats import (
         QW_PERCENTS,
         q_quantile_weighted,
     )
@@ -3837,9 +3825,7 @@ def test_gini_concentration_matches_python_on_any_corpus(
     """The per-value prefix-sum identity equals the O(n^2) pairwise
     |difference| definition for ARBITRARY corpora — zero-length docs,
     all-equal groups (G=0), and all-zero groups (NULL)."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
-        q_gini_concentration,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.stats import q_gini_concentration
 
     tmp = tmp_path_factory.mktemp("gini")
     rows = [
@@ -3950,7 +3936,7 @@ def test_eval_cohen_kappa_matches_python_on_any_corpus(
     """The contingency + kappa closed form equals a Python replay for
     ARBITRARY corpora — including degenerate designs where one or
     both raters are constant (pe = 1 -> NULL)."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         KAPPA_CHAR_MIN,
         KAPPA_WORD_MIN,
         q_eval_cohen_kappa,
@@ -4014,7 +4000,7 @@ def test_privacy_tcloseness_matches_python_on_any_table(
     included) equals a Python replay for ARBITRARY released views —
     single-value classes, classes matching the global exactly (d=0),
     and every band boundary."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.quality import (
         q_privacy_tcloseness,
     )
 
@@ -4093,7 +4079,7 @@ def test_eval_fleiss_kappa_matches_python_on_any_corpus(
     """The exact-integer Fleiss closed form equals a Python replay for
     ARBITRARY panels — unanimous groups (pe=1 -> NULL), 2-1 splits,
     and TTR-boundary texts."""
-    from data_ingestion_s3_to_parquet_spark.operators.relational16 import (
+    from data_ingestion_s3_to_parquet_spark.operators.evaluation import (
         FLEISS_TTR_DEN,
         FLEISS_TTR_NUM,
         KAPPA_CHAR_MIN,

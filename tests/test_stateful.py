@@ -418,7 +418,7 @@ def test_stateful_alert_matches_batch_lane_on_closed_buckets(spark, tmp_path):
     # hour-0..2 buckets close and hour 3+ stay open (no row yet).
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_alert_rate_spike,
     )
     from data_ingestion_s3_to_parquet_spark.streaming.stateful import (
@@ -481,9 +481,7 @@ def test_stateful_cdc_matches_batch_snapshot(spark, tmp_path):
     # batch cdc_apply snapshot over the same rows.
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational6 import (
-        q_cdc_apply,
-    )
+    from data_ingestion_s3_to_parquet_spark.operators.relational import q_cdc_apply
     from data_ingestion_s3_to_parquet_spark.streaming.stateful import cdc_stateful
     from data_ingestion_s3_to_parquet_spark.streaming.stream import (
         EVENTS_STREAM_SCHEMA,
@@ -568,7 +566,7 @@ def test_stateful_interarrival_matches_batch_lane_on_closed_prefix(
     # (B = -1 exactly), "burst" clumps 59 events into a minute.
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_event_interarrival,
     )
     from data_ingestion_s3_to_parquet_spark.streaming.stateful import (
@@ -648,7 +646,7 @@ def test_stateful_interarrival_state_roundtrips_across_batches(
     # gap_sum = 9*1s + 3591s + 100s + 9*1s.
     import datetime as dt
 
-    from data_ingestion_s3_to_parquet_spark.operators.relational14 import (
+    from data_ingestion_s3_to_parquet_spark.operators.timeseries import (
         q_event_interarrival,
     )
     from data_ingestion_s3_to_parquet_spark.streaming.stateful import (
